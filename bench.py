@@ -459,21 +459,6 @@ def main() -> None:
         file=sys.stderr,
     )
 
-    # Streaming-floor watch (round-7 verdict #3): the three queries whose
-    # round-7 DRIVER capture ran 2-4x their committed clean numbers. Each
-    # bench records current/clean; a ratio tracking controls.drift is host
-    # noise, a ratio far above it names a code cause to chase.
-    FLOOR_WATCH_CLEAN = {
-        "q158_state_change_feed": 1.35,
-        "q160_stream_fanout_consistency": 1.27,
-        "q163_late_data_accounting": 1.79,
-    }
-    floor_watch = {
-        n: round(timings[n] / c, 2)
-        for n, c in FLOOR_WATCH_CLEAN.items()
-        if n in timings
-    }
-
     total = round(sum(timings.values()), 3)
     # Full detail (long names, cold timings) goes to a side file + stderr;
     # the driver's capture truncated round 1's single long stdout line
@@ -488,7 +473,6 @@ def main() -> None:
         "cold_total": round(sum(cold.values()), 3),
         "memo_builds": memo,
         "controls": controls,
-        "floor_watch_vs_clean": floor_watch,
         "spike_rescue": {
             "ratio": SPIKE_RATIO,
             "rescued": rescued,

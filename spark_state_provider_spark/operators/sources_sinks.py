@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from spark_state_provider_spark.operators.registry import register
 from spark_state_provider_spark.scratch import corpus_tag
+from spark_state_provider_spark.streaming.harness import drain
 from spark_state_provider_spark.tables import load_table
 
 
@@ -802,7 +803,6 @@ def q149_stream_corrupt_quarantine(
 
     run = scratch_dir("q149_run")  # wiped per invocation
     metrics_dir = os.path.join(run, "metrics")
-    ckpt = os.path.join(run, "ckpt")
 
     stream = (
         spark.readStream.schema(
@@ -830,18 +830,7 @@ def q149_stream_corrupt_quarantine(
         )
         partial.write.mode("append").parquet(metrics_dir)
 
-    q = (
-        stream.writeStream.foreachBatch(account)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        finished = q.awaitTermination(180)
-    finally:
-        q.stop()
-    if not finished:
-        raise TimeoutError("q149 stream did not drain")
+    drain(stream.writeStream.queryName("q149").foreachBatch(account))
 
     partials = spark.read.parquet(metrics_dir)
     return partials.agg(

@@ -20,7 +20,12 @@ from pyspark.sql import functions as F
 from spark_state_provider_spark.operators.registry import register
 from spark_state_provider_spark.scratch import corpus_tag
 from spark_state_provider_spark.session import ROCKSDB_PROVIDER, STATE_STORE_PROVIDER_CONF
-from spark_state_provider_spark.streaming.harness import run_to_memory, run_upsert_table
+from spark_state_provider_spark.streaming.harness import (
+    batch_subdir,
+    drain,
+    run_to_memory,
+    run_upsert_table,
+)
 from spark_state_provider_spark.streaming.sources import stream_events
 from spark_state_provider_spark.streaming.stateful import user_statistics_stream
 
@@ -662,20 +667,6 @@ def q21s2_stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-
-def _batch_subdir(root: str, batch_id: int) -> str:
-    """Per-micro-batch output directory (no '=' — not a partition column).
-
-    foreachBatch can RE-RUN a batch after a task failure; appending from
-    the function would then double-count. Writing each batch to its own
-    deterministic subdirectory with mode("overwrite") makes the sink
-    idempotent per batch_id — the exactly-once recipe the Structured
-    Streaming docs prescribe for foreachBatch sinks."""
-    import os
-
-    return os.path.join(root, f"b{batch_id:05d}")
-
-
 def _fresh_run_dirs(tag: str, sf_dir: str, *names: str) -> list[str]:
     """Deterministic per-(pid, sf) scratch dirs for a streaming run,
     WIPED at invocation start: the returned DataFrame reads the output
@@ -685,8 +676,6 @@ def _fresh_run_dirs(tag: str, sf_dir: str, *names: str) -> list[str]:
     query three times; the q66 ADVICE lesson, applied here). Exit-time
     cleanup of this process's dirs + a one-time sweep of dead-pid dirs
     live in :mod:`spark_state_provider_spark.scratch`."""
-    import os
-
     from spark_state_provider_spark.scratch import scratch_dir
 
     base = corpus_tag(sf_dir)
@@ -721,9 +710,6 @@ def _register_q92() -> None:
     ) -> DataFrame:
         """Streaming crawl-batch near-dedup against a persisted corpus
         index ({N_BATCHES} document micro-batches through foreachBatch)."""
-        import os
-        import shutil
-
         from pyspark.storagelevel import StorageLevel
 
         from spark_state_provider_spark.streaming.sources import stream_docs
@@ -760,7 +746,7 @@ def _register_q92() -> None:
             _Q92_INDEX_CACHE, spark, (sf_dir,), build_index
         )
 
-        out_dir, ckpt = _fresh_run_dirs("q92", sf_dir, "out", "ckpt")
+        [out_dir] = _fresh_run_dirs("q92", sf_dir, "out")
 
         def probe(batch_df: DataFrame, batch_id: int) -> None:
             btri = _trigrams_of(batch_df.select("doc_id", "text"))
@@ -805,26 +791,14 @@ def _register_q92() -> None:
                 .select("id_new", "id_corpus", "jaccard")
             )
             verified.write.mode("overwrite").parquet(
-                _batch_subdir(out_dir, batch_id)
+                batch_subdir(out_dir, batch_id)
             )
 
         with _streaming_session(spark):
             docs = stream_docs(
                 spark, sf_dir, N_BATCHES, mod=_INC_MOD
             )
-            q = (
-                docs.writeStream.foreachBatch(probe)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                finished = q.awaitTermination(180)
-            finally:
-                q.stop()
-                shutil.rmtree(ckpt, ignore_errors=True)
-            if not finished:
-                raise TimeoutError("q92 stream did not drain within 180s")
+            drain(docs.writeStream.queryName("q92").foreachBatch(probe))
         return _pinned(
             spark.read.schema(
                 "id_new bigint, id_corpus bigint, jaccard double"
@@ -872,33 +846,19 @@ def _register_q96() -> None:
     ) -> DataFrame:
         """Users holding > 1/{_SHH_K} of all event traffic, maintained
         across {N_BATCHES} micro-batches of partial counts."""
-        import shutil
-
-        partials_dir, ckpt = _fresh_run_dirs("q96", sf_dir, "partials", "ckpt")
+        [partials_dir] = _fresh_run_dirs("q96", sf_dir, "partials")
 
         def fold(batch_df: DataFrame, batch_id: int) -> None:
             (
                 batch_df.groupBy("user_id")
                 .agg(F.count("*").alias("n"))
                 .write.mode("overwrite")
-                .parquet(_batch_subdir(partials_dir, batch_id))
+                .parquet(batch_subdir(partials_dir, batch_id))
             )
 
         with _streaming_session(spark):
             ev = stream_events(spark, sf_dir, N_BATCHES)
-            q = (
-                ev.writeStream.foreachBatch(fold)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                finished = q.awaitTermination(120)
-            finally:
-                q.stop()
-                shutil.rmtree(ckpt, ignore_errors=True)
-            if not finished:
-                raise TimeoutError("q96 stream did not drain within 120s")
+            drain(ev.writeStream.queryName("q96").foreachBatch(fold))
         partials = (
             spark.read.schema("user_id bigint, n bigint")
             .option("recursiveFileLookup", "true")
@@ -995,15 +955,13 @@ def _register_q97() -> None:
     ) -> DataFrame:
         """Per-user trailing-window 3σ anomaly flags maintained across
         {N_BATCHES} micro-batches of RocksDB window state."""
-        import shutil
-
         from pyspark.sql.streaming.state import GroupStateTimeout
 
-        out_dir, ckpt = _fresh_run_dirs("q97", sf_dir, "out", "ckpt")
+        [out_dir] = _fresh_run_dirs("q97", sf_dir, "out")
 
         def sink(batch_df: DataFrame, batch_id: int) -> None:
             batch_df.write.mode("overwrite").parquet(
-                _batch_subdir(out_dir, batch_id)
+                batch_subdir(out_dir, batch_id)
             )
 
         with _streaming_session(spark):
@@ -1022,20 +980,11 @@ def _register_q97() -> None:
                 outputMode="update",
                 timeoutConf=GroupStateTimeout.NoTimeout,
             )
-            q = (
-                flagged.writeStream.foreachBatch(sink)
-                .option("checkpointLocation", ckpt)
+            drain(
+                flagged.writeStream.queryName("q97")
+                .foreachBatch(sink)
                 .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
             )
-            try:
-                finished = q.awaitTermination(120)
-            finally:
-                q.stop()
-                shutil.rmtree(ckpt, ignore_errors=True)
-            if not finished:
-                raise TimeoutError("q97 stream did not drain within 120s")
         return _pinned(
             spark.read.schema(
                 "event_id bigint, user_id bigint, cents bigint, n bigint"
@@ -1084,7 +1033,6 @@ def _register_q103() -> None:
         """Quality → cross-batch dedup → decontamination → accounting,
         maintained across {N_BATCHES} document micro-batches."""
         import os
-        import shutil
 
         from pyspark.sql.window import Window
         from pyspark.storagelevel import StorageLevel
@@ -1099,9 +1047,7 @@ def _register_q103() -> None:
         )
         bench_tri.count()  # the static benchmark index, built once
 
-        seen_dir, part_dir, ckpt = _fresh_run_dirs(
-            "q103", sf_dir, "seen", "parts", "ckpt"
-        )
+        seen_dir, part_dir = _fresh_run_dirs("q103", sf_dir, "seen", "parts")
 
         first_char = F.substring(
             F.md5(F.col("doc_id").cast("string")), 1, 1
@@ -1161,7 +1107,7 @@ def _register_q103() -> None:
                     F.sum("est_tokens").alias("n_tokens"),
                 )
                 .write.mode("overwrite")
-                .parquet(_batch_subdir(part_dir, batch_id))
+                .parquet(batch_subdir(part_dir, batch_id))
             )
             # extend the seen-set only after every consumer of this
             # batch's snapshot has run
@@ -1172,19 +1118,7 @@ def _register_q103() -> None:
 
         with _streaming_session(spark):
             docs = stream_docs(spark, sf_dir, N_BATCHES)
-            q = (
-                docs.writeStream.foreachBatch(step)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                finished = q.awaitTermination(180)
-            finally:
-                q.stop()
-                shutil.rmtree(ckpt, ignore_errors=True)
-            if not finished:
-                raise TimeoutError("q103 stream did not drain within 180s")
+            drain(docs.writeStream.queryName("q103").foreachBatch(step))
         bench_tri.unpersist()
         partials = (
             spark.read.schema(
@@ -1249,7 +1183,7 @@ def _register_q108() -> None:
 
         from pyspark.sql.window import Window
 
-        (state_root, ckpt) = _fresh_run_dirs("q108", sf_dir, "state", "ckpt")
+        [state_root] = _fresh_run_dirs("q108", sf_dir, "state")
         latest: dict[str, str | None] = {"path": None}
 
         def topk(df: DataFrame) -> DataFrame:
@@ -1280,19 +1214,7 @@ def _register_q108() -> None:
 
         with _streaming_session(spark):
             ev = stream_events(spark, sf_dir, N_BATCHES)
-            q = (
-                ev.writeStream.foreachBatch(merge)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                finished = q.awaitTermination(120)
-            finally:
-                q.stop()
-                shutil.rmtree(ckpt, ignore_errors=True)
-            if not finished:
-                raise TimeoutError("q108 stream did not drain within 120s")
+            drain(ev.writeStream.queryName("q108").foreachBatch(merge))
         final = spark.read.parquet(latest["path"])
         w = Window.partitionBy("event_type").orderBy(
             F.col("value").desc(), "event_id"
@@ -1379,8 +1301,6 @@ def _register_q114() -> None:
         Index growth is bounded by distinct-window count (dedup pressure
         caps it), and the probe never rescans the corpus.
         """
-        import shutil
-
         from pyspark.storagelevel import StorageLevel
 
         from spark_state_provider_spark.streaming.sources import stream_docs
@@ -1406,7 +1326,7 @@ def _register_q114() -> None:
             _Q114_INDEX_CACHE, spark, (sf_dir,), build_index
         ).withColumn("hit", F.lit(1))
 
-        out_dir, ckpt = _fresh_run_dirs("q114", sf_dir, "out", "ckpt")
+        [out_dir] = _fresh_run_dirs("q114", sf_dir, "out")
 
         def probe(batch_df: DataFrame, batch_id: int) -> None:
             wins = _spans_of(batch_df.select("doc_id", "text"))
@@ -1426,26 +1346,14 @@ def _register_q114() -> None:
                 )
             )
             rolled.write.mode("overwrite").parquet(
-                _batch_subdir(out_dir, batch_id)
+                batch_subdir(out_dir, batch_id)
             )
 
         with _streaming_session(spark):
             docs = stream_docs(
                 spark, sf_dir, N_BATCHES, mod=_INC_MOD
             )
-            q = (
-                docs.writeStream.foreachBatch(probe)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                finished = q.awaitTermination(180)
-            finally:
-                q.stop()
-                shutil.rmtree(ckpt, ignore_errors=True)
-            if not finished:
-                raise TimeoutError("q114 stream did not drain within 180s")
+            drain(docs.writeStream.queryName("q114").foreachBatch(probe))
         return _pinned(
             spark.read.schema(
                 "doc_id bigint, n_windows bigint, hit_windows bigint, "
@@ -1505,7 +1413,6 @@ def q155_stream_python_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"linefile_stream_{corpus_tag(sf_dir)}",
         wipe=True,
     )
-    ckpt = os.path.join(out, "_ckpt")
 
     with _streaming_session(spark):
         sdf = stream_events(spark, sf_dir, N_BATCHES).select(
@@ -1513,15 +1420,11 @@ def q155_stream_python_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
             F.floor(F.col("value") * 100).cast("long").alias("cents"),
         )
-        q = (
-            sdf.writeStream.format("ssps_linefile")
+        drain(
+            sdf.writeStream.queryName("q155")
+            .format("ssps_linefile")
             .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination(180)
-        q.stop()
 
     committed: list[str] = []
     for mpath in sorted(glob.glob(os.path.join(out, "_MANIFEST-*.json"))):
@@ -1618,10 +1521,18 @@ def q157_rate_source_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
         try:
             deadline = time.monotonic() + 120
             while time.monotonic() < deadline:
+                if not q.isActive:
+                    # surface the real stream failure, never a partial sink
+                    exc = q.exception()
+                    raise RuntimeError(f"q157 stream terminated early: {exc}")
                 p = q.lastProgress
                 if p is not None and p["batchId"] >= _RATE_BATCHES:
                     break
                 time.sleep(0.2)
+            else:
+                raise TimeoutError(
+                    f"q157 stream did not reach epoch {_RATE_BATCHES} within 120s"
+                )
         finally:
             q.stop()
 
@@ -1693,36 +1604,28 @@ def q158_state_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     ckpt = tempfile.mkdtemp(
         prefix="ckpt_q158_", dir=scratch_dir("memck", wipe=False)
     )
-    name = "mem_q158_sink"
-    try:
-        spark.catalog.dropTempView(name)
-    except Exception:
-        pass
     chlog_conf = (
         "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
     )
     prev_chlog = spark.conf.get(chlog_conf, None)
     spark.conf.set(chlog_conf, "true")  # the feed reads the changelogs
-    with _streaming_session(spark):
-        ev = stream_events(spark, sf_dir, N_BATCHES)
-        q = (
-            ev.select("user_id", "event_type", F.to_date("ts").alias("day"))
-            .dropDuplicates(["user_id", "event_type", "day"])
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination(180)
-        finally:
-            q.stop()
-            if prev_chlog is not None:
-                spark.conf.set(chlog_conf, prev_chlog)
-            else:
-                spark.conf.unset(chlog_conf)
+    try:
+        with _streaming_session(spark):
+            ev = stream_events(spark, sf_dir, N_BATCHES)
+            # the result is read from the state checkpoint, not the sink
+            drain(
+                ev.select("user_id", "event_type", F.to_date("ts").alias("day"))
+                .dropDuplicates(["user_id", "event_type", "day"])
+                .writeStream.queryName("q158")
+                .format("noop")
+                .outputMode("append"),
+                ckpt,
+            )
+    finally:
+        if prev_chlog is not None:
+            spark.conf.set(chlog_conf, prev_chlog)
+        else:
+            spark.conf.unset(chlog_conf)
 
     ch = read_state_changes(spark, ckpt, 0, N_BATCHES - 1)
     return ch.groupBy("batch_id", "change_type").agg(
@@ -1765,7 +1668,6 @@ def q160_stream_fanout_consistency(spark: SparkSession, sf_dir: str) -> DataFram
     only control flow.
     """
     import os
-    import shutil
 
     from spark_state_provider_spark.scratch import scratch_dir
 
@@ -1774,7 +1676,6 @@ def q160_stream_fanout_consistency(spark: SparkSession, sf_dir: str) -> DataFram
     )
     dir_a = os.path.join(base, "serving")
     dir_b = os.path.join(base, "audit")
-    ckpt = os.path.join(base, "_ckpt")
 
     def fanout(batch_df, batch_id: int) -> None:
         delta = (
@@ -1796,16 +1697,7 @@ def q160_stream_fanout_consistency(spark: SparkSession, sf_dir: str) -> DataFram
 
     with _streaming_session(spark, state_parts=4):
         sdf = stream_events(spark, sf_dir, N_BATCHES)
-        q = (
-            sdf.writeStream.foreachBatch(fanout)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination(180)
-        finally:
-            q.stop()
+        drain(sdf.writeStream.queryName("q160").foreachBatch(fanout))
 
     a = (
         spark.read.parquet(dir_a)
@@ -1829,7 +1721,6 @@ def q160_stream_fanout_consistency(spark: SparkSession, sf_dir: str) -> DataFram
             & (F.col("sum_cents") == F.col("c_b"))
         ).alias("sinks_agree"),
     )
-    shutil.rmtree(ckpt, ignore_errors=True)
     return out
 
 
@@ -1956,17 +1847,12 @@ def q166_stream_restart_exactly_once(spark: SparkSession, sf_dir: str) -> DataFr
                 "event_type",
                 F.floor(F.col("value") * 100).cast("long").alias("cents"),
             )
-            q = (
-                sdf.writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
+            drain(
+                sdf.writeStream.queryName("q166")
+                .format("parquet")
+                .option("path", out),
+                ckpt,
             )
-            try:
-                q.awaitTermination(180)
-            finally:
-                q.stop()
 
     return (
         spark.read.parquet(out)
@@ -2047,7 +1933,6 @@ def q170_stream_ivf_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"ivfidx_{corpus_tag(sf_dir)}", wipe=True
     )
     index_dir = os.path.join(base, "index")
-    ckpt = os.path.join(base, "_ckpt")
 
     cent = (
         _lt(spark, sf_dir, "embeddings")
@@ -2093,16 +1978,9 @@ def q170_stream_ivf_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     with _streaming_session(spark):
         sdf = stream_embeddings(spark, sf_dir, N_BATCHES)
-        q = (
-            sdf.writeStream.foreachBatch(index_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
         try:
-            q.awaitTermination(180)
+            drain(sdf.writeStream.queryName("q170").foreachBatch(index_batch))
         finally:
-            q.stop()
             cent.unpersist()
 
     return (
@@ -2201,7 +2079,6 @@ def q175_state_export_kv(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the reference's always-external Redis view, with the lag semantics
     documented in ``streaming/state_export.py``.
     """
-    import os
     import tempfile
 
     from spark_state_provider_spark.scratch import scratch_dir
@@ -2216,27 +2093,17 @@ def q175_state_export_kv(spark: SparkSession, sf_dir: str) -> DataFrame:
     export_dir = tempfile.mkdtemp(
         prefix="kv_q175_", dir=scratch_dir("memck", wipe=False)
     )
-    name = "mem_q175_sink"
-    try:
-        spark.catalog.dropTempView(name)
-    except Exception:
-        pass
     with _streaming_session(spark):
         ev = stream_events(spark, sf_dir, N_BATCHES)
-        q = (
+        # the result is read from the exported state, not the sink
+        drain(
             ev.groupBy("event_type")
             .agg(F.count("*").alias("n"))
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .writeStream.queryName("q175")
+            .format("noop")
+            .outputMode("update"),
+            ckpt,
         )
-        try:
-            q.awaitTermination(180)
-        finally:
-            q.stop()
 
     export_state_snapshot(spark, ckpt, export_dir)
     kv = read_exported_state(spark, export_dir)
@@ -2547,7 +2414,6 @@ def q184_stream_merkle_maintenance(spark: SparkSession, sf_dir: str) -> DataFram
     )
     leaf_dir = os.path.join(base, "leaves")
     l1_dir = os.path.join(base, "l1")
-    ckpt = os.path.join(base, "_ckpt")
 
     def maintain(batch_df, batch_id: int) -> None:
         obs = Observation()
@@ -2590,16 +2456,7 @@ def q184_stream_merkle_maintenance(spark: SparkSession, sf_dir: str) -> DataFram
 
     with _streaming_session(spark):
         sdf = stream_docs(spark, sf_dir, N_BATCHES)
-        q = (
-            sdf.writeStream.foreachBatch(maintain)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination(180)
-        finally:
-            q.stop()
+        drain(sdf.writeStream.queryName("q184").foreachBatch(maintain))
 
     l1 = (
         spark.read.schema("b1 bigint, h string, bid bigint")
@@ -2830,9 +2687,7 @@ def _register_q220() -> None:
         )
         labels = _clusters_persisted(spark, sf_dir)
 
-        seen_dir, part_dir, ckpt = _fresh_run_dirs(
-            "q220", sf_dir, "seen", "parts", "ckpt"
-        )
+        seen_dir, part_dir = _fresh_run_dirs("q220", sf_dir, "seen", "parts")
 
         def step(batch_df: DataFrame, batch_id: int) -> None:
             flags = _curation_flags(
@@ -2884,7 +2739,7 @@ def _register_q220() -> None:
             ).persist(StorageLevel.MEMORY_AND_DISK)
             _funnel_stack(_funnel_counts(staged)).write.mode(
                 "overwrite"
-            ).parquet(_batch_subdir(part_dir, batch_id))
+            ).parquet(batch_subdir(part_dir, batch_id))
             # clusters taken THIS batch extend the seen-set (append-mode:
             # a retried batch re-appends the same ids — harmless to the
             # distinct + anti semantics above)
@@ -2895,21 +2750,7 @@ def _register_q220() -> None:
 
         with _streaming_session(spark):
             docs = stream_docs(spark, sf_dir, N_BATCHES)
-            q = (
-                docs.writeStream.foreachBatch(step)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                finished = q.awaitTermination(180)
-            finally:
-                q.stop()
-                import shutil
-
-                shutil.rmtree(ckpt, ignore_errors=True)
-            if not finished:
-                raise TimeoutError("q220 stream did not drain within 180s")
+            drain(docs.writeStream.queryName("q220").foreachBatch(step))
         model.unpersist()
         partials = (
             spark.read.schema(
@@ -3083,13 +2924,11 @@ def _register_q230() -> None:
         runs never span batches and the emitted set equals the batch
         oracle regardless of the micro-batch schedule.
         """
-        import shutil
-
         from spark_state_provider_spark.streaming.sources import stream_docs
 
         idx = _corpus_anchor_index(spark, sf_dir)
 
-        out_dir, ckpt = _fresh_run_dirs("q230", sf_dir, "out", "ckpt")
+        [out_dir] = _fresh_run_dirs("q230", sf_dir, "out")
 
         def probe(batch_df: DataFrame, batch_id: int) -> None:
             from pyspark.sql.window import Window
@@ -3125,26 +2964,14 @@ def _register_q230() -> None:
                 .where(F.col("lcs_len") >= _SUB_MIN)
             )
             out.write.mode("overwrite").parquet(
-                _batch_subdir(out_dir, batch_id)
+                batch_subdir(out_dir, batch_id)
             )
 
         with _streaming_session(spark):
             docs = stream_docs(
                 spark, sf_dir, N_BATCHES, mod=_INC_MOD
             )
-            q = (
-                docs.writeStream.foreachBatch(probe)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                finished = q.awaitTermination(180)
-            finally:
-                q.stop()
-                shutil.rmtree(ckpt, ignore_errors=True)
-            if not finished:
-                raise TimeoutError("q230 stream did not drain within 180s")
+            drain(docs.writeStream.queryName("q230").foreachBatch(probe))
         return _pinned(
             spark.read.schema(
                 "doc_id bigint, corpus_doc bigint, lcs_len bigint"
@@ -3249,13 +3076,11 @@ def _register_q233() -> None:
         because pairs never form between two incoming docs, so the result
         is micro-batch-schedule-independent and batch-oracle-equal.
         """
-        import shutil
-
         from spark_state_provider_spark.streaming.sources import stream_docs
 
         idx = _corpus_anchor_index(spark, sf_dir)
 
-        out_dir, ckpt = _fresh_run_dirs("q233", sf_dir, "out", "ckpt")
+        [out_dir] = _fresh_run_dirs("q233", sf_dir, "out")
 
         def rewrite(batch_df: DataFrame, batch_id: int) -> None:
             from pyspark.sql.window import Window
@@ -3295,24 +3120,12 @@ def _register_q233() -> None:
                 _merged_removal_intervals(spans),
             )
             out.write.mode("overwrite").parquet(
-                _batch_subdir(out_dir, batch_id)
+                batch_subdir(out_dir, batch_id)
             )
 
         with _streaming_session(spark):
             docs = stream_docs(spark, sf_dir, N_BATCHES, mod=_INC_MOD)
-            q = (
-                docs.writeStream.foreachBatch(rewrite)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                finished = q.awaitTermination(180)
-            finally:
-                q.stop()
-                shutil.rmtree(ckpt, ignore_errors=True)
-            if not finished:
-                raise TimeoutError("q233 stream did not drain within 180s")
+            drain(docs.writeStream.queryName("q233").foreachBatch(rewrite))
         return _pinned(
             spark.read.schema(
                 "doc_id bigint, cleaned_text string, removed_chars bigint"
@@ -3409,8 +3222,6 @@ def _register_q236() -> None:
         memory, unlike the dedup twins (q230/q233) that carry a corpus
         index.
         """
-        import shutil
-
         from spark_state_provider_spark.streaming.sources import stream_docs
         from spark_state_provider_spark.tables import load_table
 
@@ -3425,31 +3236,19 @@ def _register_q236() -> None:
             )
         )
 
-        out_dir, ckpt = _fresh_run_dirs("q236", sf_dir, "out", "ckpt")
+        [out_dir] = _fresh_run_dirs("q236", sf_dir, "out")
 
         def decontam(batch_df: DataFrame, batch_id: int) -> None:
             corpus = batch_df.where(F.col("doc_id") % 97 != 0).select(
                 "doc_id", "text"
             )
             decontaminate(corpus, bt).write.mode("overwrite").parquet(
-                _batch_subdir(out_dir, batch_id)
+                batch_subdir(out_dir, batch_id)
             )
 
         with _streaming_session(spark):
             docs = stream_docs(spark, sf_dir, N_BATCHES, mod=_INC_MOD)
-            q = (
-                docs.writeStream.foreachBatch(decontam)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                finished = q.awaitTermination(180)
-            finally:
-                q.stop()
-                shutil.rmtree(ckpt, ignore_errors=True)
-            if not finished:
-                raise TimeoutError("q236 stream did not drain within 180s")
+            drain(docs.writeStream.queryName("q236").foreachBatch(decontam))
         return _pinned(
             spark.read.schema(
                 "doc_id bigint, cleaned_text string, removed_tokens bigint"
@@ -3503,8 +3302,6 @@ def _register_q241() -> None:
         which is why this gate belongs at ingest alongside q236's
         trigram surgery rather than behind a corpus-scale detector.
         """
-        import shutil
-
         from spark_state_provider_spark.functions.vector import (
             as_double_vec,
             cosine_prenormed,
@@ -3527,7 +3324,7 @@ def _register_q241() -> None:
         )
         bench.count()  # materialize once; every micro-batch broadcasts it
 
-        out_dir, ckpt = _fresh_run_dirs("q241", sf_dir, "out", "ckpt")
+        [out_dir] = _fresh_run_dirs("q241", sf_dir, "out")
 
         def gate(batch_df: DataFrame, batch_id: int) -> None:
             # repartition: with maxFilesPerTrigger=1 the micro-batch is ONE
@@ -3574,27 +3371,13 @@ def _register_q241() -> None:
                 )
             )
             best.write.mode("overwrite").parquet(
-                _batch_subdir(out_dir, batch_id)
+                batch_subdir(out_dir, batch_id)
             )
 
         try:
             with _streaming_session(spark):
                 sdf = stream_embeddings(spark, sf_dir, N_BATCHES)
-                q = (
-                    sdf.writeStream.foreachBatch(gate)
-                    .option("checkpointLocation", ckpt)
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                try:
-                    finished = q.awaitTermination(180)
-                finally:
-                    q.stop()
-                    shutil.rmtree(ckpt, ignore_errors=True)
-                if not finished:
-                    raise TimeoutError(
-                        "q241 stream did not drain within 180s"
-                    )
+                drain(sdf.writeStream.queryName("q241").foreachBatch(gate))
         finally:
             bench.unpersist()
         return _pinned(

@@ -76,14 +76,18 @@ def attach_state_export(
     a noop write. The export inside the hook sees the newest
     ALREADY-COMMITTED version (batch N's own commit lands after the hook),
     i.e. the external view lags one micro-batch while the query runs; call
-    :func:`export_state_snapshot` once after ``awaitTermination`` to
-    publish the final version.
+    :func:`export_state_snapshot` once after the run to publish the final
+    version.
 
-    Usage::
+    Usage (the export reads the checkpoint, so the caller owns it)::
 
-        q = attach_state_export(
-            df.writeStream.outputMode("update"), ckpt, export_dir
-        ).option("checkpointLocation", ckpt).trigger(availableNow=True).start()
+        drain(
+            attach_state_export(
+                df.writeStream.outputMode("update"), ckpt, export_dir
+            ),
+            ckpt,
+        )
+        export_state_snapshot(spark, ckpt, export_dir)
     """
 
     def export_batch(batch_df: DataFrame, batch_id: int) -> None:

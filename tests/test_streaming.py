@@ -13,6 +13,7 @@ from spark_state_provider_spark import operators
 from spark_state_provider_spark.operators import registry
 
 operators.load_all()
+from spark_state_provider_spark.streaming import harness
 from spark_state_provider_spark.streaming.sources import stream_events
 from spark_state_provider_spark.streaming.state_timeout import state_timeout
 from spark_state_provider_spark.tables import load_table
@@ -162,3 +163,49 @@ def test_state_parts_env_overrides_call_site_pin(spark, monkeypatch):
     with _streaming_session(spark, state_parts=4):
         assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+
+
+def _events_writer(spark, sf_dir, name, fn):
+    return stream_events(spark, sf_dir, 2).writeStream.queryName(name).foreachBatch(fn)
+
+
+def test_drain_raises_timeout_and_stops(spark, sf_dir, monkeypatch):
+    """A run that outlives the drain budget raises TimeoutError naming the
+    query, never a silently truncated result, and leaves nothing running."""
+    import time
+
+    monkeypatch.setattr(harness, "DRAIN_SECS", 1)
+
+    def slow(batch_df, batch_id):
+        time.sleep(3)
+
+    with pytest.raises(TimeoutError, match="drain_slow"):
+        harness.drain(_events_writer(spark, sf_dir, "drain_slow", slow))
+    assert spark.streams.active == []
+
+
+def test_drain_surfaces_stream_failure(spark, sf_dir):
+    """A failing batch re-raises the stream's own exception, not a timeout."""
+    from pyspark.errors import StreamingQueryException
+
+    def boom(batch_df, batch_id):
+        raise ValueError("boom in foreachBatch")
+
+    with pytest.raises(StreamingQueryException, match="boom in foreachBatch"):
+        harness.drain(_events_writer(spark, sf_dir, "drain_boom", boom))
+    assert spark.streams.active == []
+
+
+def test_drain_is_the_only_streaming_run_path():
+    """Every AvailableNow run goes through ``harness.drain``: no other module
+    of the package waits on a streaming query itself."""
+    import pathlib
+
+    own = pathlib.Path(harness.__file__)
+    pkg = own.parents[1]
+    offenders = [
+        str(p.relative_to(pkg))
+        for p in sorted(pkg.rglob("*.py"))
+        if p != own and "awaitTermination(" in p.read_text()
+    ]
+    assert offenders == []
