@@ -16,6 +16,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import bench
 from spark_state_provider_spark import operators
 from spark_state_provider_spark.operators import registry
 from spark_state_provider_spark.plans.explain import (
@@ -149,10 +150,7 @@ def main() -> int:
     # UNPERSISTED build frames, same flags
     from scripts.plan_capture import _memo_frame
 
-    for label in (
-        "memo:trigrams", "memo:pairs", "memo:clusters", "memo:truth",
-        "memo:chartri", "memo:runs", "memo:rebuilt1", "memo:runs2",
-    ):
+    for label, _ in bench.MEMOS:
         try:
             df = _memo_frame(spark, label, SF_DIR)
             p = plan_string(df)

@@ -98,8 +98,7 @@ def main() -> None:
     assert tag in ("before", "after"), tag
     os.makedirs(OUT_DIR, exist_ok=True)
     operators.load_all()
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
-    spark = get_spark(app_name="plan-capture", master=f"local[{cpus}]")
+    spark = get_spark(app_name="plan-capture")
     spark.sparkContext.setLogLevel("ERROR")
     for name in names:
         if name.startswith("memo:") or name == "q174:round":

@@ -1,12 +1,14 @@
 """10× scale experiment: does each plan's wall-clock scale ~linearly?
 
-Builds a 10× replica of sf0.1 under /tmp by unioning offset copies —
-join keys are offset consistently per copy, so join cardinalities scale
-linearly (10× more customers/orders/users/docs, same per-key fan-out);
-dimension tables (region, nation) stay single-copy, exactly like a real
-corpus growing 10×. Then times a representative query set at sf0.1 vs the
-replica and prints the time ratio per query (ideal ≈ 10× data → ≤10× time;
-well-parallelized ops land well under because fixed overheads amortize).
+Builds a 10× replica of $SPARK_GRAFT_SF_DIR (default sf0.1) under the
+temp dir by unioning offset copies — join keys are offset consistently per
+copy, so join cardinalities scale linearly (10× more
+customers/orders/users/docs, same per-key fan-out); dimension tables
+(region, nation) stay single-copy, exactly like a real corpus growing 10×. Then times a representative query set on the base vs
+the replica with bench.py's min-of-3 noop-sink protocol (the first, cold
+run is the warm-up) and prints the time ratio per query (ideal ≈ 10× data
+→ ≤10× time; well-parallelized ops land well under because fixed overheads
+amortize).
 
 Usage: python scripts/scale_experiment.py [n_copies] [--rebuild]
 """
@@ -16,20 +18,22 @@ from __future__ import annotations
 import os
 import shutil
 import sys
-import time
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from spark_state_provider_spark import operators
-from spark_state_provider_spark.operators import registry
-from spark_state_provider_spark.session import get_spark
+import bench
 from spark_state_provider_spark.tables import TABLE_NAMES, load_table
 
-BASE_SF = "/root/testdata/sf0.1"
+BASE_SF = bench.SF_DIR
+BASE_NAME = os.path.basename(os.path.normpath(BASE_SF))
 N_COPIES = int(sys.argv[1]) if len(sys.argv) > 1 and sys.argv[1].isdigit() else 10
-OUT_DIR = f"/tmp/ssps_scale_x{N_COPIES}"
+# keyed by the base corpus: a replica of another base is never reused
+OUT_DIR = os.path.join(
+    tempfile.gettempdir(), f"ssps_scale_{BASE_NAME}_x{N_COPIES}"
+)
 
 # per-table key columns offset per copy (copy i adds i * OFFSET)
 OFFSET = 100_000_000
@@ -206,39 +210,19 @@ def build(spark) -> None:
         print(f"built {name}", flush=True)
 
 
-def timed(fn, spark, sf_dir) -> tuple[float, int]:
-    t0 = time.time()
-    df = fn(spark, sf_dir)
-    if os.environ.get("SSPS_SCALE_SINK") == "noop":
-        # count() lets Catalyst prune projections and eliminate
-        # provably-row-preserving joins — for rewrite-shaped queries
-        # (q231: left join + string surgery) that measures a skeleton,
-        # not the query. noop materializes every column like the bench.
-        df.write.format("noop").mode("overwrite").save()
-        n = -1
-    else:
-        n = df.count()
-    return time.time() - t0, n
-
-
 def main() -> None:
-    operators.load_all()
-    spark = get_spark(app_name="scale-experiment")
+    spark = bench.open_session("scale-experiment")
     if "--rebuild" in sys.argv and os.path.exists(OUT_DIR):
         shutil.rmtree(OUT_DIR)
     build(spark)
     only = os.environ.get("SSPS_SCALE_ONLY")  # comma-list: probe a subset
     queries = [q for q in QUERIES if not only or q in only.split(",")]
-    print(f"{'query':28s} {'sf0.1':>8s} {'x' + str(N_COPIES):>8s} {'ratio':>6s}  rows")
+    print(f"{'query':28s} {BASE_NAME:>8s} {'x' + str(N_COPIES):>8s} {'ratio':>6s}")
     for name in queries:
-        fn = registry.get(name).fn
-        # warm BOTH sides (JIT/codegen/page cache), then measure best-of-2
-        timed(fn, spark, BASE_SF)
-        t_base = min(timed(fn, spark, BASE_SF)[0] for _ in range(2))
-        _, n_big = timed(fn, spark, OUT_DIR)
-        t_big = min(timed(fn, spark, OUT_DIR)[0] for _ in range(2))
+        t_base = min(bench.noop_times(spark, name, BASE_SF))
+        t_big = min(bench.noop_times(spark, name, OUT_DIR))
         print(
-            f"{name:28s} {t_base:8.2f} {t_big:8.2f} {t_big / t_base:6.1f}  {n_big}",
+            f"{name:28s} {t_base:8.2f} {t_big:8.2f} {t_big / t_base:6.1f}",
             flush=True,
         )
     spark.stop()

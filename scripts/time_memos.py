@@ -1,6 +1,6 @@
 """Time the bench.py memo builds exactly the way bench.py does (one
-build-and-count per label, in bench order, fresh session), with the
-pinned control interleaved at start/end.
+build-and-count per label, in bench order, fresh session), between the
+pinned controls.
 
 Usage: python scripts/time_memos.py
 Env:   SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS as in bench.py.
@@ -10,59 +10,18 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from spark_state_provider_spark import operators
-from spark_state_provider_spark.operators import registry
-from spark_state_provider_spark.session import get_spark
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+import bench  # noqa: E402
 
 
 def main() -> None:
-    operators.load_all()
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
-    spark = get_spark(app_name="time-memos", master=f"local[{cpus}]")
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000).count()
-
-    ctl = registry.get("q63_tpch_q1").fn
-
-    def control() -> float:
-        runs = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            ctl(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - t0)
-        return round(min(runs), 3)
-
-    print(f"control@start: {control()}", flush=True)
-
-    from spark_state_provider_spark.operators import dedup as _dedup
-
-    total = 0.0
-    for label, builder in (
-        ("memo:trigrams", lambda: _dedup._trigrams_persisted(spark, SF_DIR)),
-        ("memo:pairs", lambda: _dedup._pairs_persisted(spark, SF_DIR)),
-        ("memo:clusters", lambda: _dedup._clusters_persisted(spark, SF_DIR)),
-        ("memo:truth", lambda: _dedup._truth_persisted(spark, SF_DIR)),
-        ("memo:chartri", lambda: __import__(
-            "spark_state_provider_spark.operators.text",
-            fromlist=["_chartri_counts_persisted"],
-        )._chartri_counts_persisted(spark, SF_DIR)),
-        ("memo:runs", lambda: _dedup._runs_persisted(spark, SF_DIR)),
-        ("memo:rebuilt1", lambda: _dedup._rebuilt1_persisted(spark, SF_DIR)),
-        ("memo:runs2", lambda: _dedup._runs2_persisted(spark, SF_DIR)),
-    ):
-        t0 = time.perf_counter()
-        builder().count()
-        dt = time.perf_counter() - t0
-        total += dt
-        print(f"{label}: {dt:.3f}s", flush=True)
-    print(f"memo total: {total:.3f}s")
-    print(f"control@end: {control()}", flush=True)
+    spark = bench.open_session("time-memos")
+    print(f"controls@start: {bench.sample_controls(spark)}", flush=True)
+    memo = bench.build_memos(spark)
+    print(f"memo total: {sum(memo.values()):.3f}s", flush=True)
+    print(f"controls@end: {bench.sample_controls(spark)}", flush=True)
     spark.stop()
 
 

@@ -1,5 +1,5 @@
-"""Min-of-3 noop-sink timing for a list of queries — the bench protocol
-isolated for A/B experiments.
+"""Min-of-3 noop-sink timing for a list of queries between the bench
+controls — the bench protocol isolated for A/B experiments.
 
 Usage: python scripts/time_queries.py q24s_stream_user_stats q181_session_timeout_state
 Env:   SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS as in bench.py; any Spark conf
@@ -10,52 +10,26 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from spark_state_provider_spark import operators
-from spark_state_provider_spark.operators import registry
-from spark_state_provider_spark.session import get_spark
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+import bench  # noqa: E402
 
 
 def main() -> None:
-    names = sys.argv[1:]
-    operators.load_all()
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     extra = {}
     for kv in filter(None, os.environ.get("SSPS_EXTRA_CONF", "").split(",")):
         k, _, v = kv.partition("=")
         extra[k] = v
-    spark = get_spark(
-        app_name="time-queries", master=f"local[{cpus}]", extra_conf=extra
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000).count()
-    from spark_state_provider_spark.streaming.sources import split_events_dir
-
-    split_events_dir(spark, SF_DIR, 2)
-    n_runs = int(os.environ.get("SSPS_RUNS", "3"))
-    ctl = registry.get("q63_tpch_q1").fn
-    cruns = []
-    for _ in range(3):
-        t0 = time.perf_counter()
-        ctl(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-        cruns.append(round(time.perf_counter() - t0, 3))
-    print(f"control q63: min {min(cruns):.3f}s runs {cruns}", flush=True)
+    spark = bench.open_session("time-queries", extra_conf=extra)
+    print(f"controls@start: {bench.sample_controls(spark)}", flush=True)
     out = {}
-    for name in names:
-        fn = registry.get(name).fn
-        runs = []
-        for _ in range(n_runs):
-            t0 = time.perf_counter()
-            fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-            runs.append(round(time.perf_counter() - t0, 3))
+    for name in sys.argv[1:]:
+        runs = bench.noop_times(spark, name)
         out[name] = min(runs)
         print(f"{name}: min {min(runs):.3f}s  runs {runs}", flush=True)
     print("TOTAL_MIN", round(sum(out.values()), 3))
+    print(f"controls@end: {bench.sample_controls(spark)}", flush=True)
     spark.stop()
 
 

@@ -63,15 +63,6 @@ def cosine_prenormed(a: Column, b: Column, norm_a: Column, norm_b: Column) -> Co
     return dot(a, b) / F.nullif(norm_a * norm_b, F.lit(0.0))
 
 
-def hyperplane_bucket(vec: Column, planes: list[list[float]]) -> Column:
-    """Random-hyperplane LSH bucket id: bit i = sign(vec · planeᵢ).
-
-    ``planes`` is a small driver-side list (k planes × dim floats) baked into
-    the expression as literals — broadcast-free, shuffle-free per-row math.
-    """
-    return hyperplane_buckets(vec, [planes])[0]
-
-
 def hyperplane_buckets(vec: Column, tables: list[list[list[float]]]) -> Column:
     """Bucket ids for MULTIPLE LSH tables as one array column.
 

@@ -39,10 +39,6 @@ def _count_sql(col: str, marker: str) -> str:
     return f"(length({col}) - length(replace({col}, '{m}', ''))) / {len(marker)}"
 
 
-def _padded(col: str) -> str:
-    return f"(' ' || {col} || ' ')"
-
-
 # ---------------------------------------------------------------------------
 # Q30 — token & length statistics per document.
 # ---------------------------------------------------------------------------

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,6 +36,52 @@ EVENT_SCHEMA = (
 )
 
 
+def _slice_dir(tag: str, slices: Callable[[], list[DataFrame]]) -> str:
+    """Write ``slices()`` once per process as ``slice=KKK`` parquet dirs
+    (one file each) under the scratch dir ``tag``; return that dir.
+
+    ``slices`` is called only when the dir is built, so a caller that finds
+    it done runs no Spark job.
+    """
+    # pid-scoped: another process rmtree-ing the slice dir mid-stream would
+    # yank files out from under an active FileStreamSource
+    base = os.path.join(scratch_base(), f"{tag}_{os.getpid()}")
+    done_marker = os.path.join(base, "_SSPS_DONE")
+    if os.path.exists(done_marker):
+        return base
+    with _BUILD_LOCK:
+        if os.path.exists(done_marker):  # built while we waited
+            return base
+        shutil.rmtree(base, ignore_errors=True)
+        os.makedirs(base, exist_ok=True)
+        for k, frame in enumerate(slices()):
+            frame.coalesce(1).write.mode("overwrite").parquet(
+                os.path.join(base, f"slice={k:03d}")
+            )
+        open(done_marker, "w").close()
+    return base
+
+
+def _ordered_slices(df: DataFrame, n: int, *order: str) -> list[DataFrame]:
+    """``n`` contiguous slices of ``df`` in ``order``, ``ceil(rows / n)``
+    rows each (the last ones may be short or empty)."""
+    df = df.orderBy(*order)
+    per = (df.count() + n - 1) // n
+    rank = F.row_number().over(Window.orderBy(*order)) - 1
+    ranked = df.withColumn("_slice", F.floor(rank / per).cast("int"))
+    return [ranked.where(F.col("_slice") == k).drop("_slice") for k in range(n)]
+
+
+def _replay(spark: SparkSession, schema: str, path: str) -> DataFrame:
+    """Stream a slice dir one file (= one micro-batch) per trigger."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .option("recursiveFileLookup", "true")
+        .parquet(path)
+    )
+
+
 def split_events_dir(
     spark: SparkSession, sf_dir: str, n_batches: int = 2
 ) -> str:
@@ -53,52 +99,20 @@ def split_events_dir(
     contract is visible in the API). Readers never mutate the dir and
     checkpoints are per-query, so sharing is safe.
     """
-    # pid-scoped: another process rmtree-ing the slice dir mid-stream would
-    # yank files out from under an active FileStreamSource
-    base = os.path.join(
-        scratch_base(),
-        f"ssps_stream_ev_{corpus_tag(sf_dir)}"
-        f"_{n_batches}_{os.getpid()}",
+    return _slice_dir(
+        f"ssps_stream_ev_{corpus_tag(sf_dir)}_{n_batches}",
+        lambda: _ordered_slices(
+            load_table(spark, sf_dir, "events"), n_batches, "ts", "event_id"
+        ),
     )
-    done_marker = os.path.join(base, "_SSPS_DONE")
-    if os.path.exists(done_marker):
-        return base
-    with _BUILD_LOCK:
-        if os.path.exists(done_marker):  # built while we waited
-            return base
-        shutil.rmtree(base, ignore_errors=True)
-        os.makedirs(base, exist_ok=True)
-        events = load_table(spark, sf_dir, "events").orderBy("ts", "event_id")
-        rows = events.count()
-        per = (rows + n_batches - 1) // n_batches
-        ranked = events.withColumn(
-            "_slice",
-            F.floor((F.row_number().over(Window.orderBy("ts", "event_id")) - 1) / per).cast(
-                "int"
-            ),
-        )
-        for k in range(n_batches):
-            (
-                ranked.where(F.col("_slice") == k)
-                .drop("_slice")
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(os.path.join(base, f"slice={k:03d}"))
-            )
-        open(done_marker, "w").close()
-    return base
 
 
 def stream_events(
     spark: SparkSession, sf_dir: str, n_batches: int = 2
 ) -> DataFrame:
     """Streaming DataFrame replaying the events table in n micro-batches."""
-    path = split_events_dir(spark, sf_dir, n_batches)
-    return (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(path)
+    return _replay(
+        spark, EVENT_SCHEMA, split_events_dir(spark, sf_dir, n_batches)
     )
 
 
@@ -116,41 +130,16 @@ def split_docs_dir(
     streaming document pipelines (q92). ``mod`` keeps only
     ``doc_id % mod == 0`` rows (the 'incoming batch' convention shared
     with q78's batch form)."""
-    base = os.path.join(
-        scratch_base(),
-        f"ssps_stream_docs_{corpus_tag(sf_dir)}"
-        f"_{n_batches}_{mod}_{os.getpid()}",
-    )
-    done_marker = os.path.join(base, "_SSPS_DONE")
-    if os.path.exists(done_marker):
-        return base
-    with _BUILD_LOCK:
-        if os.path.exists(done_marker):  # built while we waited
-            return base
-        shutil.rmtree(base, ignore_errors=True)
-        os.makedirs(base, exist_ok=True)
+
+    def slices() -> list[DataFrame]:
         docs = load_table(spark, sf_dir, "documents")
         if mod is not None:
             docs = docs.where(F.col("doc_id") % mod == 0)
-        docs = docs.orderBy("doc_id")
-        rows = docs.count()
-        per = (rows + n_batches - 1) // n_batches
-        ranked = docs.withColumn(
-            "_slice",
-            F.floor(
-                (F.row_number().over(Window.orderBy("doc_id")) - 1) / per
-            ).cast("int"),
-        )
-        for k in range(n_batches):
-            (
-                ranked.where(F.col("_slice") == k)
-                .drop("_slice")
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(os.path.join(base, f"slice={k:03d}"))
-            )
-        open(done_marker, "w").close()
-    return base
+        return _ordered_slices(docs, n_batches, "doc_id")
+
+    return _slice_dir(
+        f"ssps_stream_docs_{corpus_tag(sf_dir)}_{n_batches}_{mod}", slices
+    )
 
 
 def stream_docs(
@@ -160,12 +149,8 @@ def stream_docs(
     mod: int | None = None,
 ) -> DataFrame:
     """Streaming DataFrame replaying (a slice of) documents in n batches."""
-    path = split_docs_dir(spark, sf_dir, n_batches, mod)
-    return (
-        spark.readStream.schema(DOC_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(path)
+    return _replay(
+        spark, DOC_SCHEMA, split_docs_dir(spark, sf_dir, n_batches, mod)
     )
 
 
@@ -178,29 +163,15 @@ def split_events_hash_dir(
     behind the watermark. The late-data counterpart of
     ``split_events_dir``'s time-ordered schedule; equally deterministic
     (slice membership is a pure function of event_id)."""
-    base = os.path.join(
-        scratch_base(),
-        f"ssps_stream_ooo_{corpus_tag(sf_dir)}"
-        f"_{n_batches}_{os.getpid()}",
-    )
-    done_marker = os.path.join(base, "_SSPS_DONE")
-    if os.path.exists(done_marker):
-        return base
-    with _BUILD_LOCK:
-        if os.path.exists(done_marker):  # built while we waited
-            return base
-        shutil.rmtree(base, ignore_errors=True)
-        os.makedirs(base, exist_ok=True)
-        events = load_table(spark, sf_dir, "events")
-        for k in range(n_batches):
-            (
-                events.where(F.col("event_id") % n_batches == k)
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(os.path.join(base, f"slice={k:03d}"))
+    return _slice_dir(
+        f"ssps_stream_ooo_{corpus_tag(sf_dir)}_{n_batches}",
+        lambda: [
+            load_table(spark, sf_dir, "events").where(
+                F.col("event_id") % n_batches == k
             )
-        open(done_marker, "w").close()
-    return base
+            for k in range(n_batches)
+        ],
+    )
 
 
 def stream_events_out_of_order(
@@ -208,12 +179,8 @@ def stream_events_out_of_order(
 ) -> DataFrame:
     """Streaming events where each micro-batch spans the whole time range
     (hash slices) — the deterministic late-arrival schedule."""
-    path = split_events_hash_dir(spark, sf_dir, n_batches)
-    return (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(path)
+    return _replay(
+        spark, EVENT_SCHEMA, split_events_hash_dir(spark, sf_dir, n_batches)
     )
 
 
@@ -227,39 +194,21 @@ def split_embeddings_dir(
     parquet files — the arrival schedule for streaming vector-index
     maintenance (assignment is per-row, so slice membership only fixes
     WHICH batch indexes a vector, never where it lands)."""
-    base = os.path.join(
-        scratch_base(),
-        f"ssps_stream_emb_{corpus_tag(sf_dir)}"
-        f"_{n_batches}_{os.getpid()}",
-    )
-    done_marker = os.path.join(base, "_SSPS_DONE")
-    if os.path.exists(done_marker):
-        return base
-    with _BUILD_LOCK:
-        if os.path.exists(done_marker):  # built while we waited
-            return base
-        shutil.rmtree(base, ignore_errors=True)
-        os.makedirs(base, exist_ok=True)
-        emb = load_table(spark, sf_dir, "embeddings")
-        for k in range(n_batches):
-            (
-                emb.where(F.col("vec_id") % n_batches == k)
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(os.path.join(base, f"slice={k:03d}"))
+    return _slice_dir(
+        f"ssps_stream_emb_{corpus_tag(sf_dir)}_{n_batches}",
+        lambda: [
+            load_table(spark, sf_dir, "embeddings").where(
+                F.col("vec_id") % n_batches == k
             )
-        open(done_marker, "w").close()
-    return base
+            for k in range(n_batches)
+        ],
+    )
 
 
 def stream_embeddings(
     spark: SparkSession, sf_dir: str, n_batches: int = 2
 ) -> DataFrame:
     """Streaming DataFrame replaying embeddings in n micro-batches."""
-    path = split_embeddings_dir(spark, sf_dir, n_batches)
-    return (
-        spark.readStream.schema(EMB_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(path)
+    return _replay(
+        spark, EMB_SCHEMA, split_embeddings_dir(spark, sf_dir, n_batches)
     )
