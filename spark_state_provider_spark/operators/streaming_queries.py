@@ -12,6 +12,7 @@ judge sees real streaming exercised under the t2 gate.
 
 from __future__ import annotations
 
+import os
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -47,50 +48,30 @@ def _streaming_session(
     state_parts: int | None = None,
 ):
     """Pin streaming confs for the duration of one streaming run, restoring
-    the caller's shuffle parallelism afterwards (a leaked
-    shuffle.partitions=8 would under-parallelize every later batch query
-    on the same session).
-
-    (A ``no_data_batch`` opt-out parameter existed in round 9 but was
-    dead code: AvailableNow schedules no trailing no-data batch for the
-    NoTimeout stateful maps it targeted — measured zero effect — and
-    queries with watermark/timer semantics MUST keep the flush batch.
-    Removed per round-9 ADVICE; the conf stays at Spark's default.)
+    the caller's shuffle parallelism afterwards (a leaked state-partition
+    count would under-parallelize every later batch query on the same
+    session).
     """
     _SESSION_LOCK.acquire()
     prev = spark.conf.get("spark.sql.shuffle.partitions", None)
     spark.conf.set(STATE_STORE_PROVIDER_CONF, ROCKSDB_PROVIDER)
-    # State-partition count scales with cores: the stateful hot path is
-    # per-partition (Arrow batch → Python handler → RocksDB commit), so
-    # with N_BATCHES micro-batches the sweet spot keeps partitions×batches
-    # ≈ cores. Measured on local[32] at sf0.1 (min-of-3): 8→16 partitions
-    # cut q181 8.2→6.0s, q217 4.8→3.5s, q24s 4.9→3.7s; 32 partitions
-    # regressed the small-state queries (store-commit count dominates).
-    # Floor of 8 preserves the proven adversarial-geometry behavior on
-    # small drivers; at production scale this conf is sized to the
-    # cluster, not hardcoded.
-    # ``state_parts`` overrides for STORE-HEAVY topologies: a
-    # stream-stream join keeps FOUR internal stores per partition and its
-    # join path is JVM-side (no Python-handler parallelism to win), so
-    # per-partition store commits dominate — round 6 measured 16 partitions
-    # regressing q182/q179 vs 8, and the round-9 re-measurement (tmpfs
-    # checkpoint scratch, control-normalized min-of-5) halved them again
-    # at 4: q182 ~6.8→3.5s, q26 ~5.5→3.5s, q179 ~3.3→2.8s; 2 partitions
-    # bought nothing more — those call sites pin 4.
-    import os as _os
-
-    cores = spark.sparkContext.defaultParallelism
-    # SSPS_STREAM_STATE_PARTS: deployment override (cluster sizing / A-B
-    # measurement). The env WINS over call-site pins (round-9 verdict #7):
-    # the pins encode local-bench store-commit sweet spots (4 for the
-    # stream-stream joins, cores-derived otherwise), and a 100 TB
-    # deployment must be able to size state partitioning to its data
-    # volume without editing call sites. Sizing rule in SCALE.md.
-    env = _os.environ.get("SSPS_STREAM_STATE_PARTS")
+    # At most one state partition per core, so a small micro-batch runs as
+    # ONE task wave: each Python-worker task pays ~0.3 s CPU on Python 3.11
+    # (pyspark's worker calls importlib.invalidate_caches(); gh-103200). A
+    # local master is capped at real CPUs; max(8, cores // 2) stays the
+    # ceiling (local[32]: 16 partitions beat 32, store commits dominate).
+    # ``state_parts`` pins store-heavy topologies (stream-stream joins keep
+    # four stores per partition, JVM-side; measured best at 4). The env
+    # SSPS_STREAM_STATE_PARTS wins over both (deployment sizing, SCALE.md).
+    env = os.environ.get("SSPS_STREAM_STATE_PARTS")
     if env:
         state_parts = int(env)
-    parts = state_parts if state_parts is not None else max(8, cores // 2)
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+    if state_parts is None:
+        cores = spark.sparkContext.defaultParallelism
+        local = spark.sparkContext.master.startswith("local")
+        cpus = (os.cpu_count() if local else None) or cores
+        state_parts = min(cores, cpus, max(8, cores // 2))
+    spark.conf.set("spark.sql.shuffle.partitions", str(state_parts))
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     try:
         yield
@@ -1032,8 +1013,6 @@ def _register_q103() -> None:
     ) -> DataFrame:
         """Quality → cross-batch dedup → decontamination → accounting,
         maintained across {N_BATCHES} document micro-batches."""
-        import os
-
         from pyspark.sql.window import Window
         from pyspark.storagelevel import StorageLevel
 
@@ -1178,7 +1157,6 @@ def _register_q108() -> None:
     ) -> DataFrame:
         """Top-{_LB_K} events by value per event type, maintained across
         micro-batches with k·groups rows of state."""
-        import os
         import shutil
 
         from pyspark.sql.window import Window
@@ -1401,7 +1379,6 @@ def q155_stream_python_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import glob
     import json
-    import os
 
     from spark_state_provider_spark.scratch import scratch_dir
     from spark_state_provider_spark.sources.python_source import (
@@ -1667,8 +1644,6 @@ def q160_stream_fanout_consistency(spark: SparkSession, sf_dir: str) -> DataFram
     batch-sized data + two partition-parallel appends; the driver sees
     only control flow.
     """
-    import os
-
     from spark_state_provider_spark.scratch import scratch_dir
 
     base = scratch_dir(
@@ -1830,8 +1805,6 @@ def q166_stream_restart_exactly_once(spark: SparkSession, sf_dir: str) -> DataFr
     restart replaying an already-committed batch is invisible to
     readers. Per-run cost is bounded by uncommitted offsets only.
     """
-    import os
-
     from spark_state_provider_spark.scratch import scratch_dir
 
     base = scratch_dir(
@@ -1914,8 +1887,6 @@ def q170_stream_ivf_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     (vec_id % {CENTROID_MOD} == 0, capped) and the same argmax-as-
     aggregation plan per micro-batch.
     """
-    import os
-
     from spark_state_provider_spark.functions.vector import (
         as_double_vec,
         cosine_prenormed,
@@ -2401,8 +2372,6 @@ def q184_stream_merkle_maintenance(spark: SparkSession, sf_dir: str) -> DataFram
     as an ``observe()`` metric — one job, no second pass over the batch.
     Nothing in the loop reads the whole corpus.
     """
-    import os
-
     from pyspark.sql import Observation
 
     from spark_state_provider_spark.operators.pipeline import _MERKLE_FAN
@@ -2650,8 +2619,6 @@ def _register_q220() -> None:
         broadcast probe into the bounded seen-cluster set. State
         grows with |clusters touched|, not corpus size.
         """
-        import os
-
         from pyspark.sql.window import Window
         from pyspark.storagelevel import StorageLevel
 

@@ -204,20 +204,22 @@ def make_session_timeout_handler(gap_secs: int):
     def handler(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        def emit(sess) -> pd.DataFrame:
+        # one frame per call, holding every session this call closed
+        def emit(sessions) -> pd.DataFrame:
+            start, last, n = zip(*sessions)
             return pd.DataFrame(
                 {
-                    "user_id": [key[0]],
-                    "session_start_us": [sess[0]],
-                    "last_event_us": [sess[1]],
-                    "n_events": [sess[2]],
+                    "user_id": [key[0]] * len(sessions),
+                    "session_start_us": start,
+                    "last_event_us": last,
+                    "n_events": n,
                 }
             )
 
         if state.hasTimedOut:
             sess = state.get
             state.remove()
-            yield emit(sess)
+            yield emit([sess])
             return
         cur = list(state.get) if state.exists else None
         chunks = [pdf for pdf in pdfs if len(pdf)]
@@ -237,8 +239,8 @@ def make_session_timeout_handler(gap_secs: int):
         state.update(tuple(cur))
         # arm the event-time timer: fire when the watermark passes the gap
         state.setTimeoutTimestamp((cur[1] + gap_us) // 1000)
-        for sess in closed:
-            yield emit(sess)
+        if closed:
+            yield emit(closed)
 
     return handler
 

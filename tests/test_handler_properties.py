@@ -15,14 +15,18 @@ from hypothesis import strategies as st
 from spark_state_provider_spark.streaming.stateful import (
     ewma_handler,
     make_quota_handler,
+    make_session_timeout_handler,
 )
 
 
 class FakeGroupState:
-    """The slice of the GroupState API the NoTimeout handlers touch."""
+    """The slice of the GroupState API the handlers touch; a test sets
+    ``hasTimedOut`` to make the next call a timer firing."""
 
     def __init__(self):
         self._val = None
+        self.hasTimedOut = False
+        self.timeout_ms = None
 
     @property
     def exists(self):
@@ -39,9 +43,8 @@ class FakeGroupState:
     def remove(self):
         self._val = None
 
-    @property
-    def hasTimedOut(self):
-        return False
+    def setTimeoutTimestamp(self, ms):
+        self.timeout_ms = ms
 
 
 def _run_batches(handler, batches):
@@ -141,3 +144,56 @@ def test_cusum_state_batch_split_independent(vals, cuts):
         prev = c
     split_state, _ = _run_batches(handler, chunks)
     assert split_state.get == one_state.get
+
+
+@given(
+    keys=st.lists(
+        st.tuples(
+            st.lists(
+                st.integers(min_value=0, max_value=12), min_size=1, max_size=30
+            ),
+            st.lists(st.integers(min_value=0, max_value=29), max_size=4),
+        ),
+        min_size=1,
+        max_size=3,
+    ),
+    gap=st.integers(min_value=1, max_value=10),
+    shuffle_seed=st.integers(min_value=0, max_value=2**16),
+)
+@settings(max_examples=60, deadline=None)
+def test_session_timeout_matches_gaps_and_islands(keys, gap, shuffle_seed):
+    """Per key, an event-time-ordered ``ts`` sequence cut into micro-batches
+    (rows shuffled within each batch) and closed by one timer firing emits
+    exactly the one-shot gaps-and-islands sessions, one frame per call at
+    most."""
+    handler = make_session_timeout_handler(gap)
+    gap_us = gap * 1_000_000
+    for user_id, (deltas, cuts) in enumerate(keys):
+        ts_s = pd.Series(deltas).cumsum()
+        expected = []
+        for t_us in ts_s * 1_000_000:
+            if expected and t_us - expected[-1][1] < gap_us:
+                start, _, n = expected[-1]
+                expected[-1] = (start, t_us, n + 1)
+            else:
+                expected.append((t_us, t_us, 1))
+
+        rows = pd.DataFrame({"ts": pd.to_datetime(ts_s, unit="s")})
+        points = sorted({c for c in cuts if 0 < c < len(rows)})
+        bounds = [0] + points + [len(rows)]
+        state, frames = FakeGroupState(), []
+        for lo, hi in zip(bounds, bounds[1:]):
+            batch = rows.iloc[lo:hi].sample(frac=1, random_state=shuffle_seed)
+            out = list(handler((user_id,), iter([batch]), state))
+            assert len(out) <= 1
+            frames.extend(out)
+            assert state.timeout_ms == (state.get[1] + gap_us) // 1000
+        state.hasTimedOut = True
+        out = list(handler((user_id,), iter([]), state))
+        assert len(out) == 1 and not state.exists
+        frames.extend(out)
+
+        got = pd.concat(frames)
+        assert set(got["user_id"]) == {user_id}
+        cols = ["session_start_us", "last_event_us", "n_events"]
+        assert list(got[cols].itertuples(index=False, name=None)) == expected

@@ -165,6 +165,41 @@ def test_state_parts_env_overrides_call_site_pin(spark, monkeypatch):
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
 
 
+@pytest.mark.parametrize(
+    "master,cores,cpus,want",
+    [
+        ("local[16]", 16, 4, 4),  # oversubscribed local: real CPUs
+        ("local[4]", 4, 4, 4),  # one wave, not two
+        ("local[32]", 32, 32, 16),  # max(8, cores // 2) stays the ceiling
+        ("spark://m:7077", 200, 4, 100),  # driver CPUs do not cap a cluster
+        ("yarn", 6, 2, 6),
+    ],
+)
+def test_state_parts_default_is_one_task_wave(
+    spark, monkeypatch, master, cores, cpus, want
+):
+    """Unpinned, a streaming run gets min(cores, local CPUs, max(8,
+    cores // 2)) state partitions, so a small micro-batch runs one wave of
+    Python-worker tasks; the caller's partition count comes back
+    afterwards."""
+    import os
+
+    from pyspark import SparkContext
+
+    from spark_state_provider_spark.operators.streaming_queries import (
+        _streaming_session,
+    )
+
+    monkeypatch.delenv("SSPS_STREAM_STATE_PARTS", raising=False)
+    monkeypatch.setattr(spark.sparkContext, "master", master)
+    monkeypatch.setattr(SparkContext, "defaultParallelism", property(lambda _: cores))
+    monkeypatch.setattr(os, "cpu_count", lambda: cpus)
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    with _streaming_session(spark):
+        assert spark.conf.get("spark.sql.shuffle.partitions") == str(want)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+
+
 def _events_writer(spark, sf_dir, name, fn):
     return stream_events(spark, sf_dir, 2).writeStream.queryName(name).foreachBatch(fn)
 
