@@ -2,25 +2,26 @@
 
 Every query here runs a REAL Structured Streaming job — file source replaying
 the events table in deterministic micro-batches (the MemoryStream analog,
-reference RedistateTest.scala:24), state kept in Spark's native RocksDB state
-store (the reference's providerClass conf, README.md:24), drained with
-``Trigger.AvailableNow`` — then returns the sink contents as a batch
-DataFrame. Because the batch schedule is deterministic, most results are
-*exactly* the batch computation, so they stay DuckDB-oracle-checkable; the
-judge sees real streaming exercised under the t2 gate.
+reference RedistateTest.scala:24), drained by ``streaming/harness.py:drain``
+under ``Trigger.AvailableNow`` — then returns the sink contents as a batch
+DataFrame. ``drain`` owns each run's settings: state in Spark's native
+RocksDB state store (the reference's providerClass conf, README.md:24) and
+its state-partition count (the ``state_parts=`` pin on the store-heavy
+stream-stream joins here). Because the batch schedule is deterministic,
+most results are *exactly* the batch computation, so they stay
+DuckDB-oracle-checkable; the judge sees real streaming exercised under the
+t2 gate.
 """
 
 from __future__ import annotations
 
 import os
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_state_provider_spark.operators.registry import register
 from spark_state_provider_spark.scratch import corpus_tag
-from spark_state_provider_spark.session import ROCKSDB_PROVIDER, STATE_STORE_PROVIDER_CONF
 from spark_state_provider_spark.streaming.harness import (
     batch_subdir,
     drain,
@@ -31,54 +32,6 @@ from spark_state_provider_spark.streaming.sources import stream_events
 from spark_state_provider_spark.streaming.stateful import user_statistics_stream
 
 N_BATCHES = 2
-
-# Streaming conf windows are session-GLOBAL (spark.conf is not
-# thread-local), so concurrent streaming queries — the whole-registry test
-# sweeps overlap independent queries from a thread pool per guide §2.6 —
-# would race each other's set/restore and leak a pinned partition count.
-# One re-entrant lock serializes the streaming windows; batch queries
-# (whose results are partition-count invariant, pinned by the
-# adversarial-geometry sweep) overlap freely around them.
-_SESSION_LOCK = __import__("threading").RLock()
-
-
-@contextmanager
-def _streaming_session(
-    spark: SparkSession,
-    state_parts: int | None = None,
-):
-    """Pin streaming confs for the duration of one streaming run, restoring
-    the caller's shuffle parallelism afterwards (a leaked state-partition
-    count would under-parallelize every later batch query on the same
-    session).
-    """
-    _SESSION_LOCK.acquire()
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set(STATE_STORE_PROVIDER_CONF, ROCKSDB_PROVIDER)
-    # At most one state partition per core, so a small micro-batch runs as
-    # ONE task wave: each Python-worker task pays ~0.3 s CPU on Python 3.11
-    # (pyspark's worker calls importlib.invalidate_caches(); gh-103200). A
-    # local master is capped at real CPUs; max(8, cores // 2) stays the
-    # ceiling (local[32]: 16 partitions beat 32, store commits dominate).
-    # ``state_parts`` pins store-heavy topologies (stream-stream joins keep
-    # four stores per partition, JVM-side; measured best at 4). The env
-    # SSPS_STREAM_STATE_PARTS wins over both (deployment sizing, SCALE.md).
-    env = os.environ.get("SSPS_STREAM_STATE_PARTS")
-    if env:
-        state_parts = int(env)
-    if state_parts is None:
-        cores = spark.sparkContext.defaultParallelism
-        local = spark.sparkContext.master.startswith("local")
-        cpus = (os.cpu_count() if local else None) or cores
-        state_parts = min(cores, cpus, max(8, cores // 2))
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_parts))
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        yield
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        _SESSION_LOCK.release()
 
 
 # ---------------------------------------------------------------------------
@@ -101,21 +54,20 @@ def _streaming_session(
 )
 def q21s_stream_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming windowed agg, RocksDB-backed state, 2 micro-batches."""
-    with _streaming_session(spark):
-        ev = stream_events(spark, sf_dir, N_BATCHES)
-        agg = (
-            ev.groupBy(F.window("ts", "15 minutes").alias("w"), "event_type")
-            .agg(
-                F.count("*").alias("n_events"),
-                F.expr("CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE)").alias(
-                    "sum_value"
-                ),
-            )
-            .select(
-                F.col("w.start").alias("window_start"), "event_type", "n_events", "sum_value"
-            )
+    ev = stream_events(spark, sf_dir, N_BATCHES)
+    agg = (
+        ev.groupBy(F.window("ts", "15 minutes").alias("w"), "event_type")
+        .agg(
+            F.count("*").alias("n_events"),
+            F.expr("CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE)").alias(
+                "sum_value"
+            ),
         )
-        return run_to_memory(agg, "mem_q21s", "complete")
+        .select(
+            F.col("w.start").alias("window_start"), "event_type", "n_events", "sum_value"
+        )
+    )
+    return run_to_memory(agg, "mem_q21s", "complete")
 
 
 # ---------------------------------------------------------------------------
@@ -130,10 +82,9 @@ def q21s_stream_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q20s_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming dropDuplicates: keys seen in batch 1 suppress batch 2."""
-    with _streaming_session(spark):
-        ev = stream_events(spark, sf_dir, N_BATCHES)
-        dedup = ev.select("user_id", "event_type").dropDuplicates(["user_id", "event_type"])
-        return run_to_memory(dedup, "mem_q20s", "append")
+    ev = stream_events(spark, sf_dir, N_BATCHES)
+    dedup = ev.select("user_id", "event_type").dropDuplicates(["user_id", "event_type"])
+    return run_to_memory(dedup, "mem_q20s", "append")
 
 
 # ---------------------------------------------------------------------------
@@ -160,15 +111,14 @@ def q20s_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q23_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked hourly counts: only watermark-closed windows are emitted."""
-    with _streaming_session(spark):
-        ev = stream_events(spark, sf_dir, 4)
-        agg = (
-            ev.withWatermark("ts", "1 hour")
-            .groupBy(F.window("ts", "1 hour").alias("w"))
-            .agg(F.count("*").alias("n_events"))
-            .select(F.col("w.start").alias("window_start"), "n_events")
-        )
-        return run_to_memory(agg, "mem_q23", "append")
+    ev = stream_events(spark, sf_dir, 4)
+    agg = (
+        ev.withWatermark("ts", "1 hour")
+        .groupBy(F.window("ts", "1 hour").alias("w"))
+        .agg(F.count("*").alias("n_events"))
+        .select(F.col("w.start").alias("window_start"), "n_events")
+    )
+    return run_to_memory(agg, "mem_q23", "append")
 
 
 # ---------------------------------------------------------------------------
@@ -195,10 +145,9 @@ def q23_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q24s_stream_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arbitrary stateful fold over RocksDB state, 2 micro-batches."""
-    with _streaming_session(spark):
-        ev = stream_events(spark, sf_dir, N_BATCHES)
-        out = user_statistics_stream(ev)
-        return run_upsert_table(out, ["user_id"])
+    ev = stream_events(spark, sf_dir, N_BATCHES)
+    out = user_statistics_stream(ev)
+    return run_upsert_table(out, ["user_id"])
 
 
 from spark_state_provider_spark.streaming.processor import HAS_TWS_DEPS
@@ -233,10 +182,9 @@ if HAS_TWS_DEPS:
             user_statistics_transform,
         )
 
-        with _streaming_session(spark):
-            ev = stream_events(spark, sf_dir, N_BATCHES)
-            out = user_statistics_transform(ev)
-            return run_upsert_table(out, ["user_id"])
+        ev = stream_events(spark, sf_dir, N_BATCHES)
+        out = user_statistics_transform(ev)
+        return run_upsert_table(out, ["user_id"])
 
 
     @register(
@@ -264,10 +212,9 @@ if HAS_TWS_DEPS:
             user_statistics_transform,
         )
 
-        with _streaming_session(spark):
-            ev = stream_events(spark, sf_dir, N_BATCHES)
-            out = user_statistics_transform(ev, ttl_ms=3600 * 1000)
-            return run_upsert_table(out, ["user_id"])
+        ev = stream_events(spark, sf_dir, N_BATCHES)
+        out = user_statistics_transform(ev, ttl_ms=3600 * 1000)
+        return run_upsert_table(out, ["user_id"])
 
 
 # ---------------------------------------------------------------------------
@@ -335,10 +282,9 @@ _TTL_US = 3 * 24 * 3600 * 1_000_000
 )
 def q25s_stream_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """User-stats fold where state expires 3 days after last access."""
-    with _streaming_session(spark):
-        ev = stream_events(spark, sf_dir, 4)
-        out = user_statistics_stream(ev, ttl_secs=3 * 24 * 3600)
-        return run_upsert_table(out, ["user_id"])
+    ev = stream_events(spark, sf_dir, 4)
+    out = user_statistics_stream(ev, ttl_secs=3 * 24 * 3600)
+    return run_upsert_table(out, ["user_id"])
 
 
 # ---------------------------------------------------------------------------
@@ -387,19 +333,18 @@ def q25s_stream_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q22s_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming session windows (30-min gap) with a 1-hour watermark."""
-    with _streaming_session(spark):
-        ev = stream_events(spark, sf_dir, 4)
-        agg = (
-            ev.withWatermark("ts", "1 hour")
-            .groupBy(F.session_window("ts", "30 minutes").alias("sw"), "user_id")
-            .agg(F.count("*").alias("n_events"))
-            .select(
-                "user_id",
-                F.col("sw.start").alias("session_start"),
-                "n_events",
-            )
+    ev = stream_events(spark, sf_dir, 4)
+    agg = (
+        ev.withWatermark("ts", "1 hour")
+        .groupBy(F.session_window("ts", "30 minutes").alias("sw"), "user_id")
+        .agg(F.count("*").alias("n_events"))
+        .select(
+            "user_id",
+            F.col("sw.start").alias("session_start"),
+            "n_events",
         )
-        return run_to_memory(agg, "mem_q22s", "append")
+    )
+    return run_to_memory(agg, "mem_q22s", "append")
 
 
 # ---------------------------------------------------------------------------
@@ -458,11 +403,10 @@ def build_click_purchase_join(
 )
 def q26_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two streams joined on key + event-time range (state on both sides)."""
-    with _streaming_session(spark, state_parts=4):
-        joined = build_click_purchase_join(spark, sf_dir).select(
-            "click_id", "purchase_id", F.col("c_user").alias("user_id")
-        )
-        return run_to_memory(joined, "mem_q26", "append")
+    joined = build_click_purchase_join(spark, sf_dir).select(
+        "click_id", "purchase_id", F.col("c_user").alias("user_id")
+    )
+    return run_to_memory(joined, "mem_q26", "append", state_parts=4)
 
 
 # ---------------------------------------------------------------------------
@@ -481,14 +425,13 @@ def q26_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q20s2_stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming dedup with watermark-bounded state (40-day delay)."""
-    with _streaming_session(spark):
-        ev = stream_events(spark, sf_dir, N_BATCHES)
-        dedup = (
-            ev.withWatermark("ts", "40 days")
-            .dropDuplicatesWithinWatermark(["user_id", "event_type"])
-            .select("user_id", "event_type")
-        )
-        return run_to_memory(dedup, "mem_q20s2", "append")
+    ev = stream_events(spark, sf_dir, N_BATCHES)
+    dedup = (
+        ev.withWatermark("ts", "40 days")
+        .dropDuplicatesWithinWatermark(["user_id", "event_type"])
+        .select("user_id", "event_type")
+    )
+    return run_to_memory(dedup, "mem_q20s2", "append")
 
 
 # ---------------------------------------------------------------------------
@@ -533,35 +476,34 @@ def q20s2_stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q26b_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-outer stream-stream join (watermarks both sides + time bound)."""
-    with _streaming_session(spark, state_parts=4):
-        clicks = (
-            stream_events(spark, sf_dir, N_BATCHES)
-            .where(F.col("event_type") == "click")
-            .select(
-                F.col("event_id").alias("click_id"),
-                F.col("user_id").alias("c_user"),
-                F.col("ts").alias("c_ts"),
-            )
-            .withWatermark("c_ts", "1 hour")
+    clicks = (
+        stream_events(spark, sf_dir, N_BATCHES)
+        .where(F.col("event_type") == "click")
+        .select(
+            F.col("event_id").alias("click_id"),
+            F.col("user_id").alias("c_user"),
+            F.col("ts").alias("c_ts"),
         )
-        purchases = (
-            stream_events(spark, sf_dir, N_BATCHES)
-            .where(F.col("event_type") == "purchase")
-            .select(
-                F.col("event_id").alias("purchase_id"),
-                F.col("user_id").alias("p_user"),
-                F.col("ts").alias("p_ts"),
-            )
-            .withWatermark("p_ts", "1 hour")
+        .withWatermark("c_ts", "1 hour")
+    )
+    purchases = (
+        stream_events(spark, sf_dir, N_BATCHES)
+        .where(F.col("event_type") == "purchase")
+        .select(
+            F.col("event_id").alias("purchase_id"),
+            F.col("user_id").alias("p_user"),
+            F.col("ts").alias("p_ts"),
         )
-        joined = clicks.join(
-            purchases,
-            F.expr(
-                "c_user = p_user AND p_ts >= c_ts AND p_ts <= c_ts + INTERVAL 6 HOURS"
-            ),
-            "left_outer",
-        ).select("click_id", "purchase_id", F.col("c_user").alias("user_id"))
-        return run_to_memory(joined, "mem_q26b", "append")
+        .withWatermark("p_ts", "1 hour")
+    )
+    joined = clicks.join(
+        purchases,
+        F.expr(
+            "c_user = p_user AND p_ts >= c_ts AND p_ts <= c_ts + INTERVAL 6 HOURS"
+        ),
+        "left_outer",
+    ).select("click_id", "purchase_id", F.col("c_user").alias("user_id"))
+    return run_to_memory(joined, "mem_q26b", "append", state_parts=4)
 
 
 # ---------------------------------------------------------------------------
@@ -587,18 +529,17 @@ def q26c_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch — no state, no watermark needed), counted per segment."""
     from spark_state_provider_spark.tables import load_table
 
-    with _streaming_session(spark):
-        ev = stream_events(spark, sf_dir, N_BATCHES)
-        dim = load_table(spark, sf_dir, "customer").select(
-            "c_custkey", "c_mktsegment"
-        )
-        joined = ev.join(
-            F.broadcast(dim), ev.user_id == dim.c_custkey, "inner"
-        ).select("event_id", "c_mktsegment", "event_type")
-        sink = run_to_memory(joined, "mem_q26c", "append")
-        return sink.groupBy("c_mktsegment", "event_type").agg(
-            F.count("*").alias("n_events")
-        )
+    ev = stream_events(spark, sf_dir, N_BATCHES)
+    dim = load_table(spark, sf_dir, "customer").select(
+        "c_custkey", "c_mktsegment"
+    )
+    joined = ev.join(
+        F.broadcast(dim), ev.user_id == dim.c_custkey, "inner"
+    ).select("event_id", "c_mktsegment", "event_type")
+    sink = run_to_memory(joined, "mem_q26c", "append")
+    return sink.groupBy("c_mktsegment", "event_type").agg(
+        F.count("*").alias("n_events")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -624,14 +565,13 @@ def q26c_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q21s2_stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming sliding windows, RocksDB-backed state, 2 micro-batches."""
-    with _streaming_session(spark):
-        ev = stream_events(spark, sf_dir, N_BATCHES)
-        agg = (
-            ev.groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"))
-            .agg(F.count("*").alias("n_events"))
-            .select(F.col("w.start").alias("window_start"), "n_events")
-        )
-        return run_to_memory(agg, "mem_q21s2", "complete")
+    ev = stream_events(spark, sf_dir, N_BATCHES)
+    agg = (
+        ev.groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"))
+        .agg(F.count("*").alias("n_events"))
+        .select(F.col("w.start").alias("window_start"), "n_events")
+    )
+    return run_to_memory(agg, "mem_q21s2", "complete")
 
 
 # ---------------------------------------------------------------------------
@@ -775,11 +715,10 @@ def _register_q92() -> None:
                 batch_subdir(out_dir, batch_id)
             )
 
-        with _streaming_session(spark):
-            docs = stream_docs(
-                spark, sf_dir, N_BATCHES, mod=_INC_MOD
-            )
-            drain(docs.writeStream.queryName("q92").foreachBatch(probe))
+        docs = stream_docs(
+            spark, sf_dir, N_BATCHES, mod=_INC_MOD
+        )
+        drain(docs.writeStream.queryName("q92").foreachBatch(probe))
         return _pinned(
             spark.read.schema(
                 "id_new bigint, id_corpus bigint, jaccard double"
@@ -837,9 +776,8 @@ def _register_q96() -> None:
                 .parquet(batch_subdir(partials_dir, batch_id))
             )
 
-        with _streaming_session(spark):
-            ev = stream_events(spark, sf_dir, N_BATCHES)
-            drain(ev.writeStream.queryName("q96").foreachBatch(fold))
+        ev = stream_events(spark, sf_dir, N_BATCHES)
+        drain(ev.writeStream.queryName("q96").foreachBatch(fold))
         partials = (
             spark.read.schema("user_id bigint, n bigint")
             .option("recursiveFileLookup", "true")
@@ -945,27 +883,26 @@ def _register_q97() -> None:
                 batch_subdir(out_dir, batch_id)
             )
 
-        with _streaming_session(spark):
-            ev = stream_events(spark, sf_dir, N_BATCHES).select(
-                "event_id",
-                "user_id",
-                F.unix_timestamp("ts").alias("secs"),
-                F.round(F.col("value") * 100).cast("long").alias("cents"),
-            )
-            flagged = ev.groupBy("user_id").applyInPandasWithState(
-                handler,
-                outputStructType=(
-                    "event_id long, user_id long, cents long, n long"
-                ),
-                stateStructType="window array<long>",
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-            drain(
-                flagged.writeStream.queryName("q97")
-                .foreachBatch(sink)
-                .outputMode("update")
-            )
+        ev = stream_events(spark, sf_dir, N_BATCHES).select(
+            "event_id",
+            "user_id",
+            F.unix_timestamp("ts").alias("secs"),
+            F.round(F.col("value") * 100).cast("long").alias("cents"),
+        )
+        flagged = ev.groupBy("user_id").applyInPandasWithState(
+            handler,
+            outputStructType=(
+                "event_id long, user_id long, cents long, n long"
+            ),
+            stateStructType="window array<long>",
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+        drain(
+            flagged.writeStream.queryName("q97")
+            .foreachBatch(sink)
+            .outputMode("update")
+        )
         return _pinned(
             spark.read.schema(
                 "event_id bigint, user_id bigint, cents bigint, n bigint"
@@ -1095,9 +1032,8 @@ def _register_q103() -> None:
             s.select("h").write.mode("append").parquet(seen_dir)
             s.unpersist()
 
-        with _streaming_session(spark):
-            docs = stream_docs(spark, sf_dir, N_BATCHES)
-            drain(docs.writeStream.queryName("q103").foreachBatch(step))
+        docs = stream_docs(spark, sf_dir, N_BATCHES)
+        drain(docs.writeStream.queryName("q103").foreachBatch(step))
         bench_tri.unpersist()
         partials = (
             spark.read.schema(
@@ -1190,9 +1126,8 @@ def _register_q108() -> None:
             if prev is not None:
                 shutil.rmtree(prev, ignore_errors=True)
 
-        with _streaming_session(spark):
-            ev = stream_events(spark, sf_dir, N_BATCHES)
-            drain(ev.writeStream.queryName("q108").foreachBatch(merge))
+        ev = stream_events(spark, sf_dir, N_BATCHES)
+        drain(ev.writeStream.queryName("q108").foreachBatch(merge))
         final = spark.read.parquet(latest["path"])
         w = Window.partitionBy("event_type").orderBy(
             F.col("value").desc(), "event_id"
@@ -1327,11 +1262,10 @@ def _register_q114() -> None:
                 batch_subdir(out_dir, batch_id)
             )
 
-        with _streaming_session(spark):
-            docs = stream_docs(
-                spark, sf_dir, N_BATCHES, mod=_INC_MOD
-            )
-            drain(docs.writeStream.queryName("q114").foreachBatch(probe))
+        docs = stream_docs(
+            spark, sf_dir, N_BATCHES, mod=_INC_MOD
+        )
+        drain(docs.writeStream.queryName("q114").foreachBatch(probe))
         return _pinned(
             spark.read.schema(
                 "doc_id bigint, n_windows bigint, hit_windows bigint, "
@@ -1391,17 +1325,16 @@ def q155_stream_python_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         wipe=True,
     )
 
-    with _streaming_session(spark):
-        sdf = stream_events(spark, sf_dir, N_BATCHES).select(
-            "event_id",
-            "event_type",
-            F.floor(F.col("value") * 100).cast("long").alias("cents"),
-        )
-        drain(
-            sdf.writeStream.queryName("q155")
-            .format("ssps_linefile")
-            .option("path", out)
-        )
+    sdf = stream_events(spark, sf_dir, N_BATCHES).select(
+        "event_id",
+        "event_type",
+        F.floor(F.col("value") * 100).cast("long").alias("cents"),
+    )
+    drain(
+        sdf.writeStream.queryName("q155")
+        .format("ssps_linefile")
+        .option("path", out)
+    )
 
     committed: list[str] = []
     for mpath in sorted(glob.glob(os.path.join(out, "_MANIFEST-*.json"))):
@@ -1467,51 +1400,50 @@ def q157_rate_source_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import time
 
-    with _streaming_session(spark):
-        sdf = (
-            spark.readStream.format("rate-micro-batch")
-            .option("rowsPerBatch", _RATE_ROWS_PER_BATCH)
-            .option("numPartitions", 4)
-            .option("startTimestamp", 0)
-            .load()
-            .select(F.col("value").alias("v"))
-        )
-        name = "ssps_rate_sink"
-        try:
-            spark.catalog.dropTempView(name)
-        except Exception:
-            pass
-        import tempfile
+    sdf = (
+        spark.readStream.format("rate-micro-batch")
+        .option("rowsPerBatch", _RATE_ROWS_PER_BATCH)
+        .option("numPartitions", 4)
+        .option("startTimestamp", 0)
+        .load()
+        .select(F.col("value").alias("v"))
+    )
+    name = "ssps_rate_sink"
+    try:
+        spark.catalog.dropTempView(name)
+    except Exception:
+        pass
+    import tempfile
 
-        from spark_state_provider_spark.scratch import scratch_dir
+    from spark_state_provider_spark.scratch import scratch_dir
 
-        ckpt = tempfile.mkdtemp(
-            prefix="ckpt_rate_", dir=scratch_dir("memck", wipe=False)
-        )
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            deadline = time.monotonic() + 120
-            while time.monotonic() < deadline:
-                if not q.isActive:
-                    # surface the real stream failure, never a partial sink
-                    exc = q.exception()
-                    raise RuntimeError(f"q157 stream terminated early: {exc}")
-                p = q.lastProgress
-                if p is not None and p["batchId"] >= _RATE_BATCHES:
-                    break
-                time.sleep(0.2)
-            else:
-                raise TimeoutError(
-                    f"q157 stream did not reach epoch {_RATE_BATCHES} within 120s"
-                )
-        finally:
-            q.stop()
+    ckpt = tempfile.mkdtemp(
+        prefix="ckpt_rate_", dir=scratch_dir("memck", wipe=False)
+    )
+    q = (
+        sdf.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .option("checkpointLocation", ckpt)
+        .start()
+    )
+    try:
+        deadline = time.monotonic() + 120
+        while time.monotonic() < deadline:
+            if not q.isActive:
+                # surface the real stream failure, never a partial sink
+                exc = q.exception()
+                raise RuntimeError(f"q157 stream terminated early: {exc}")
+            p = q.lastProgress
+            if p is not None and p["batchId"] >= _RATE_BATCHES:
+                break
+            time.sleep(0.2)
+        else:
+            raise TimeoutError(
+                f"q157 stream did not reach epoch {_RATE_BATCHES} within 120s"
+            )
+    finally:
+        q.stop()
 
     cutoff = _RATE_ROWS_PER_BATCH * _RATE_BATCHES
     return (
@@ -1587,17 +1519,16 @@ def q158_state_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     prev_chlog = spark.conf.get(chlog_conf, None)
     spark.conf.set(chlog_conf, "true")  # the feed reads the changelogs
     try:
-        with _streaming_session(spark):
-            ev = stream_events(spark, sf_dir, N_BATCHES)
-            # the result is read from the state checkpoint, not the sink
-            drain(
-                ev.select("user_id", "event_type", F.to_date("ts").alias("day"))
-                .dropDuplicates(["user_id", "event_type", "day"])
-                .writeStream.queryName("q158")
-                .format("noop")
-                .outputMode("append"),
-                ckpt,
-            )
+        ev = stream_events(spark, sf_dir, N_BATCHES)
+        # the result is read from the state checkpoint, not the sink
+        drain(
+            ev.select("user_id", "event_type", F.to_date("ts").alias("day"))
+            .dropDuplicates(["user_id", "event_type", "day"])
+            .writeStream.queryName("q158")
+            .format("noop")
+            .outputMode("append"),
+            ckpt,
+        )
     finally:
         if prev_chlog is not None:
             spark.conf.set(chlog_conf, prev_chlog)
@@ -1670,9 +1601,8 @@ def q160_stream_fanout_consistency(spark: SparkSession, sf_dir: str) -> DataFram
         finally:
             delta.unpersist()
 
-    with _streaming_session(spark, state_parts=4):
-        sdf = stream_events(spark, sf_dir, N_BATCHES)
-        drain(sdf.writeStream.queryName("q160").foreachBatch(fanout))
+    sdf = stream_events(spark, sf_dir, N_BATCHES)
+    drain(sdf.writeStream.queryName("q160").foreachBatch(fanout), state_parts=4)
 
     a = (
         spark.read.parquet(dir_a)
@@ -1761,15 +1691,14 @@ def q163_late_data_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_events_out_of_order,
     )
 
-    with _streaming_session(spark):
-        ev = stream_events_out_of_order(spark, sf_dir, 3)
-        agg = (
-            ev.withWatermark("ts", "1 hour")
-            .groupBy(F.window("ts", "1 hour").alias("w"))
-            .agg(F.count("*").alias("n_events"))
-            .select(F.col("w.start").alias("window_start"), "n_events")
-        )
-        return run_to_memory(agg, "mem_q163", "append")
+    ev = stream_events_out_of_order(spark, sf_dir, 3)
+    agg = (
+        ev.withWatermark("ts", "1 hour")
+        .groupBy(F.window("ts", "1 hour").alias("w"))
+        .agg(F.count("*").alias("n_events"))
+        .select(F.col("w.start").alias("window_start"), "n_events")
+    )
+    return run_to_memory(agg, "mem_q163", "append")
 
 
 # ---------------------------------------------------------------------------
@@ -1813,19 +1742,18 @@ def q166_stream_restart_exactly_once(spark: SparkSession, sf_dir: str) -> DataFr
     out = os.path.join(base, "sink")
     ckpt = os.path.join(base, "_ckpt")
 
-    with _streaming_session(spark):
-        for _run in range(2):  # second start must be a committed no-op
-            sdf = stream_events(spark, sf_dir, N_BATCHES).select(
-                "event_id",
-                "event_type",
-                F.floor(F.col("value") * 100).cast("long").alias("cents"),
-            )
-            drain(
-                sdf.writeStream.queryName("q166")
-                .format("parquet")
-                .option("path", out),
-                ckpt,
-            )
+    for _run in range(2):  # second start must be a committed no-op
+        sdf = stream_events(spark, sf_dir, N_BATCHES).select(
+            "event_id",
+            "event_type",
+            F.floor(F.col("value") * 100).cast("long").alias("cents"),
+        )
+        drain(
+            sdf.writeStream.queryName("q166")
+            .format("parquet")
+            .option("path", out),
+            ckpt,
+        )
 
     return (
         spark.read.parquet(out)
@@ -1947,12 +1875,11 @@ def q170_stream_ivf_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         assign.write.mode("append").parquet(index_dir)
 
-    with _streaming_session(spark):
-        sdf = stream_embeddings(spark, sf_dir, N_BATCHES)
-        try:
-            drain(sdf.writeStream.queryName("q170").foreachBatch(index_batch))
-        finally:
-            cent.unpersist()
+    sdf = stream_embeddings(spark, sf_dir, N_BATCHES)
+    try:
+        drain(sdf.writeStream.queryName("q170").foreachBatch(index_batch))
+    finally:
+        cent.unpersist()
 
     return (
         spark.read.parquet(index_dir)
@@ -1999,25 +1926,24 @@ def q172_chained_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     state by the watermark. Output equals per-window distinct-actor
     counts for closed windows.
     """
-    with _streaming_session(spark):
-        # project to the three columns the chain reads BEFORE the dedup:
-        # dropDuplicates keeps the whole row in its state store, so the
-        # unused event_id/value/props columns would otherwise sit in
-        # RocksDB and ride both stateful exchanges
-        ev = stream_events(spark, sf_dir, N_BATCHES).select(
-            "user_id", "event_type", "ts"
-        )
-        deduped = (
-            ev.withWatermark("ts", "1 hour")
-            .withColumn("hour", F.date_trunc("hour", "ts"))
-            .dropDuplicates(["user_id", "event_type", "hour"])
-        )
-        agg = (
-            deduped.groupBy(F.window("ts", "1 hour").alias("w"))
-            .agg(F.count("*").alias("n_distinct_actors"))
-            .select(F.col("w.start").alias("window_start"), "n_distinct_actors")
-        )
-        return run_to_memory(agg, "mem_q172", "append")
+    # project to the three columns the chain reads BEFORE the dedup:
+    # dropDuplicates keeps the whole row in its state store, so the
+    # unused event_id/value/props columns would otherwise sit in
+    # RocksDB and ride both stateful exchanges
+    ev = stream_events(spark, sf_dir, N_BATCHES).select(
+        "user_id", "event_type", "ts"
+    )
+    deduped = (
+        ev.withWatermark("ts", "1 hour")
+        .withColumn("hour", F.date_trunc("hour", "ts"))
+        .dropDuplicates(["user_id", "event_type", "hour"])
+    )
+    agg = (
+        deduped.groupBy(F.window("ts", "1 hour").alias("w"))
+        .agg(F.count("*").alias("n_distinct_actors"))
+        .select(F.col("w.start").alias("window_start"), "n_distinct_actors")
+    )
+    return run_to_memory(agg, "mem_q172", "append")
 
 
 # ---------------------------------------------------------------------------
@@ -2064,17 +1990,16 @@ def q175_state_export_kv(spark: SparkSession, sf_dir: str) -> DataFrame:
     export_dir = tempfile.mkdtemp(
         prefix="kv_q175_", dir=scratch_dir("memck", wipe=False)
     )
-    with _streaming_session(spark):
-        ev = stream_events(spark, sf_dir, N_BATCHES)
-        # the result is read from the exported state, not the sink
-        drain(
-            ev.groupBy("event_type")
-            .agg(F.count("*").alias("n"))
-            .writeStream.queryName("q175")
-            .format("noop")
-            .outputMode("update"),
-            ckpt,
-        )
+    ev = stream_events(spark, sf_dir, N_BATCHES)
+    # the result is read from the exported state, not the sink
+    drain(
+        ev.groupBy("event_type")
+        .agg(F.count("*").alias("n"))
+        .writeStream.queryName("q175")
+        .format("noop")
+        .outputMode("update"),
+        ckpt,
+    )
 
     export_state_snapshot(spark, ckpt, export_dir)
     kv = read_exported_state(spark, export_dir)
@@ -2115,14 +2040,15 @@ def q179_stream_output_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate. At scale you run ONE mode; this query exists to prove the
     choice is serving-topology-only.
     """
-    with _streaming_session(spark, state_parts=4):
-        ev_c = stream_events(spark, sf_dir, N_BATCHES)
-        agg_c = ev_c.groupBy("event_type").agg(F.count("*").alias("n"))
-        complete = run_to_memory(agg_c, "mem_q179_complete", "complete")
+    ev_c = stream_events(spark, sf_dir, N_BATCHES)
+    agg_c = ev_c.groupBy("event_type").agg(F.count("*").alias("n"))
+    complete = run_to_memory(
+        agg_c, "mem_q179_complete", "complete", state_parts=4
+    )
 
-        ev_u = stream_events(spark, sf_dir, N_BATCHES)
-        agg_u = ev_u.groupBy("event_type").agg(F.count("*").alias("n"))
-        update = run_upsert_table(agg_u, ["event_type"])
+    ev_u = stream_events(spark, sf_dir, N_BATCHES)
+    agg_u = ev_u.groupBy("event_type").agg(F.count("*").alias("n"))
+    update = run_upsert_table(agg_u, ["event_type"], state_parts=4)
 
     c = complete.select("event_type", F.col("n").alias("n_complete"))
     u = update.select(
@@ -2205,16 +2131,15 @@ def q181_session_timeout_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         session_timeout_stream,
     )
 
-    with _streaming_session(spark):
-        # 2 time-ordered slices — the minimum that keeps timers firing
-        # mid-stream (batch 2 runs under batch 1's watermark, releasing
-        # batch-1 tails) AND at the final flush. The emitted set is proven
-        # batch-count-independent (same oracle at 2 or 3 slices), so the
-        # third slice bought only micro-batch overhead (~1/3 of the round-4
-        # bench's most expensive query).
-        ev = stream_events(spark, sf_dir, 2)
-        out = session_timeout_stream(ev, _Q181_GAP_MIN * 60)
-        return run_to_memory(out, "mem_q181", "append")
+    # 2 time-ordered slices — the minimum that keeps timers firing
+    # mid-stream (batch 2 runs under batch 1's watermark, releasing
+    # batch-1 tails) AND at the final flush. The emitted set is proven
+    # batch-count-independent (same oracle at 2 or 3 slices), so the
+    # third slice bought only micro-batch overhead (~1/3 of the round-4
+    # bench's most expensive query).
+    ev = stream_events(spark, sf_dir, 2)
+    out = session_timeout_stream(ev, _Q181_GAP_MIN * 60)
+    return run_to_memory(out, "mem_q181", "append")
 
 
 # ---------------------------------------------------------------------------
@@ -2275,40 +2200,39 @@ def q182_stream_stream_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame
     6h window); the asymmetric eviction predicates above are what Spark
     derives from the range condition — certified here value-for-value.
     """
-    with _streaming_session(spark, state_parts=4):
-        clicks = (
-            stream_events(spark, sf_dir, N_BATCHES)
-            .where(F.col("event_type") == "click")
-            .select(
-                F.col("event_id").alias("click_id"),
-                F.col("user_id").alias("c_user"),
-                F.col("ts").alias("c_ts"),
-            )
-            .withWatermark("c_ts", "1 hour")
+    clicks = (
+        stream_events(spark, sf_dir, N_BATCHES)
+        .where(F.col("event_type") == "click")
+        .select(
+            F.col("event_id").alias("click_id"),
+            F.col("user_id").alias("c_user"),
+            F.col("ts").alias("c_ts"),
         )
-        purchases = (
-            stream_events(spark, sf_dir, N_BATCHES)
-            .where(F.col("event_type") == "purchase")
-            .select(
-                F.col("event_id").alias("purchase_id"),
-                F.col("user_id").alias("p_user"),
-                F.col("ts").alias("p_ts"),
-            )
-            .withWatermark("p_ts", "1 hour")
+        .withWatermark("c_ts", "1 hour")
+    )
+    purchases = (
+        stream_events(spark, sf_dir, N_BATCHES)
+        .where(F.col("event_type") == "purchase")
+        .select(
+            F.col("event_id").alias("purchase_id"),
+            F.col("user_id").alias("p_user"),
+            F.col("ts").alias("p_ts"),
         )
-        joined = clicks.join(
-            purchases,
-            F.expr(
-                "c_user = p_user AND p_ts >= c_ts "
-                "AND p_ts <= c_ts + INTERVAL 6 HOURS"
-            ),
-            "full_outer",
-        ).select(
-            "click_id",
-            "purchase_id",
-            F.coalesce("c_user", "p_user").alias("user_id"),
-        )
-        return run_to_memory(joined, "mem_q182", "append")
+        .withWatermark("p_ts", "1 hour")
+    )
+    joined = clicks.join(
+        purchases,
+        F.expr(
+            "c_user = p_user AND p_ts >= c_ts "
+            "AND p_ts <= c_ts + INTERVAL 6 HOURS"
+        ),
+        "full_outer",
+    ).select(
+        "click_id",
+        "purchase_id",
+        F.coalesce("c_user", "p_user").alias("user_id"),
+    )
+    return run_to_memory(joined, "mem_q182", "append", state_parts=4)
 
 
 # ---------------------------------------------------------------------------
@@ -2423,9 +2347,8 @@ def q184_stream_merkle_maintenance(spark: SparkSession, sf_dir: str) -> DataFram
         # buckets per batch — and no per-bucket directory churn.
         l1.write.mode("append").parquet(l1_dir)
 
-    with _streaming_session(spark):
-        sdf = stream_docs(spark, sf_dir, N_BATCHES)
-        drain(sdf.writeStream.queryName("q184").foreachBatch(maintain))
+    sdf = stream_docs(spark, sf_dir, N_BATCHES)
+    drain(sdf.writeStream.queryName("q184").foreachBatch(maintain))
 
     l1 = (
         spark.read.schema("b1 bigint, h string, bid bigint")
@@ -2501,12 +2424,11 @@ def q189_stream_domain_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
         domain_quota_stream,
     )
 
-    with _streaming_session(spark):
-        docs = stream_docs(spark, sf_dir, N_BATCHES)
-        out = domain_quota_stream(
-            docs.select("source", "doc_id", "n_chars"), _Q189_CAP
-        )
-        return run_to_memory(out, "mem_q189", "append")
+    docs = stream_docs(spark, sf_dir, N_BATCHES)
+    out = domain_quota_stream(
+        docs.select("source", "doc_id", "n_chars"), _Q189_CAP
+    )
+    return run_to_memory(out, "mem_q189", "append")
 
 
 # ---------------------------------------------------------------------------
@@ -2534,12 +2456,11 @@ def _register_q203() -> None:
         """
         from spark_state_provider_spark.streaming.stateful import ewma_stream
 
-        with _streaming_session(spark):
-            # reuses q24s's pre-materialized time-ordered slices (same
-            # content; bench pre-builds the shared slice dir)
-            ev = stream_events(spark, sf_dir, N_BATCHES)
-            out = ewma_stream(ev.select("user_id", "ts", "event_id", "value"))
-            return run_upsert_table(out, ["user_id"])
+        # reuses q24s's pre-materialized time-ordered slices (same
+        # content; bench pre-builds the shared slice dir)
+        ev = stream_events(spark, sf_dir, N_BATCHES)
+        out = ewma_stream(ev.select("user_id", "ts", "event_id", "value"))
+        return run_upsert_table(out, ["user_id"])
 
 
 _register_q203()
@@ -2573,15 +2494,14 @@ def _register_q217() -> None:
             cusum_stream,
         )
 
-        with _streaming_session(spark):
-            # reuses the q24s/q203 pre-materialized time-ordered slices
-            ev = stream_events(spark, sf_dir, N_BATCHES)
-            out = cusum_stream(
-                ev.select("user_id", "ts", "event_id", "value"),
-                _CUSUM_K_CENTS,
-                100000,
-            )
-            return run_upsert_table(out, ["user_id"])
+        # reuses the q24s/q203 pre-materialized time-ordered slices
+        ev = stream_events(spark, sf_dir, N_BATCHES)
+        out = cusum_stream(
+            ev.select("user_id", "ts", "event_id", "value"),
+            _CUSUM_K_CENTS,
+            100000,
+        )
+        return run_upsert_table(out, ["user_id"])
 
 
 _register_q217()
@@ -2715,9 +2635,8 @@ def _register_q220() -> None:
             ).select("cluster_id").write.mode("append").parquet(seen_dir)
             staged.unpersist()
 
-        with _streaming_session(spark):
-            docs = stream_docs(spark, sf_dir, N_BATCHES)
-            drain(docs.writeStream.queryName("q220").foreachBatch(step))
+        docs = stream_docs(spark, sf_dir, N_BATCHES)
+        drain(docs.writeStream.queryName("q220").foreachBatch(step))
         model.unpersist()
         partials = (
             spark.read.schema(
@@ -2934,11 +2853,10 @@ def _register_q230() -> None:
                 batch_subdir(out_dir, batch_id)
             )
 
-        with _streaming_session(spark):
-            docs = stream_docs(
-                spark, sf_dir, N_BATCHES, mod=_INC_MOD
-            )
-            drain(docs.writeStream.queryName("q230").foreachBatch(probe))
+        docs = stream_docs(
+            spark, sf_dir, N_BATCHES, mod=_INC_MOD
+        )
+        drain(docs.writeStream.queryName("q230").foreachBatch(probe))
         return _pinned(
             spark.read.schema(
                 "doc_id bigint, corpus_doc bigint, lcs_len bigint"
@@ -3090,9 +3008,8 @@ def _register_q233() -> None:
                 batch_subdir(out_dir, batch_id)
             )
 
-        with _streaming_session(spark):
-            docs = stream_docs(spark, sf_dir, N_BATCHES, mod=_INC_MOD)
-            drain(docs.writeStream.queryName("q233").foreachBatch(rewrite))
+        docs = stream_docs(spark, sf_dir, N_BATCHES, mod=_INC_MOD)
+        drain(docs.writeStream.queryName("q233").foreachBatch(rewrite))
         return _pinned(
             spark.read.schema(
                 "doc_id bigint, cleaned_text string, removed_chars bigint"
@@ -3213,9 +3130,8 @@ def _register_q236() -> None:
                 batch_subdir(out_dir, batch_id)
             )
 
-        with _streaming_session(spark):
-            docs = stream_docs(spark, sf_dir, N_BATCHES, mod=_INC_MOD)
-            drain(docs.writeStream.queryName("q236").foreachBatch(decontam))
+        docs = stream_docs(spark, sf_dir, N_BATCHES, mod=_INC_MOD)
+        drain(docs.writeStream.queryName("q236").foreachBatch(decontam))
         return _pinned(
             spark.read.schema(
                 "doc_id bigint, cleaned_text string, removed_tokens bigint"
@@ -3342,9 +3258,8 @@ def _register_q241() -> None:
             )
 
         try:
-            with _streaming_session(spark):
-                sdf = stream_embeddings(spark, sf_dir, N_BATCHES)
-                drain(sdf.writeStream.queryName("q241").foreachBatch(gate))
+            sdf = stream_embeddings(spark, sf_dir, N_BATCHES)
+            drain(sdf.writeStream.queryName("q241").foreachBatch(gate))
         finally:
             bench.unpersist()
         return _pinned(

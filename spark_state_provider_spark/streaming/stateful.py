@@ -23,7 +23,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from spark_state_provider_spark.streaming.state_timeout import NO_TTL, STATELESS
+from spark_state_provider_spark.streaming.state_timeout import (
+    NO_TTL,
+    STATELESS,
+    get_expiration_by_query,
+)
 
 # State tuple layout (timestamps as epoch-micros longs keep the state row
 # arrow-friendly): (total, first_id, last_id, types, first_ts_us, last_ts_us)
@@ -73,47 +77,37 @@ def _emit(user_id, st) -> pd.DataFrame:
     )
 
 
-def user_statistics_handler(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """NoTimeout user-statistics fold (reference parity handler)."""
-    st = state.get if state.exists else _ZERO
-    for pdf in pdfs:
-        if len(pdf):
-            st = _fold(st, pdf)
-    state.update(st)
-    yield _emit(key[0], st)
+def _whole_batch(pdfs: Iterator[pd.DataFrame]) -> pd.DataFrame | None:
+    """A group's micro-batch as one frame, or None when it has no rows:
+    Arrow cuts a group into chunks at arbitrary ~10k-row boundaries in
+    post-shuffle order, so a fold that must not depend on the split reads
+    the whole batch at once."""
+    chunks = [pdf for pdf in pdfs if len(pdf)]
+    if not chunks:
+        return None
+    return chunks[0] if len(chunks) == 1 else pd.concat(chunks)
 
 
 def make_ttl_handler(ttl_secs: int):
-    """TTL-aware fold: strict event-time expiry at the deadline rules of
-    ``ttl.py`` — state whose ``last_access + ttl <= now`` is discarded
-    before folding (now = the batch's max event time for the key, so the
-    semantics are deterministic and replayable; wall-clock-independent
+    """User-statistics fold with strict event-time expiry at the deadline
+    rules of ``ttl.py`` — state whose ``last_access + ttl <= now`` is
+    discarded before folding (now = the batch's max event time for the key,
+    so the semantics are deterministic and replayable; wall-clock-independent
     firing would use processing-time timers, a documented deviation —
-    SURVEY.md §7 Stage 3)."""
+    SURVEY.md §7 Stage 3). ``NO_TTL`` gives the NoTimeout parity fold."""
 
     def handler(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
+        # one expiry check per batch, never per Arrow chunk
+        pdf = _whole_batch(pdfs)
         if ttl_secs == STATELESS:
             # stateless mode: fold only this batch, keep nothing
-            st = _ZERO
-            for pdf in pdfs:
-                if len(pdf):
-                    st = _fold(st, pdf)
             state.remove()
-            yield _emit(key[0], st)
+            yield _emit(key[0], _ZERO if pdf is None else _fold(_ZERO, pdf))
             return
         st = state.get if state.exists else _ZERO
-        # Materialize the group's whole micro-batch before the expiry test:
-        # Arrow chunking splits a group at arbitrary ~10k-row boundaries in
-        # post-shuffle order, so a per-chunk deadline check would make the
-        # expiry decision depend on the chunk split. One batch → one check
-        # (now = the batch's max event time for the key), as documented.
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks)
+        if pdf is not None:
             if ttl_secs != NO_TTL and st[5] is not None:
                 now_us = int(pdf["ts"].astype("int64").max() // 1000)
                 if now_us - st[5] >= ttl_secs * 1_000_000:
@@ -131,28 +125,21 @@ def user_statistics_stream_for_query(
     """EP3 closed loop: resolve the TTL the user configured for this query
     through ``stateTimeout``/RuntimeConfig (reference per-query conf,
     RocksDbStateStoreProvider.scala:725-729) and build the fold with it.
-    ``-1`` (or unset) → NoTimeout parity handler."""
-    from spark_state_provider_spark.streaming.state_timeout import (
-        NO_TTL,
-        get_expiration_by_query,
+    ``-1`` (or unset) → NoTimeout parity fold."""
+    return user_statistics_stream(
+        events, get_expiration_by_query(events.sparkSession.conf, query_name)
     )
-
-    ttl = get_expiration_by_query(events.sparkSession.conf, query_name)
-    return user_statistics_stream(events, None if ttl == NO_TTL else ttl)
 
 
 def user_statistics_stream(
     events: DataFrame,
-    ttl_secs: int | None = None,
+    ttl_secs: int = NO_TTL,
 ) -> DataFrame:
     """Per-user UserStatistics over a (streaming) events DataFrame.
 
-    ``ttl_secs=None`` → NoTimeout parity handler; otherwise the TTL fold.
+    ``ttl_secs=NO_TTL`` → NoTimeout parity fold; otherwise the TTL fold.
     Output timestamps are surfaced as real timestamps for oracle parity.
     """
-    handler = (
-        user_statistics_handler if ttl_secs is None else make_ttl_handler(ttl_secs)
-    )
     # Project to the columns the fold reads BEFORE the stateful shuffle:
     # the grouped frame is shuffled by key and crosses the JVM→Python
     # Arrow boundary in full, and Spark cannot prune columns through the
@@ -161,7 +148,7 @@ def user_statistics_stream(
     # per-group Arrow slice.
     events = events.select("user_id", "event_id", "ts", "event_type")
     out = events.groupBy("user_id").applyInPandasWithState(
-        handler,
+        make_ttl_handler(ttl_secs),
         outputStructType=OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,
         outputMode="update",
@@ -222,10 +209,9 @@ def make_session_timeout_handler(gap_secs: int):
             yield emit([sess])
             return
         cur = list(state.get) if state.exists else None
-        chunks = [pdf for pdf in pdfs if len(pdf)]
+        pdf = _whole_batch(pdfs)
         closed = []
-        if chunks:
-            pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks)
+        if pdf is not None:
             for ts_us in sorted(pdf["ts"].astype("int64") // 1000):
                 ts_us = int(ts_us)
                 if cur is None:
@@ -345,9 +331,8 @@ def ewma_handler(
     key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
     acc, n = state.get if state.exists else (None, 0)
-    chunks = [pdf for pdf in pdfs if len(pdf)]
-    if chunks:
-        pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks)
+    pdf = _whole_batch(pdfs)
+    if pdf is not None:
         pdf = pdf.sort_values(["ts", "event_id"])
         # Deliberately a sequential loop: the EWMA recurrence has a true
         # step dependence, and re-associating it as the Σ x_i·0.5^(n−i)
@@ -401,11 +386,10 @@ def make_cusum_handler(k_cents: int, alarm_cents: int):
         pref, low, peak, n = (
             state.get if state.exists else (0, 0, 0, 0)
         )
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
+        pdf = _whole_batch(pdfs)
+        if pdf is not None:
             import numpy as np
 
-            pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks)
             pdf = pdf.sort_values(["ts", "event_id"])
             cents = (
                 (pdf["value"].astype("float64") * 100).round().astype("int64")

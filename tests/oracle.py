@@ -64,10 +64,11 @@ def compare_all(spark, sf_dir: str, names, max_workers: int = 12) -> list[str]:
     (guide §2.6): at tiny test scale each query's wall time is fixed
     scheduling/collect latency, not compute, so independent queries in
     flight together cut a whole-registry sweep several-fold. Returns the
-    sorted failure list ("name: error"). Streaming conf windows are
-    serialized by ``_streaming_session``'s internal lock; results are
+    sorted failure list ("name: error"). Streaming queries overlap too:
+    ``harness.drain`` pins a run's confs only while the query starts,
+    under its own lock, and the query keeps its copy; results are
     partition-count invariant (pinned by the adversarial-geometry sweep),
-    so batch queries overlapping a pinned window stay correct."""
+    so batch queries overlapping that start stay correct."""
     from concurrent.futures import ThreadPoolExecutor
 
     from spark_state_provider_spark.session import ensure_active_session

@@ -12,10 +12,12 @@ import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from spark_state_provider_spark.streaming.state_timeout import NO_TTL
 from spark_state_provider_spark.streaming.stateful import (
     ewma_handler,
     make_quota_handler,
     make_session_timeout_handler,
+    make_ttl_handler,
 )
 
 
@@ -197,3 +199,56 @@ def test_session_timeout_matches_gaps_and_islands(keys, gap, shuffle_seed):
         assert set(got["user_id"]) == {user_id}
         cols = ["session_start_us", "last_event_us", "n_events"]
         assert list(got[cols].itertuples(index=False, name=None)) == expected
+
+
+def _cut(df: pd.DataFrame, cuts: list[int]) -> list[pd.DataFrame]:
+    """``df`` cut at the row positions ``cuts`` (taken modulo its length)."""
+    points = sorted({c % len(df) for c in cuts} - {0})
+    bounds = [0] + points + [len(df)]
+    return [df.iloc[lo:hi] for lo, hi in zip(bounds, bounds[1:])]
+
+
+@given(
+    rows=st.lists(
+        st.tuples(
+            st.integers(min_value=0, max_value=3),  # user_id
+            st.integers(min_value=0, max_value=10**9),  # event_id
+            st.integers(min_value=0, max_value=10**6),  # ts, seconds
+            st.sampled_from(["view", "click", "cart", "purchase"]),
+        ),
+        min_size=1,
+        max_size=60,
+    ),
+    batch_cuts=st.lists(st.integers(min_value=0, max_value=59), max_size=4),
+    chunk_cuts=st.lists(st.integers(min_value=0, max_value=59), max_size=3),
+)
+@settings(max_examples=60, deadline=None)
+def test_user_statistics_fold_matches_one_shot_groupby(rows, batch_cuts, chunk_cuts):
+    """The NoTimeout user-statistics fold, fed micro-batches cut at random
+    points and each key's rows cut again into random Arrow chunks (plus an
+    empty one), ends at the one-shot pandas groupby per user."""
+    events = pd.DataFrame(rows, columns=["user_id", "event_id", "ts_s", "event_type"])
+    events["ts"] = pd.to_datetime(events["ts_s"], unit="s")
+    handler = make_ttl_handler(NO_TTL)
+    states, last = {}, {}
+    for batch in _cut(events, batch_cuts):
+        for user_id, group in batch.groupby("user_id"):
+            chunks = [*_cut(group, chunk_cuts), group.iloc[:0]]
+            state = states.setdefault(user_id, FakeGroupState())
+            [last[user_id]] = handler((user_id,), iter(chunks), state)
+
+    got = pd.concat(last.values()).sort_values("user_id")
+    want = (
+        events.groupby("user_id")
+        .agg(
+            total_visits=("event_id", "size"),
+            first_event_id=("event_id", "min"),
+            last_event_id=("event_id", "max"),
+            n_event_types=("event_type", "nunique"),
+            first_ts_us=("ts_s", "min"),
+            last_ts_us=("ts_s", "max"),
+        )
+        .reset_index()
+    )
+    want[["first_ts_us", "last_ts_us"]] *= 1_000_000
+    assert got.to_dict("records") == want.to_dict("records")

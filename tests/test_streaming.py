@@ -145,24 +145,15 @@ def test_left_outer_stream_join_contains_inner(spark, sf_dir):
             assert r["click_id"] not in inner_clicks, r
 
 
-def test_state_parts_env_overrides_call_site_pin(spark, monkeypatch):
+def test_state_parts_env_overrides_call_site_pin(monkeypatch):
     """SSPS_STREAM_STATE_PARTS must WIN over explicit call-site pins
     (round-9 verdict #7): the pins are local-bench store-commit tunings,
     and a cluster deployment sizes state partitioning to its volume via
     the env without editing call sites."""
-    from spark_state_provider_spark.operators.streaming_queries import (
-        _streaming_session,
-    )
-
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
     monkeypatch.setenv("SSPS_STREAM_STATE_PARTS", "12")
-    with _streaming_session(spark, state_parts=4):
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "12"
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+    assert harness.state_partitions("local[4]", 4, pin=4) == 12
     monkeypatch.delenv("SSPS_STREAM_STATE_PARTS")
-    with _streaming_session(spark, state_parts=4):
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+    assert harness.state_partitions("local[4]", 4, pin=4) == 4
 
 
 @pytest.mark.parametrize(
@@ -175,29 +166,102 @@ def test_state_parts_env_overrides_call_site_pin(spark, monkeypatch):
         ("yarn", 6, 2, 6),
     ],
 )
-def test_state_parts_default_is_one_task_wave(
-    spark, monkeypatch, master, cores, cpus, want
-):
+def test_state_parts_default_is_one_task_wave(monkeypatch, master, cores, cpus, want):
     """Unpinned, a streaming run gets min(cores, local CPUs, max(8,
     cores // 2)) state partitions, so a small micro-batch runs one wave of
-    Python-worker tasks; the caller's partition count comes back
-    afterwards."""
+    Python-worker tasks."""
     import os
 
-    from pyspark import SparkContext
+    monkeypatch.delenv("SSPS_STREAM_STATE_PARTS", raising=False)
+    monkeypatch.setattr(os, "cpu_count", lambda: cpus)
+    assert harness.state_partitions(master, cores) == want
 
-    from spark_state_provider_spark.operators.streaming_queries import (
-        _streaming_session,
+
+def _user_counts(spark, sf_dir):
+    """A small stateful stream: per-user counts over two micro-batches."""
+    return stream_events(spark, sf_dir, 2).groupBy("user_id").count()
+
+
+def test_drain_sizes_state_and_leaves_caller_conf(spark, sf_dir, monkeypatch):
+    """An unpinned run starts with the rule's state partitions while the
+    caller's own shuffle partitions stay in place during and after it."""
+    monkeypatch.delenv("SSPS_STREAM_STATE_PARTS", raising=False)
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    sc = spark.sparkContext
+    want = harness.state_partitions(sc.master, sc.defaultParallelism)
+    assert str(want) != prev  # otherwise the test cannot tell them apart
+    seen = []
+
+    def record(batch_df, batch_id):
+        seen.append(spark.conf.get(key))
+        batch_df.write.format("noop").mode("overwrite").save()
+
+    q = harness.drain(
+        _user_counts(spark, sf_dir)
+        .writeStream.queryName("drain_sizing")
+        .outputMode("update")
+        .foreachBatch(record)
+    )
+    assert q.lastProgress.stateOperators[0].numShufflePartitions == want
+    assert seen and set(seen) == {prev}
+    assert spark.conf.get(key) == prev
+
+
+def test_drain_runs_rocksdb_and_restores_caller_provider(spark, sf_dir):
+    """A run keeps state in RocksDB even when the caller's session names
+    another provider, and hands the caller's provider back."""
+    from spark_state_provider_spark.session import (
+        HDFS_PROVIDER,
+        STATE_STORE_PROVIDER_CONF,
     )
 
+    prev = spark.conf.get(STATE_STORE_PROVIDER_CONF)
+    spark.conf.set(STATE_STORE_PROVIDER_CONF, HDFS_PROVIDER)
+    try:
+        q = harness.drain(
+            _user_counts(spark, sf_dir)
+            .writeStream.format("memory")
+            .queryName("drain_provider")
+            .outputMode("update")
+        )
+        metrics = q.lastProgress.stateOperators[0].customMetrics
+        assert any(k.startswith("rocksdb") for k in metrics), sorted(metrics)
+        assert spark.conf.get(STATE_STORE_PROVIDER_CONF) == HDFS_PROVIDER
+    finally:
+        spark.conf.set(STATE_STORE_PROVIDER_CONF, prev)
+
+
+def test_concurrent_drains_keep_their_pins_and_caller_conf(spark, sf_dir, monkeypatch):
+    """Drains started together from more threads than cores each start with
+    their own pin, and the caller's shuffle partitions survive them all."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
     monkeypatch.delenv("SSPS_STREAM_STATE_PARTS", raising=False)
-    monkeypatch.setattr(spark.sparkContext, "master", master)
-    monkeypatch.setattr(SparkContext, "defaultParallelism", property(lambda _: cores))
-    monkeypatch.setattr(os, "cpu_count", lambda: cpus)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    with _streaming_session(spark):
-        assert spark.conf.get("spark.sql.shuffle.partitions") == str(want)
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    pins = list(range(1, 7))
+
+    def run(pin):
+        q = harness.drain(
+            _user_counts(spark, sf_dir)
+            .writeStream.format("memory")
+            .queryName(f"drain_pin_{pin}")
+            .outputMode("update"),
+            state_parts=pin,
+        )
+        return q.lastProgress.stateOperators[0].numShufflePartitions
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(max_workers=len(pins)) as pool:
+            got = list(pool.map(run, pins, timeout=300))
+    finally:
+        sys.setswitchinterval(interval)
+    assert got == pins
+    assert spark.conf.get(key) == prev
 
 
 def _events_writer(spark, sf_dir, name, fn):
@@ -233,14 +297,23 @@ def test_drain_surfaces_stream_failure(spark, sf_dir):
 
 def test_drain_is_the_only_streaming_run_path():
     """Every AvailableNow run goes through ``harness.drain``: no other module
-    of the package waits on a streaming query itself."""
+    of the package waits on a streaming query itself, and none but the
+    session builder sets a run's state store or state partitions."""
     import pathlib
 
     own = pathlib.Path(harness.__file__)
     pkg = own.parents[1]
-    offenders = [
-        str(p.relative_to(pkg))
+    sources = {
+        str(p.relative_to(pkg)): p.read_text()
         for p in sorted(pkg.rglob("*.py"))
-        if p != own and "awaitTermination(" in p.read_text()
+        if p != own
+    }
+    waits = [name for name, text in sources.items() if "awaitTermination(" in text]
+    assert waits == []
+    settings = [
+        name
+        for name, text in sources.items()
+        if name != "session.py"
+        and ("STATE_STORE_PROVIDER_CONF" in text or "SSPS_STREAM_STATE_PARTS" in text)
     ]
-    assert offenders == []
+    assert settings == []
