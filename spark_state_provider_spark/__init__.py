@@ -24,21 +24,11 @@ idiomatic PySpark engine:
   assertions) used by tests and the bench harness.
 
 Everything here is built only on the public Apache Spark API.
+
+The package itself imports nothing: Spark runs ``worker_daemon`` as
+``python -m`` under it, and that module must cut Spark's zips off
+``sys.path`` before pyspark is first imported. Import from the modules
+(``from spark_state_provider_spark.session import get_spark``).
 """
-
-from spark_state_provider_spark.session import (
-    use_rocksdb_state_store,
-    use_hdfs_state_store,
-    get_spark,
-)
-from spark_state_provider_spark.tables import load_tables, register_views
-
-__all__ = [
-    "use_rocksdb_state_store",
-    "use_hdfs_state_store",
-    "get_spark",
-    "load_tables",
-    "register_views",
-]
 
 __version__ = "0.1.0"

@@ -22,7 +22,12 @@ names are kept so reference users can switch with a one-line change.
 from __future__ import annotations
 
 import os
+import re
+import sys
+import zipfile
 
+import pyspark
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 from spark_state_provider_spark.scratch import scratch_base as _scratch_base
@@ -49,6 +54,41 @@ _ROCKSDB_TUNING = {
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
     "spark.sql.streaming.stateStore.rocksdb.compactOnCommit": "false",
 }
+
+
+# Python workers start through this module when it is safe (see
+# python_worker_conf); the package's parent dir goes on the workers' path
+# so ``python -m`` finds it from any working directory.
+WORKER_DAEMON = "spark_state_provider_spark.worker_daemon"
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _zip_pyspark_version() -> str | None:
+    """``__version__`` of the ``pyspark.zip`` Spark puts on workers' path."""
+    path = os.path.join(_find_spark_home(), "python", "lib", "pyspark.zip")
+    try:
+        with zipfile.ZipFile(path) as z:
+            src = z.read("pyspark/version.py").decode()
+    except (OSError, KeyError, zipfile.BadZipFile):
+        return None
+    m = re.search(r"""__version__[^=]*=\s*['"]([^'"]+)['"]""", src)
+    return m.group(1) if m else None
+
+
+def python_worker_conf(python: str = sys.executable) -> dict[str, str]:
+    """Confs for the Python workers: they run ``python`` and, when that is
+    the driver's interpreter and its installed pyspark (a real directory,
+    not an archive) has the zip's version, start through ``WORKER_DAEMON``
+    so they import that pyspark instead of Spark's zipped copy."""
+    conf = {"spark.pyspark.python": python}
+    if (
+        python == sys.executable
+        and os.path.isfile(pyspark.__file__)
+        and _zip_pyspark_version() == pyspark.__version__
+    ):
+        conf["spark.python.daemon.module"] = WORKER_DAEMON
+        conf["spark.executorEnv.PYTHONPATH"] = _PACKAGE_PARENT
+    return conf
 
 
 def use_rocksdb_state_store(builder: SparkSession.Builder) -> SparkSession.Builder:
@@ -146,7 +186,9 @@ def get_spark(
     Defaults chosen for the 100 TB design point (and safe locally):
     AQE on (runtime re-plan, skew-join splitting, partition coalescing),
     broadcast joins enabled, Arrow for any pandas exchange, UTC session
-    timezone (matches the DuckDB oracle), RocksDB state store.
+    timezone (matches the DuckDB oracle), RocksDB state store. Python
+    workers run the driver's interpreter and, where that is safe, import
+    its installed pyspark rather than Spark's zip (:func:`python_worker_conf`).
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     master = master or f"local[{cpus}]"
@@ -187,6 +229,13 @@ def get_spark(
             "spark.local.dir", os.environ["SSPS_LOCAL_DIR"]
         )
     builder = use_rocksdb_state_store(builder)
-    for k, v in (extra_conf or {}).items():
+    extra_conf = extra_conf or {}
+    python = extra_conf.get("spark.pyspark.python", sys.executable)
+    for k, v in {**python_worker_conf(python), **extra_conf}.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    # pyspark takes the workers' interpreter from $PYSPARK_PYTHON alone;
+    # honour the conf on contexts that carry it.
+    sc = spark.sparkContext
+    sc.pythonExec = sc.getConf().get("spark.pyspark.python", sc.pythonExec)
+    return spark

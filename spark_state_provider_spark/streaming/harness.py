@@ -51,8 +51,9 @@ def state_partitions(master: str, cores: int, pin: int | None = None) -> int:
     ``cores`` default parallelism.
 
     At most one per core, so a small micro-batch runs as ONE task wave:
-    each Python-worker task pays ~0.3 s CPU on Python 3.11 (pyspark's
-    worker calls importlib.invalidate_caches(); gh-103200). A local master
+    every task has a fixed cost (a state-store load and commit per
+    partition, and for Python state a worker round trip), and one wave
+    measured 25-30% faster on JVM-only streams too. A local master
     is capped at real CPUs; max(8, cores // 2) stays the ceiling (local[32]:
     16 partitions beat 32, store commits dominate). ``pin`` sizes
     store-heavy topologies (stream-stream joins keep four stores per
