@@ -70,65 +70,14 @@ def entry(spark: SparkSession) -> DataFrame:
 # The tiers are COMPUTED at import time from the CORRECTNESS_r*.json files
 # the driver commits into the repo: names whose green row already exists
 # rotate behind the window automatically, freed slots fill with the
-# longest-waiting unverified names (oracle-bearing first — they earn hard
+# unverified names in name order (oracle-bearing first — they earn hard
 # hash checks; oracle-less last — they only earn rows-only records).
-# _PRIORITY_HINT pins this round's hand-picked ordering preference (e.g.
-# TPC-H composites ahead of alphabetical order); it degrades gracefully:
-# once those names are green in a later round they drop out on their own.
 #
 # Internal code (tests, bench, scripts) always uses canonical names via
 # registry.get(); the prefixes exist only on this driver-facing surface.
 # ---------------------------------------------------------------------------
 
 _WINDOW_CAP = 50
-
-# Hand-picked front of this round's window. Round 4: the 50 names that
-# were pending when the round opened (everything not yet green in
-# CORRECTNESS_r1–r3 except q97/q98/q99) — pinned EXPLICITLY so the
-# round-4 registry additions (q122–q142), which sort ahead of q5x–q9x,
-# cannot displace queries that have already waited two rounds. The 15
-# additions plus q97/q98/q99 are round 5's window (18 names, well under
-# the cap, so round 5 can also re-serve anything round 4 leaves red).
-_PRIORITY_HINT = [
-    # Round 5's window, pinned explicitly (oldest-first: the three q9x
-    # names sort lexicographically last and would otherwise be displaced
-    # by q1xx additions): q97–q99 + q122–q174. These drop out of the hint
-    # on their own once CORRECTNESS_r05 lands.
-    "q97_stream_rolling_anomaly", "q98_join_size_estimate",
-    "q99_embedding_drift",
-    "q122_bigram_rarity", "q123_text_normalize", "q124_curriculum_order",
-    "q125_temperature_mix", "q126_maxsim_late_interaction",
-    "q133_dup_graph_triangles", "q134_source_gini", "q135_k_anonymity",
-    "q136_containment_dedup", "q137_cogroup_reconcile",
-    "q138_window_group_limit", "q139_python_datasource_write",
-    "q140_udtf_dynamic_schema", "q141_observation_metrics",
-    "q142_policy_masking", "q143_corrupt_record_handling",
-    "q144_sketch_rollup", "q145_variant_type", "q146_xml_ingest",
-    "q147_collation_ci_distinct", "q148_sql_scripting",
-    "q149_stream_corrupt_quarantine", "q150_hamming_topk",
-    "q151_bitmap_distinct_rollup", "q152_label_propagation",
-    "q153_systematic_weighted_sample", "q154_corpus_simpson_diversity",
-    "q155_stream_python_sink", "q156_ohlc_downsample",
-    "q157_rate_source_checksum", "q158_state_change_feed",
-    "q159_neyman_allocation", "q160_stream_fanout_consistency",
-    "q161_dynamic_gap_sessions", "q162_partition_evolution",
-    "q163_late_data_accounting", "q164_good_turing_counts",
-    "q165_image_phash", "q166_stream_restart_exactly_once",
-    "q167_sql_scalar_udf", "q168_file_metadata_lineage",
-    "q169_parameterized_identifier", "q170_stream_ivf_maintenance",
-    "q171_collocation_lift", "q172_chained_stateful",
-    "q173_sql_table_function", "q174_kcore_pruning",
-    # --- ROUND 6's front of the line (beyond this round's 50-cap, so no
-    # effect now): the round-4b flagships that spill past round 5's
-    # window. Pinned BEFORE any round-5 registry addition lands, per the
-    # round-4 verdict — new qN adds must queue BEHIND these.
-    "q175_state_export_kv", "q176_null_semantics",
-    "q177_ddl_column_defaults", "q178_merkle_tree_integrity",
-    "q179_stream_output_modes", "q180_packing_efficiency_curve",
-    "q181_session_timeout_state", "q182_stream_stream_full_outer",
-    "q183_count_min_sketch", "q184_stream_merkle_maintenance",
-    "q185_bloom_filter_explicit", "q186_skyline_pareto",
-]
 
 _PREFIX_RE = __import__("re").compile(r"^(y_|z\d+_)")
 
@@ -197,13 +146,8 @@ def _compute_tiers(history_dir: str | None = None) -> dict[str, str]:
         return not (n in rows_only_served and n not in oracles)
 
     pending = [n for n in all_names if unverified(n)]
-    hint = [n for n in _PRIORITY_HINT if n in pending]
-    rest = sorted(set(pending) - set(hint))
-    ordered = (
-        hint
-        + [n for n in rest if n in oracles]
-        + [n for n in rest if n not in oracles]
-    )
+    # oracle-bearing first; the stable sort keeps name order within each
+    ordered = sorted(pending, key=lambda n: n not in oracles)
     priority = set(ordered[:_WINDOW_CAP])
     # RE-CERTIFICATION FILL: once the backlog is smaller than the window,
     # spare slots re-serve already-green queries — least recently verified

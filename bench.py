@@ -25,265 +25,12 @@ from spark_state_provider_spark.streaming.sources import split_events_dir
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Representative headline set: scan, filter, joins (broadcast/shuffle/asof),
-# aggs (hash/distinct/rollup), windows (rank/frame/topk), stateful batch
-# twins, streaming state ops, and every LLM-pipeline family.
-HEADLINE = [
-    "q01_pruned_scan",
-    "q04_filter",
-    "q05_broadcast_join",
-    "q06_shuffle_join",
-    "q08b_asof_join",
-    "q09_hash_agg",
-    "q10_count_distinct",
-    "q11_rollup",
-    "q12_window_rank",
-    "q13_window_frame",
-    "q14_topk",
-    "q18_math",
-    "q21_tumbling_window",
-    "q22_session_window",
-    "q24_user_statistics",
-    "q27_pandas_udf",
-    "q21s_stream_window",
-    "q24s_stream_user_stats",
-    "q28b_minhash_lsh",
-    "q28c_simhash",
-    "q80_cluster_representative",
-    "q81_boilerplate_strip",
-    "q29_knn_brute",
-    "q29b_ann_lsh",
-    "q29d_ivf_ann",
-    "q29f_pq_ann",
-    "q91_multiprobe_lsh",
-    "q33_tpch_q3",
-    "q33b_tpch_q10",
-    "q33c_tpch_q18",
-    "q34_tpch_q5",
-    "q30c_token_freq",
-    "q87_rare_ngram_ratio",
-    "q31_multimodal_meta",
-    "q38_sequence_packing",
-    "q41_repetition_stats",
-    "q83_global_shuffle",
-    "q86_feature_hash_embed",
-    "q49_bm25",
-    "q50_kmeans",
-    "q51_inverted_index",
-    "q52_unigram_lm",
-    "q53_histogram",
-    "q54_fuzzy_join",
-    "q55_resample_ffill",
-    "q57_funnel",
-    "q58_range_frame",
-    "q59_table_fingerprint",
-    "q60_user_similarity",
-    "q61_event_transitions",
-    "q63_tpch_q1",
-    "q63b_tpch_q8",
-    "q63c_tpch_q9",
-    "q63d_tpch_q19",
-    "q63e_tpch_q21",
-    "q62_cohort_retention",
-    "q64_table_profile",
-    "q65_schema_evolution",
-    "q67_incremental_agg",
-    "q69_correlation",
-    # TPC-H partsupp family (tpch_suite.py); q33d/q33e and the q45*
-    # TPC-H shapes are registered but not benched
-    "q73_tpch_q2",
-    "q73b_tpch_q11",
-    "q73c_tpch_q16",
-    "q73d_tpch_q20",
-    "q73e_tpch_q22",
-    # graph + scale patterns (round 2)
-    "q74_pagerank",
-    "q75_heavy_hitters",
-    "q76_dynamic_partition_pruning",
-    "q77_doc_chunking",
-    "q78_incremental_dedup",
-    "q92_stream_incremental_dedup",
-    "q79_salted_join",
-    # composed/maintenance ops (round 2, second batch)
-    "q88_rollup_hierarchy",
-    "q89_small_file_compaction",
-    "q90_corpus_pipeline",
-    # round 2, third batch: runtime row pruning, anomaly monitor,
-    # quality-constraint audit, streaming hot-key detection
-    "q93_runtime_bloom_join",
-    "q94_rolling_anomaly",
-    "q95_data_quality_audit",
-    "q96_stream_heavy_hitters",
-    "q97_stream_rolling_anomaly",
-    "q98_join_size_estimate",
-    "q99_embedding_drift",
-    "q100_equidepth_histogram",
-    "q101_negative_sampling",
-    "q102_aqe_skew_join",
-    "q103_stream_corpus_pipeline",
-    "q104_cascade_delete",
-    "q105_corpus_diff",
-    "q106_media_similarity",
-    "q107_trend_slope",
-    "q108_stream_leaderboard",
-    "q109_null_skew_outer_join",
-    "q110_bfs_distances",
-    # round-3 additions: span-level dedup, semantic dedup, governance
-    "q111_span_dedup",
-    "q112_semdedup",
-    "q113_source_overlap",
-    "q114_stream_span_dedup",
-    # Spark 4 SQL surface
-    "q115_recursive_cte",
-    "q116_lateral_topk",
-    "q117_pipe_syntax",
-    "q118_session_variables",
-    "q119_bpe_merge_candidates",
-    "q120_quality_funnel",
-    "q121_dataset_card",
-    # round-4 additions: bigram LM scoring, normalization pass,
-    # curriculum/mixture planning, late-interaction retrieval, dup-graph
-    # triangles, language-purity audit
-    "q122_bigram_rarity",
-    "q123_text_normalize",
-    "q124_curriculum_order",
-    "q125_temperature_mix",
-    "q126_maxsim_late_interaction",
-    "q133_dup_graph_triangles",
-    "q134_source_gini",
-    "q135_k_anonymity",
-    "q136_containment_dedup",
-    "q137_cogroup_reconcile",
-    "q138_window_group_limit",
-    "q139_python_datasource_write",
-    "q140_udtf_dynamic_schema",
-    "q141_observation_metrics",
-    "q142_policy_masking",
-    "q143_corrupt_record_handling",
-    "q144_sketch_rollup",
-    "q145_variant_type",
-    "q146_xml_ingest",
-    "q147_collation_ci_distinct",
-    "q148_sql_scripting",
-    "q149_stream_corrupt_quarantine",
-    # round-4 second batch: binary ANN tier, bitmap exact-distinct,
-    # community detection, PPS sampling, diversity, stream SPI sink,
-    # OHLC downsample, rate source, state change feed
-    "q150_hamming_topk",
-    "q151_bitmap_distinct_rollup",
-    "q152_label_propagation",
-    "q153_systematic_weighted_sample",
-    "q154_corpus_simpson_diversity",
-    "q155_stream_python_sink",
-    "q156_ohlc_downsample",
-    "q157_rate_source_checksum",
-    "q158_state_change_feed",
-    # round-4 third batch: exact allocation, fan-out sinks, dynamic
-    # sessions, layout evolution, late data, Good-Turing, pixel phash,
-    # restart, SQL UDF, parameterized SQL, streaming IVF, collocations
-    "q159_neyman_allocation",
-    "q160_stream_fanout_consistency",
-    "q161_dynamic_gap_sessions",
-    "q162_partition_evolution",
-    "q163_late_data_accounting",
-    "q164_good_turing_counts",
-    "q165_image_phash",
-    "q166_stream_restart_exactly_once",
-    "q167_sql_scalar_udf",
-    "q168_file_metadata_lineage",
-    "q169_parameterized_identifier",
-    "q170_stream_ivf_maintenance",
-    "q171_collocation_lift",
-    "q172_chained_stateful",
-    "q173_sql_table_function",
-    "q174_kcore_pruning",
-    "q175_state_export_kv",
-    "q176_null_semantics",
-    "q177_ddl_column_defaults",
-    "q178_merkle_tree_integrity",
-    "q179_stream_output_modes",
-    "q180_packing_efficiency_curve",
-    "q181_session_timeout_state",
-    "q182_stream_stream_full_outer",
-    "q183_count_min_sketch",
-    "q184_stream_merkle_maintenance",
-    "q185_bloom_filter_explicit",
-    "q186_skyline_pareto",
-    # round-5 additions: curation classifiers/stats, streaming quota,
-    # hard negatives, order-statistics + SQL-surface parity, EWMA fold
-    "q187_quality_classifier",
-    "q188_char_trigram_lm",
-    "q189_stream_domain_quota",
-    "q190_winsorized_stats",
-    "q191_domain_cap",
-    "q192_tokenizer_fertility",
-    "q193_hard_negatives",
-    "q194_listagg",
-    "q195_median_percentiles",
-    "q196_ignore_nulls",
-    "q197_ewma",
-    "q198_langid_confusion",
-    "q199_group_by_all",
-    "q200_ann_recall_eval",
-    "q201_agg_filter_clause",
-    "q202_image_resize",
-    "q203_stream_ewma",
-    "q204_asof_nearest",
-    "q205_union_schema_drift",
-    "q206_lsh_dedup_recall",
-    "q207_twap",
-    "q208_try_arithmetic",
-    "q209_grouping_id",
-    "q210_self_repetition",
-    "q211_profile_lang_id",
-    "q212_cusum_drift",
-    "q213_golden_record",
-    "q214_knn_label_eval",
-    "q215_proximity_search",
-    "q216_link_prediction",
-    "q217_stream_cusum",
-    # round-6 additions: the composed curation funnel over the round-5
-    # gates (lang QA -> LM filter -> repetition -> classifier -> dedup)
-    # and the composed IVF-PQ retrieval (routing x code-scan x rerank)
-    "q218_curation_pipeline",
-    "q219_ivfpq_ann",
-    "q220_stream_curation_funnel",
-    # round-6 second tranche: DSIR data selection, the Gopher rule
-    # battery, embedding-norm QA, MinHash estimator calibration
-    "q221_dsir_importance",
-    "q222_gopher_rules",
-    "q223_embedding_norm_qa",
-    "q224_minhash_calibration",
-    # round-7 additions: hybrid retrieval fusion, suffix-anchor
-    # exact-substring LCS dedup, packing-aware contamination
-    "q225_hybrid_rrf_fusion",
-    "q226_substring_lcs_dedup",
-    "q227_packing_contamination",
-    "q228_retrieval_metrics",
-    "q229_maxp_chunk_retrieval",
-    "q230_stream_substring_dedup",
-    # round-8 additions: the dedup OUTPUT side — span-removal corpus
-    # rewrite (batch + at-ingest twin) and the per-family impact report
-    "q231_span_removal_rewrite",
-    "q232_dedup_impact_report",
-    "q233_stream_span_removal",
-    # round-8 second tranche: decontamination rewrite + residual audit
-    "q234_decontamination_rewrite",
-    "q235_rewrite_residual_audit",
-    "q236_stream_decontamination",
-    "q237_iterative_span_removal",
-    # round-9 additions: embedding-space decontamination (batch + ingest
-    # twin), cross-snapshot incremental rewrite ledger, span provenance
-    "q238_semantic_contamination",
-    "q239_incremental_decontamination",
-    "q240_span_removal_provenance",
-    "q241_stream_semantic_decontamination",
-    # round-9 second tranche: combined contamination verdicts and the
-    # per-partner removal-attribution leaderboard
-    "q242_contamination_verdicts",
-    "q243_partner_attribution",
-    "q244_benchmark_leak_report",
-]
+operators.load_all()
+
+# The headline set: every query registered with the `bench` family, in
+# name order (scan, filter, joins, aggs, windows, stateful batch twins,
+# streaming state ops, and every LLM-pipeline family).
+HEADLINE = registry.family("bench")
 
 
 # --- DRIFT TELEMETRY (round-7 verdict #2): the graded capture runs on
@@ -324,7 +71,6 @@ def open_session(
     app_name: str, extra_conf: dict[str, str] | None = None
 ) -> SparkSession:
     """The engine's tuned session, warmed and with the replay slices built."""
-    operators.load_all()
     spark = get_spark(app_name=app_name, extra_conf=extra_conf)
     spark.sparkContext.setLogLevel("ERROR")
     # warm the JVM/codegen path once with a trivial action

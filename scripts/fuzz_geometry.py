@@ -4,7 +4,7 @@ matrix. The pytest fixtures prove each family on the tuned session; this
 script re-proves it where partition counts, sort boundaries, and
 tie-break exposure are maximally different.
 
-Usage: python scripts/fuzz_geometry.py [multibyte|text|nulljoin] [seeds...]
+Usage: python scripts/fuzz_geometry.py [multibyte|text] [seeds...]
 """
 
 from __future__ import annotations
@@ -18,6 +18,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession
 
 from spark_state_provider_spark import operators
+from spark_state_provider_spark.operators import registry
 
 operators.load_all()
 
@@ -41,11 +42,12 @@ def main() -> int:
 
     family = sys.argv[1] if len(sys.argv) > 1 else "multibyte"
     seeds = [int(a) for a in sys.argv[2:]] or [7, 42, 1337]
-    builders = {
-        "multibyte": (fz._fuzz_multibyte_docs, fz._MULTIBYTE_FAMILY),
-        "text": (fz._fuzz_docs, fz._TEXT_FAMILY),
-    }
-    build, names = builders[family]
+    builders = {"multibyte": fz._fuzz_multibyte_docs, "text": fz._fuzz_docs}
+    if family not in builders:
+        print(f"family must be one of {sorted(builders)}", file=sys.stderr)
+        return 2
+    build = builders[family]
+    names = registry.family(family)
     spark = adversarial_session()
     spark.sparkContext.setLogLevel("ERROR")
     n_ok = n_fail = 0

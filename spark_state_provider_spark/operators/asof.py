@@ -139,6 +139,7 @@ def _register_q204() -> None:
                END AS matched_dir
         FROM nav WHERE is_c = 1
         """,
+        families=("events", "bench"),
     )
     def q204_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
         """Nearest-purchase gap (µs-exact) per click within ±{_NEAREST_TOL_US}us

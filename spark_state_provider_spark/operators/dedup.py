@@ -50,6 +50,7 @@ _SALTS = [f"s{i:02d}" for i in range(N_SALTS)]
     FROM documents
     GROUP BY text
     """,
+    families=("text", "multibyte"),
 )
 def q28_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact text dedup via hash groupBy (deterministic representative)."""
@@ -156,6 +157,7 @@ def _pairs_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN sizes sb ON sb.doc_id = i.id_b
     WHERE CAST(i.n_inter AS DOUBLE) / (sa.n + sb.n - i.n_inter) >= {JACCARD_THRESHOLD}
     """,
+    families=("text", "multibyte", "bench"),
 )
 def q28b_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH near-dup pairs with exact-Jaccard verification.
@@ -336,6 +338,7 @@ CONTAINMENT_THRESHOLD = 0.8
     WHERE CAST(i.n_inter AS DOUBLE) / least(sa.n, sb.n)
           >= {CONTAINMENT_THRESHOLD}
     """,
+    families=("text", "multibyte", "bench"),
 )
 def q136_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Candidate pairs whose smaller shingle set is ≥{CONTAINMENT_THRESHOLD}
@@ -461,7 +464,11 @@ def _portable_simhash64_sql() -> str:
     """
 
 
-@register("q28c_simhash", oracle=_portable_simhash64_sql())
+@register(
+    "q28c_simhash",
+    oracle=_portable_simhash64_sql(),
+    families=("text", "multibyte", "bench"),
+)
 def q28c_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """64-bit SimHash over distinct tokens — near-dup docs differ in few
     bits (Hamming). Tested structurally (planted-dup proximity) in
@@ -531,7 +538,11 @@ def _portable_simhash_sql() -> str:
     """
 
 
-@register("q28c2_simhash_portable", oracle=_portable_simhash_sql())
+@register(
+    "q28c2_simhash_portable",
+    oracle=_portable_simhash_sql(),
+    families=("text", "multibyte"),
+)
 def q28c2_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """16-bit md5-nibble SimHash — same algorithm as q28c but built from
     portable primitives so the DuckDB oracle checks it bit-for-bit."""
@@ -584,6 +595,7 @@ def q28c2_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN sizes sa ON sa.doc_id = p.id_a
     JOIN sizes sb ON sb.doc_id = p.id_b
     """,
+    families=("text", "multibyte"),
 )
 def q28d_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Word-trigram Jaccard for each (doc_id, doc_id+1) pair with id < 100."""
@@ -787,6 +799,7 @@ _DUCK_CC_CTES = f"""
 @register(
     "q28e_dedup_clusters",
     oracle=_DUCK_CC_CTES + "\n    SELECT doc_id, cluster_id FROM clusters",
+    families=("text", "multibyte"),
 )
 def q28e_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the MinHash-LSH near-dup pair graph:
@@ -876,7 +889,7 @@ def _q80_oracle() -> str:
     )
 
 
-@register("q80_cluster_representative", oracle=_q80_oracle())
+@register("q80_cluster_representative", oracle=_q80_oracle(), families=("bench",))
 def q80_cluster_representative(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pick the highest-quality member of each near-dup cluster (ties →
     smallest doc_id); report how many copies it supersedes.
@@ -941,6 +954,7 @@ _FUZZY_MAX_DIST = 24
     FROM b a JOIN b c ON a.blk = c.blk AND a.doc_id < c.doc_id
     WHERE levenshtein(a.p, c.p) <= {_FUZZY_MAX_DIST}
     """,
+    families=("nulljoin", "bench"),
 )
 def q54_fuzzy_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs by edit distance ≤ {_FUZZY_MAX_DIST} over the first
@@ -1070,7 +1084,7 @@ _INC_DEDUP_ORACLE = f"""
     """
 
 
-@register("q78_incremental_dedup", oracle=_INC_DEDUP_ORACLE)
+@register("q78_incremental_dedup", oracle=_INC_DEDUP_ORACLE, families=("bench",))
 def q78_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs between an incoming batch and the existing corpus
     (same shingle→minhash→band pipeline as q28b, but the bucket join is
@@ -1179,6 +1193,7 @@ _BOILER_T = 2  # a segment occurring >= T times corpus-wide is boilerplate
     FROM flagged
     GROUP BY doc_id
     """,
+    families=("text", "multibyte", "bench"),
 )
 def q81_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Strip every {_BOILER_W}-token segment that repeats corpus-wide and
@@ -1262,6 +1277,7 @@ _SPLIT_PREFIX = "substr(md5(CAST(split_key AS VARCHAR)), 1, 1)"
                 ELSE 'test' END AS split
     FROM keyed
     """,
+    families=(),
 )
 def q85_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Assign every document to train/val/test by hashing its near-dup
@@ -1353,6 +1369,7 @@ def _register_q111() -> None:
         FROM c
         GROUP BY doc_id
         """,
+        families=("multibyte", "bench"),
     )
     def q111_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         """Per-doc duplicated-span profile: of the doc's {SPAN_W}-token
@@ -1431,6 +1448,7 @@ def _register_q113() -> None:
         JOIN src pb ON pb.doc_id = vp.id_b
         GROUP BY least(pa.source, pb.source), greatest(pa.source, pb.source)
         """,
+        families=("bench",),
     )
     def q113_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         """Near-dup pair counts per (source, source) pair — which feeds
@@ -1663,6 +1681,7 @@ def _register_q206() -> None:
                   ON t.id_a = l.id_a AND t.id_b = l.id_b) AS DOUBLE)
               / NULLIF((SELECT count(*) FROM truth), 0) AS recall
         """,
+        families=("text", "multibyte", "bench"),
     )
     def q206_lsh_dedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         """One-row recall certificate of the banded MinHash-LSH dedup
@@ -1747,6 +1766,7 @@ def _register_q213() -> None:
         FROM labels l JOIN documents d ON d.doc_id = l.doc_id
         GROUP BY l.cluster_id
         """,
+        families=("text", "multibyte", "bench"),
     )
     def q213_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
         """One merged survivor row per near-dup cluster: canonical id,
@@ -1857,6 +1877,7 @@ _CAPTURE_EXPR = (
         FROM g
     )
     """,
+    families=("text", "multibyte", "bench"),
 )
 def q224_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Empirical MinHash calibration: banded candidate pairs grouped by
@@ -1994,6 +2015,7 @@ _SUB_DF_CAP = 50   # anchors in more docs than this are stop-anchors:
     GROUP BY doc_a, doc_b
     HAVING {_SUB_K} + max(run) - 1 >= {_SUB_MIN}
     """,
+    families=("multibyte", "bench"),
 )
 def q226_substring_lcs_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairs of documents sharing an exact substring of ≥ {_SUB_MIN} chars,
@@ -2419,7 +2441,7 @@ def _rewrite_with_intervals(docs: DataFrame, merged: DataFrame) -> DataFrame:
     LEFT JOIN rebuilt r USING (doc_id)
     LEFT JOIN removed rm USING (doc_id)
     """,
-    fuzz=("text", "multibyte"),
+    families=("text", "multibyte", "bench"),
 )
 def q231_span_removal_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The deduplicated corpus itself: every shared substring of ≥
@@ -2587,7 +2609,7 @@ def _register_q235() -> None:
                CAST(count(DISTINCT doc_b) AS BIGINT) AS n_docs_needing_pass2
         FROM resid
         """,
-        fuzz=("text", "multibyte"),
+        families=("text", "multibyte", "bench"),
     )
     def q235_rewrite_residual_audit(
         spark: SparkSession, sf_dir: str
@@ -2749,7 +2771,7 @@ def _register_q237() -> None:
         LEFT JOIN rebuilt_p2 r2 USING (doc_id)
         LEFT JOIN removed_p2 rm2 USING (doc_id)
         """,
-        fuzz=("text", "multibyte"),
+        families=("text", "multibyte", "bench"),
     )
     def q237_iterative_span_removal(
         spark: SparkSession, sf_dir: str
@@ -2851,7 +2873,7 @@ def _register_q240() -> None:
         UNION ALL
         {_prov_sql("_p2", 2)}
         """,
-        fuzz=("text", "multibyte"),
+        families=("text", "multibyte", "bench"),
     )
     def q240_span_removal_provenance(
         spark: SparkSession, sf_dir: str
@@ -2902,7 +2924,7 @@ def _register_q243() -> None:
         FROM ({prov_sql})
         GROUP BY partner, pass_no
         """,
-        fuzz=("text", "multibyte"),
+        families=("text", "multibyte", "bench"),
     )
     def q243_partner_attribution(
         spark: SparkSession, sf_dir: str

@@ -65,7 +65,7 @@ SELECT id AS node_id, rank AS rank_scaled FROM r2
 """
 
 
-@register("q74_pagerank", oracle=_PAGERANK_ORACLE)
+@register("q74_pagerank", oracle=_PAGERANK_ORACLE, families=("bench",))
 def q74_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Integer-exact PageRank (2 supersteps, damping 0.85) over the
     bidirectional customer⟷supplier graph derived from orders⋈lineitem.
@@ -165,6 +165,7 @@ _BFS_BROADCAST_MAX = 2_000_000
     SELECT id, CAST(min(d) AS BIGINT) AS dist
     FROM reach GROUP BY id
     """,
+    families=("bench",),
 )
 def q110_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shortest-path distance (≤ {_BFS_MAX} hops) from the source
@@ -292,7 +293,7 @@ def _triangle_oracle() -> str:
     """
 
 
-@register("q133_dup_graph_triangles", oracle=_triangle_oracle())
+@register("q133_dup_graph_triangles", oracle=_triangle_oracle(), families=("bench",))
 def q133_dup_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Enumerate triangles (id_a < id_b < id_c) in the verified near-dup
     pair graph.
@@ -378,7 +379,7 @@ def _lpa_oracle() -> str:
     """
 
 
-@register("q152_label_propagation", oracle=_lpa_oracle())
+@register("q152_label_propagation", oracle=_lpa_oracle(), families=("bench",))
 def q152_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Min-label propagation, {_LPA_ITERS} supersteps, over the
     customer⟷supplier bipartite graph (same edge derivation as q74).
@@ -505,7 +506,7 @@ def _kcore_oracle() -> str:
     """
 
 
-@register("q174_kcore_pruning", oracle=_kcore_oracle())
+@register("q174_kcore_pruning", oracle=_kcore_oracle(), families=("bench",))
 def q174_kcore_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     """{_KCORE_K}-core after {_KCORE_ROUNDS} pruning rounds over the
     customer⟷supplier graph: surviving nodes with their last-round
@@ -657,7 +658,7 @@ def _rare_pairs_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     return get_or_build(_RARE_PAIRS_CACHE, spark, (sf_dir,), build)
 
 
-@register("q216_link_prediction", oracle=_linkpred_oracle())
+@register("q216_link_prediction", oracle=_linkpred_oracle(), families=("bench",))
 def q216_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Non-edge doc pairs ranked by common-neighbor Jaccard over the
     >={_LINKPRED_MIN_SHARED}-shared-rare-trigram similarity graph\n    (df ≤ {_LINKPRED_DF_CAP} — identical on the testdata, linear-bounded\n    under adversarial duplication).

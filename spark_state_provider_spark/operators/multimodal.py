@@ -148,6 +148,7 @@ def decode_metadata(binary_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
            'fake/deterministic' AS format
     FROM b
     """,
+    families=("bench",),
 )
 def q31_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary payload → mapInPandas decode → typed metadata.
@@ -174,6 +175,7 @@ def q31_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents
     GROUP BY source
     """,
+    families=(),
 )
 def q31b_multimodal_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Asset-store layout stats: bytes per source partition — the query a
@@ -239,6 +241,7 @@ def decode_metadata_arrow(binary_df: DataFrame, id_col: str = "doc_id") -> DataF
            'fake/deterministic' AS format
     FROM b
     """,
+    families=(),
 )
 def q31c_multimodal_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same decode pipeline as q31 through the ``mapInArrow`` API (zero-copy
@@ -306,6 +309,7 @@ _IMG_FORMATS = ("png", "gif", "jpeg")
            END AS format
     FROM documents
     """,
+    families=(),
 )
 def q31e_image_header_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real image-header decode over binary payloads: each doc gets a
@@ -392,6 +396,7 @@ def parse_wav_header(b: bytes) -> dict | None:
                  ELSE 44100 END AS duration_secs
     FROM documents
     """,
+    families=(),
 )
 def q31f_audio_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real audio-container decode: synthesize WAV headers (rate/channels/
@@ -511,6 +516,7 @@ def sample_frames(binary_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                AS fr_checksum
     FROM f
     """,
+    families=(),
 )
 def q31d_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frame sampling over binary payloads (every {FRAME_STRIDE}-th
@@ -590,7 +596,7 @@ _BINSRC_SCHEMA = (
 )
 
 
-@register("q82_binaryfile_source", oracle=_binsrc_oracle())
+@register("q82_binaryfile_source", oracle=_binsrc_oracle(), families=())
 def q82_binaryfile_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Read a directory of media files through the ``binaryFile`` source
     and decode each container's header from the loaded bytes.
@@ -716,7 +722,7 @@ def _media_sim_oracle() -> str:
     """
 
 
-@register("q106_media_similarity", oracle=_media_sim_oracle())
+@register("q106_media_similarity", oracle=_media_sim_oracle(), families=("bench",))
 def q106_media_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-{_MEDIA_TOP_K} nearest media assets per file by cosine over
     {_MEDIA_BINS}-bin byte histograms extracted from the real file bytes.
@@ -898,7 +904,7 @@ def _phash_oracle() -> str:
     """
 
 
-@register("q165_image_phash", oracle=_phash_oracle())
+@register("q165_image_phash", oracle=_phash_oracle(), families=("bench",))
 def q165_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster images by perceptual average-hash computed from decoded
     BMP pixel buffers ({_PHASH_P} planted pattern classes).
@@ -1018,7 +1024,7 @@ def _resize_oracle() -> str:
     """
 
 
-@register("q202_image_resize", oracle=_resize_oracle())
+@register("q202_image_resize", oracle=_resize_oracle(), families=("bench",))
 def q202_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """4×4 box-filter thumbnails from decoded 16×16 BMPs, per image.
 

@@ -67,6 +67,7 @@ N_PACK_BUCKETS = 16  # md5 first hex nibble → 16 parallel packing streams
     FROM c
     GROUP BY bucket, CAST(floor((cum - est_tokens) / {PACK_BUDGET}.0) AS BIGINT)
     """,
+    families=("bench",),
 )
 def q38_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pack documents into ~{PACK_BUDGET}-token sequences, {N_PACK_BUCKETS}
@@ -129,6 +130,7 @@ _SPLIT_CASE = """
     FROM documents
     GROUP BY {_SPLIT_CASE}
     """,
+    families=(),
 )
 def q39_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """75/12.5/12.5 train/val/test assignment by md5(doc_id) prefix.
@@ -184,6 +186,7 @@ DIGITS_RE = "[0-9]{3,}"
                           '{DIGITS_RE}', '<NUM>', 'g') AS scrubbed
     FROM w
     """,
+    families=(),
 )
 def q40_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Redact emails and ≥3-digit runs, counting matches per document.
@@ -245,6 +248,7 @@ REPETITION_FLAG = 0.10  # top token > 10% of doc → repetitive
     FROM tf
     GROUP BY doc_id
     """,
+    families=("bench",),
 )
 def q41_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc token-repetition profile; flags docs whose single most
@@ -306,6 +310,7 @@ def _rate_threshold_sql(src: str) -> str:
     FROM kept
     GROUP BY source
     """,
+    families=(),
 )
 def q42_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted per-source downsample: sources keep 25/50/75/100% of docs
@@ -366,6 +371,7 @@ CONTAM_MIN_SHARED = 2  # flag pairs sharing ≥ this many distinct shingles
     GROUP BY c.doc_id, b.doc_id
     HAVING count(*) >= {CONTAM_MIN_SHARED}
     """,
+    families=(),
 )
 def q46_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train/benchmark contamination report: corpus docs sharing ≥
@@ -433,6 +439,7 @@ TFIDF_TOP_K = 5
     )
     WHERE rn <= {TFIDF_TOP_K}
     """,
+    families=(),
 )
 def q47_tfidf_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-{TFIDF_TOP_K} TF-IDF terms per source.
@@ -512,6 +519,7 @@ def _tokens_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM tok2 JOIN freq USING (term)
     GROUP BY doc_id
     """,
+    families=("bench",),
 )
 def q52_unigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document mean unigram corpus frequency.
@@ -576,7 +584,7 @@ def _fp_oracle() -> str:
     return " UNION ALL ".join(parts)
 
 
-@register("q59_table_fingerprint", oracle=_fp_oracle())
+@register("q59_table_fingerprint", oracle=_fp_oracle(), families=("bench",))
 def q59_table_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Content fingerprint (row count + xor AND wraparound-sum of 48-bit
     row hashes) for {len(_FP_TABLES)} tables.
@@ -654,7 +662,7 @@ def _profile_oracle() -> str:
     return f"WITH g AS (SELECT {', '.join(aggs)} FROM orders) " + " UNION ALL ".join(rows)
 
 
-@register("q64_table_profile", oracle=_profile_oracle())
+@register("q64_table_profile", oracle=_profile_oracle(), families=("tpch", "bench"))
 def q64_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Column profile of the orders table: nulls, distincts, min/max.
 
@@ -717,6 +725,7 @@ _CHUNK_STRIDE = 24  # overlap = _CHUNK_TOKENS - _CHUNK_STRIDE = 8 tokens
     WHERE s.start = 1
        OR s.start - {_CHUNK_STRIDE} + {_CHUNK_TOKENS} - 1 < len(l)
     """,
+    families=("multibyte", "bench"),
 )
 def q77_doc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Overlapping token-window chunks (32 tokens, stride 24) per
@@ -795,6 +804,7 @@ _SHUF_SEED = "ep1"  # epoch seed: different seed → different stable order
            ) AS BIGINT) AS shuffle_pos
     FROM documents
     """,
+    families=("bench",),
 )
 def q83_global_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Assign every document a global position in a seeded pseudo-random
@@ -864,6 +874,7 @@ _VOCAB_COVERAGE = 0.95
     WHERE rank = 1 OR (cum_share - CAST(n AS DOUBLE) / (SELECT total FROM tot))
                       < {_VOCAB_COVERAGE}
     """,
+    families=("text", "multibyte"),
 )
 def q84_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frequency-ranked vocabulary truncated at {_VOCAB_COVERAGE:.0%}
@@ -967,7 +978,7 @@ _PIPE_ORACLE = f"""
     """
 
 
-@register("q90_corpus_pipeline", oracle=_PIPE_ORACLE)
+@register("q90_corpus_pipeline", oracle=_PIPE_ORACLE, families=("bench",))
 def q90_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end corpus build: quality gate → exact dedup (min-doc_id
     representative) → benchmark decontamination (≥{CONTAM_MIN_SHARED}
@@ -1102,6 +1113,7 @@ _DQ_PRIORITY = ("1-URGENT", "2-HIGH", "3-MEDIUM")  # deliberately incomplete
     UNION ALL
     SELECT 'orders.o_custkey.fk_customer', orphans, n, orphans = 0 FROM fk
     """,
+    families=("nulljoin", "bench"),
 )
 def q95_data_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Constraint-suite verdicts over orders/lineitem (+ the orders →
@@ -1213,6 +1225,7 @@ _NEG_SEED = "negs1"
            nd.source AS neg_source, nd.n_chars AS neg_n_chars
     FROM neg JOIN documents nd ON nd.doc_id = neg.neg_doc_id
     """,
+    families=("bench",),
 )
 def q101_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """{_NEG_K} seeded pseudo-random negatives per anchor document,
@@ -1338,6 +1351,7 @@ _DEL_MOD = 131  # deletion-request rule: doc_id % 131 == 0
            true
     FROM emb
     """,
+    families=("bench",),
 )
 def q104_cascade_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Purge every artifact referencing a deletion-request doc and verify:
@@ -1451,6 +1465,7 @@ _DIFF_OFFSET = 1_000_000
     FROM v1 FULL OUTER JOIN v2 ON v1.doc_id = v2.doc_id
     GROUP BY 1
     """,
+    families=("bench",),
 )
 def q105_corpus_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Classify every document key across two corpus snapshots as
@@ -1571,6 +1586,7 @@ def _register_q120() -> None:
         )
         {funnel_rows}
         """,
+        families=("bench",),
     )
     def q120_quality_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         """Per-gate attrition of the 4-gate quality battery, in
@@ -1641,6 +1657,7 @@ def _register_q121() -> None:
         FROM documents
         GROUP BY source
         """,
+        families=("bench",),
     )
     def q121_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
         """One datasheet row per source: doc/token volume, exact-dup
@@ -1712,6 +1729,7 @@ _BIGRAM_BOTTOM = 40
     ORDER BY mean_tf, doc_id
     LIMIT {_BIGRAM_BOTTOM}
     """,
+    families=("text", "multibyte", "bench"),
 )
 def q122_bigram_rarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The {_BIGRAM_BOTTOM} rarest documents by mean corpus-bigram
@@ -1790,6 +1808,7 @@ _CURRICULUM_PHASES = 4
     FROM phased
     GROUP BY phase
     """,
+    families=("bench",),
 )
 def q124_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """{_CURRICULUM_PHASES}-phase curriculum split by mean-word-length
@@ -1883,6 +1902,7 @@ def q124_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
            sqrt(CAST(t.n AS DOUBLE) / CAST(s.n_docs AS DOUBLE)) AS boost
     FROM per_source s CROSS JOIN tot t
     """,
+    families=("bench",),
 )
 def q125_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source T=2 sampling shares: raw share n_i/N, temperature share
@@ -1943,6 +1963,7 @@ def q125_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
                / CAST(n_docs * n_docs AS DOUBLE) AS gini
     FROM rolled
     """,
+    families=("bench",),
 )
 def q134_source_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language-mix Gini impurity per source (0 = monolingual source).
@@ -2001,6 +2022,7 @@ _QI_BUCKET = 64  # length-bucket granularity of the quasi-identifier
            (group_size < {_K_ANON}) AS violates_k
     FROM grp
     """,
+    families=("bench",),
 )
 def q135_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-anonymity ({_K_ANON}) audit over the quasi-identifier tuple
@@ -2062,6 +2084,7 @@ _MASK_PREVIEW = 32
                AS released_chars
     FROM documents d JOIN policy p ON p.source = d.source
     """,
+    families=("bench",),
 )
 def q142_policy_masking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Apply a per-source release policy (derived deterministically from
@@ -2162,6 +2185,7 @@ _SYS_BUCKETS = 32  # prefix-sum range buckets
     FROM s
     WHERE (cum - w) // step < cum // step
     """,
+    families=("bench",),
 )
 def q153_systematic_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keep every document that crosses one of {_SYS_N} equal-weight stripe
@@ -2264,6 +2288,7 @@ def q153_systematic_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFra
                AS share_bp
     FROM w, t
     """,
+    families=("bench",),
 )
 def q159_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source sampling shares (basis points) proportional to
@@ -2342,6 +2367,7 @@ _MERKLE_FAN = 64
     UNION ALL
     SELECT 'ROOT' AS node, h FROM root
     """,
+    families=("bench",),
 )
 def q178_merkle_tree_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Level-2 Merkle nodes + the corpus root (fan-out {_MERKLE_FAN}).
@@ -2436,6 +2462,7 @@ _PACK_CURVE_BUDGETS = (256, 512, 1024)
          v(budget)
     GROUP BY v.budget
     """,
+    families=("bench",),
 )
 def q180_packing_efficiency_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(budget, n_packs, total_tokens, utilization) for budgets
@@ -2510,6 +2537,7 @@ _QC_MULT = 2654435761  # Knuth multiplicative constant for the weight table
            logit_milli > 0 AS keep
     FROM scored
     """,
+    families=("text", "multibyte", "bench"),
 )
 def q187_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document linear quality score over {_QC_BUCKETS} hashed token
@@ -2594,6 +2622,7 @@ def q187_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents d JOIN cuts ON d.source = cuts.source
     GROUP BY d.source, cuts.n_docs, cuts.p05, cuts.p95
     """,
+    families=("bench",),
 )
 def q190_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact per-source P05/P95 winsorization of document lengths.
@@ -2677,6 +2706,7 @@ _DOMAIN_CAP = 15
                 AS BIGINT) AS dropped_chars
     FROM r GROUP BY source
     """,
+    families=("bench",),
 )
 def q191_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cap every source at {_DOMAIN_CAP} docs (longest-first, doc_id
@@ -3199,6 +3229,7 @@ def _register_q218() -> None:
         )
         {stage_rows}
         """,
+        families=("text", "multibyte", "bench"),
     )
     def q218_curation_pipeline(
         spark: SparkSession, sf_dir: str
@@ -3353,6 +3384,7 @@ _DSIR_SCORE = (
     )
     WHERE rn <= {_DSIR_TOP}
     """,
+    families=("text", "multibyte", "bench"),
 )
 def q221_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-{_DSIR_TOP} documents by DSIR-style hashed word-bigram
@@ -3507,6 +3539,7 @@ def q221_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM hit
     GROUP BY bucket
     """,
+    families=("bench",),
 )
 def q227_packing_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per packing bucket: benchmark-trigram occurrences in the packed
@@ -3660,7 +3693,7 @@ def _register_q232() -> None:
                CAST(COALESCE(sum(t.n_tok), 0) AS BIGINT)
         FROM sem_rm JOIN tok t USING (doc_id)
         """,
-        fuzz=("text",),
+        families=("text", "multibyte", "bench"),
     )
     def q232_dedup_impact_report(
         spark: SparkSession, sf_dir: str
@@ -3930,7 +3963,7 @@ def _register_q234() -> None:
         LEFT JOIN rm USING (doc_id)
         WHERE d.doc_id % 97 <> 0
         """,
-        fuzz=("text", "multibyte"),
+        families=("text", "multibyte", "bench"),
     )
     def q234_decontamination_rewrite(
         spark: SparkSession, sf_dir: str
@@ -4043,7 +4076,7 @@ def _register_q239() -> None:
         LEFT JOIN kept k USING (doc_id)
         LEFT JOIN rm USING (doc_id)
         """,
-        fuzz=("text", "multibyte"),
+        families=("text", "multibyte", "bench"),
     )
     def q239_incremental_decontamination(
         spark: SparkSession, sf_dir: str
@@ -4150,7 +4183,7 @@ def _register_q242() -> None:
                     ELSE 'clean' END AS verdict
         FROM ex LEFT JOIN sem USING (doc_id)
         """,
-        fuzz=("text", "embeddings"),
+        families=("text", "embeddings", "multibyte", "bench"),
     )
     def q242_contamination_verdicts(
         spark: SparkSession, sf_dir: str
@@ -4265,7 +4298,7 @@ def _register_q244() -> None:
         LEFT JOIN ex ON ex.bench_id = b.doc_id
         LEFT JOIN sem ON sem.bench_id = b.doc_id
         """,
-        fuzz=("text", "embeddings"),
+        families=("text", "embeddings", "multibyte", "bench"),
     )
     def q244_benchmark_leak_report(
         spark: SparkSession, sf_dir: str

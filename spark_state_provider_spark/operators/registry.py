@@ -4,6 +4,11 @@ Each entry couples a PySpark query callable ``(spark, sf_dir) -> DataFrame``
 with (optionally) the equivalent DuckDB ANSI-SQL oracle string. Column names
 MUST match between the two — the driver sorts columns by name before
 hashing values.
+
+The registry also owns every query's membership: each registration
+declares its ``families`` (the fuzz families that attack it, and
+``bench`` when ``bench.py`` times it), and ``family(key)`` is the only
+member list the bench and the fuzz tests read.
 """
 
 from __future__ import annotations
@@ -15,54 +20,59 @@ from pyspark.sql import DataFrame, SparkSession
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
+# One key per reader: each fuzz family in tests/test_round6b_fuzz.py, and
+# ``bench`` for bench.py's headline loop.
+FAMILIES = frozenset(
+    {"text", "events", "tpch", "embeddings", "streaming", "nulljoin",
+     "multibyte", "bench"}
+)
+
 
 @dataclass(frozen=True)
 class QuerySpec:
     name: str
     fn: QueryFn
     oracle: str | None  # DuckDB SQL, or None for non-SQL-expressible ops
+    # Membership, declared at the registration site: a subset of
+    # FAMILIES; ``()`` = no fuzz family applies and the bench skips it.
+    families: tuple[str, ...]
     doc: str = ""
-    # Fuzz-family membership, declared AT THE REGISTRATION SITE so the
-    # proof matrix is registry-driven rather than name-listed in tests
-    # (round-7 verdict #8: every new query must join the fuzz families
-    # before its debut window). ``None`` = legacy query registered before
-    # the field existed (tests carry the historical name lists); ``()`` =
-    # explicitly no family applies (say why in the docstring). Known
-    # family keys: text, events, tpch, embeddings, streaming, nulljoin,
-    # dates, multibyte.
-    fuzz: tuple[str, ...] | None = None
 
 
 _REGISTRY: dict[str, QuerySpec] = {}
 
 
 def register(
-    name: str,
-    oracle: str | None = None,
-    fuzz: tuple[str, ...] | None = None,
+    name: str, *, oracle: str | None = None, families: tuple[str, ...]
 ) -> Callable[[QueryFn], QueryFn]:
-    """Decorator: register ``fn`` under ``name`` with an optional oracle."""
+    """Decorator: register ``fn`` under ``name`` with its oracle and its
+    ``families`` (required; unknown keys raise ``ValueError``)."""
+    unknown = set(families) - FAMILIES
+    if unknown:
+        raise ValueError(
+            f"{name}: unknown families {sorted(unknown)} (known: {sorted(FAMILIES)})"
+        )
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name {name!r}")
         _REGISTRY[name] = QuerySpec(
-            name=name, fn=fn, oracle=oracle, doc=fn.__doc__ or "", fuzz=fuzz
+            name=name,
+            fn=fn,
+            oracle=oracle,
+            families=tuple(families),
+            doc=fn.__doc__ or "",
         )
         return fn
 
     return deco
 
 
-def fuzz_family(family: str) -> list[str]:
-    """Names that DECLARED membership in ``family`` at registration.
-    Test files extend their historical name lists with this, so a new
-    query joins the matrix by declaring itself — no test edit needed."""
-    return sorted(
-        name
-        for name, spec in _REGISTRY.items()
-        if spec.fuzz is not None and family in spec.fuzz
-    )
+def family(key: str) -> list[str]:
+    """Sorted names of the queries that declared ``key``."""
+    if key not in FAMILIES:
+        raise ValueError(f"unknown family {key!r}")
+    return sorted(n for n, spec in _REGISTRY.items() if key in spec.families)
 
 
 def all_queries() -> dict[str, QueryFn]:

@@ -71,6 +71,7 @@ SQL_SUM_CHARGE = (
     FROM lineitem
     WHERE l_shipdate >= TIMESTAMP '1995-01-01' AND l_quantity < 10
     """,
+    families=("tpch", "bench"),
 )
 def q01_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Projection + predicate reach the parquet scan (PushedFilters/ReadSchema)."""
@@ -94,6 +95,7 @@ def q01_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     WHERE o_orderstatus = 'F'
     """,
+    families=(),
 )
 def q02_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write a filtered projection to parquet, read it back (sink + source)."""
@@ -130,6 +132,7 @@ def q02_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
            c_acctbal * 1.1 AS acctbal_bumped
     FROM customer
     """,
+    families=(),
 )
 def q03_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Column select / rename / computed column."""
@@ -157,6 +160,7 @@ def q03_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND o_orderpriority IN ('1-URGENT', '2-HIGH')
       AND o_orderstatus <> 'F'
     """,
+    families=("tpch", "bench"),
 )
 def q04_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conjunctive / range / IN predicates, all pushed to the scan."""
@@ -185,6 +189,7 @@ def q04_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN region r ON n.n_regionkey = r.r_regionkey
     GROUP BY r.r_name, n.n_name
     """,
+    families=("tpch", "nulljoin", "bench"),
 )
 def q05_broadcast_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """customer ⋈ broadcast(nation) ⋈ broadcast(region): no shuffle for dims."""
@@ -221,6 +226,7 @@ def q05_broadcast_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE c.c_mktsegment = 'BUILDING'
     GROUP BY o.o_orderkey, o.o_orderdate
     """,
+    families=("tpch", "nulljoin", "bench"),
 )
 def q06_shuffle_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fact-to-fact join on shuffled keys; dims filtered before the join."""
@@ -248,6 +254,7 @@ def q06_shuffle_join(spark: SparkSession, sf_dir: str) -> DataFrame:
       ON c.c_custkey = o.o_custkey AND o.o_totalprice > 250000
     GROUP BY c.c_custkey
     """,
+    families=("nulljoin",),
 )
 def q06b_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left outer join with an ON-clause filter (nulls preserved, count of
@@ -283,6 +290,7 @@ def q06b_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM customer
     WHERE c_custkey IN (SELECT o_custkey FROM orders WHERE o_totalprice > 150000)
     """,
+    families=("nulljoin",),
 )
 def q07_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Customers having at least one big order (left semi join)."""
@@ -305,6 +313,7 @@ def q07_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 250000
     )
     """,
+    families=("nulljoin",),
 )
 def q07b_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Customers who never placed a >250k order (left anti join —
@@ -340,6 +349,7 @@ _BAND_WIDTH = 50_000
       ON o.o_totalprice >= b.lo AND o.o_totalprice < b.hi
     GROUP BY b.band_id
     """,
+    families=("nulljoin",),
 )
 def q08_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Non-equi (range) join against a broadcast band dimension."""
@@ -385,6 +395,7 @@ def q08_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ASOF LEFT JOIN o1
       ON e.user_id = o1.o_custkey AND e.ts >= o1.o_orderdate
     """,
+    families=("nulljoin", "bench"),
 )
 def q08b_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join via tagged union + running last() — one shuffle, no N²."""
@@ -435,6 +446,7 @@ def q08b_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE l_shipdate <= TIMESTAMP '1998-09-02'
     GROUP BY l_returnflag, l_linestatus
     """,
+    families=("tpch", "nulljoin", "bench"),
 )
 def q09_hash_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouped sum/avg/count with map-side partial aggregation."""
@@ -467,6 +479,7 @@ def q09_hash_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem
     GROUP BY l_returnflag
     """,
+    families=("bench",),
 )
 def q10_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact multi-column count distinct (expand + two-phase agg)."""
@@ -488,6 +501,7 @@ def q10_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem
     GROUP BY l_returnflag
     """,
+    families=(),
 )
 def q10c_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact interpolated percentiles (Spark ``percentile`` ==
@@ -512,6 +526,7 @@ def q10c_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem
     GROUP BY l_returnflag
     """,
+    families=(),
 )
 def q10b_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """approx_count_distinct (HyperLogLog++) — the 100 TB-scale path.
@@ -560,6 +575,7 @@ def q10b_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     -- ZERO rows on empty input (no grand-total row); pin that shape
     HAVING count(*) > 0
     """,
+    families=("tpch", "bench"),
 )
 def q11_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hierarchical subtotals via rollup."""
@@ -582,6 +598,7 @@ def q11_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     -- ZERO rows on empty input (no grand-total row); pin that shape
     HAVING count(*) > 0
     """,
+    families=(),
 )
 def q11b_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full cross-dimensional subtotals via cube."""
@@ -602,6 +619,7 @@ def q11b_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     -- ZERO rows on empty input (no grand-total row); pin that shape
     HAVING count(*) > 0
     """,
+    families=(),
 )
 def q11c_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit grouping sets (neither rollup nor cube shape)."""
@@ -630,6 +648,7 @@ _EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
     FROM events
     GROUP BY user_id
     """,
+    families=(),
 )
 def q11d_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot: one count column per event type (explicit value list keeps the
@@ -654,6 +673,7 @@ def q11d_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
         WHERE l2.l_partkey = l.l_partkey
     )
     """,
+    families=(),
 )
 def q17b_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated scalar subquery (TPC-H Q17 shape): lineitems below half
@@ -685,6 +705,7 @@ def q17b_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     WHERE o_orderkey < 5000
     """,
+    families=(),
 )
 def q03b_null_handling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NULL semantics: nullif/coalesce/conditional-null/IS NULL (the
@@ -720,6 +741,7 @@ def q03b_null_handling(spark: SparkSession, sf_dir: str) -> DataFrame:
            n
     FROM s
     """,
+    families=(),
 )
 def q18b_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sample variance/stddev from exact decimal moments.
@@ -774,6 +796,7 @@ def q18b_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     WHERE rn <= 3
     """,
+    families=("nulljoin", "bench"),
 )
 def q12_window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 orders per customer (row_number over partitioned window)."""
@@ -805,6 +828,7 @@ def q12_window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE o_custkey < 50
     WINDOW w AS (PARTITION BY o_custkey ORDER BY o_totalprice, o_orderkey)
     """,
+    families=(),
 )
 def q12b_window_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distribution window functions: percent_rank / cume_dist / ntile /
@@ -841,6 +865,7 @@ def q12b_window_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
            ) AS prev_price
     FROM orders
     """,
+    families=("bench",),
 )
 def q13_window_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Moving 3-row sum and lag with a deterministic order key."""
@@ -873,6 +898,7 @@ def q13_window_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY o_totalprice DESC, o_orderkey
     LIMIT 100
     """,
+    families=("nulljoin", "bench"),
 )
 def q14_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global top-100 by price with deterministic tiebreak."""
@@ -897,6 +923,7 @@ def q14_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNION
     SELECT c_custkey AS custkey FROM customer WHERE c_acctbal < 0
     """,
+    families=(),
 )
 def q15_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNION (distinct) of two key sets."""
@@ -914,6 +941,7 @@ def q15_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     INTERSECT
     SELECT o_custkey AS custkey FROM orders WHERE o_orderpriority = '5-LOW'
     """,
+    families=(),
 )
 def q15b_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT of two key sets."""
@@ -934,6 +962,7 @@ def q15b_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXCEPT
     SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'O'
     """,
+    families=(),
 )
 def q15c_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXCEPT (distinct) between two key sets."""
@@ -962,6 +991,7 @@ def q15c_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM part
     WHERE p_size >= 25
     """,
+    families=(),
 )
 def q16_string_fns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """concat_ws / lower / split_part / regexp_extract / length."""
@@ -991,6 +1021,7 @@ def q16_string_fns(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM part
     WHERE p_partkey < 100
     """,
+    families=(),
 )
 def q16b_string_fns_extended(spark: SparkSession, sf_dir: str) -> DataFrame:
     """translate / lpad / reverse / left / repeat / replace."""
@@ -1024,6 +1055,7 @@ def q16b_string_fns_extended(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY CAST(date_trunc('month', ts) AS TIMESTAMP), event_type
     """,
+    families=(),
 )
 def q17_datetime(spark: SparkSession, sf_dir: str) -> DataFrame:
     """date_trunc / min / max / datediff over event timestamps."""
@@ -1053,6 +1085,7 @@ def q17_datetime(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     WHERE event_id < 200
     """,
+    families=(),
 )
 def q17c_datetime_extended(spark: SparkSession, sf_dir: str) -> DataFrame:
     """epoch / day-of-week / hour / last_day / add_months.
@@ -1088,6 +1121,7 @@ def q17c_datetime_extended(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem
     GROUP BY l_returnflag
     """,
+    families=("tpch", "bench"),
 )
 def q18_math(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arithmetic expression pipeline inside whole-stage codegen."""
@@ -1117,6 +1151,7 @@ def q18_math(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY event_type
     """,
+    families=(),
 )
 def q19_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """from_json-style extraction of a JSON property column."""
@@ -1136,6 +1171,7 @@ def q19_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     WHERE event_id < 50
     """,
+    families=(),
 )
 def q19b_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array construction (sequence) + explode into rows."""
@@ -1161,6 +1197,7 @@ def q19b_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS stat_value
     FROM events GROUP BY event_type
     """,
+    families=(),
 )
 def q19c_map_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MapType round-trip: build a map column of per-type stats, then
@@ -1203,6 +1240,7 @@ def q19c_map_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem
     WHERE l_returnflag = 'R' AND l_linenumber = 1
     """,
+    families=("bench",),
 )
 def q27_pandas_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow-batched pandas UDF (NOT a row-at-a-time Python UDF).
@@ -1250,6 +1288,7 @@ def q27_pandas_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM part p, unnest(list_distinct(string_split(p.p_type, ' '))) AS t(word)
     WHERE p.p_size >= 40
     """,
+    families=(),
 )
 def q27b_python_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Python UDTF (table function): one row per distinct word of p_type.
@@ -1301,6 +1340,7 @@ def q27b_python_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY revenue DESC, orderkey
     LIMIT 10
     """,
+    families=("tpch", "nulljoin", "bench"),
 )
 def q33_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape (shipping priority): 3-way join, grouped revenue,
@@ -1340,6 +1380,7 @@ def q33_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND o_orderdate < TIMESTAMP '1997-01-01'
     GROUP BY n_name
     """,
+    families=("tpch", "nulljoin", "bench"),
 )
 def q34_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 shape (local-supplier volume): 6-way join where region,
@@ -1387,6 +1428,7 @@ def q34_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY revenue DESC, c_custkey
     LIMIT 20
     """,
+    families=("tpch", "nulljoin", "bench"),
 )
 def q33b_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10 shape (returned-item reporting): fact-fact shuffle join on
@@ -1438,6 +1480,7 @@ LARGE_ORDER_QTY = 150
     ORDER BY o_totalprice DESC, o_orderkey
     LIMIT 100
     """,
+    families=("tpch", "bench"),
 )
 def q33c_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18 shape (large-volume customers): HAVING-filtered self
@@ -1486,6 +1529,7 @@ def q33c_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem
     GROUP BY l_returnflag
     """,
+    families=(),
 )
 def q27c_grouped_agg_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """User-defined AGGREGATE function: grouped-agg pandas UDF (Arrow batch
@@ -1525,6 +1569,7 @@ def q27c_grouped_agg_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
            TRUE AS approx_within_5pct
     FROM events
     """,
+    families=(),
 )
 def q10d_hll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mergeable distinct-count sketches (Apache DataSketches HLL): per-type
@@ -1591,6 +1636,7 @@ def q10d_hll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS zscore
     FROM c JOIN g USING (event_type)
     """,
+    families=(),
 )
 def q27d_grouped_map_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouped-MAP pandas UDF (``applyInPandas``): per-event-type z-score
@@ -1647,6 +1693,7 @@ def q27d_grouped_map_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS INTEGER) AS n_positive
     FROM embeddings
     """,
+    families=(),
 )
 def q19d_array_hof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array higher-order functions (transform/filter/aggregate lambdas in
@@ -1677,6 +1724,7 @@ def q19d_array_hof(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     UNPIVOT (val FOR metric IN (l_quantity, l_extendedprice, l_tax))
     """,
+    families=(),
 )
 def q11e_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unpivot/melt (wide → long) — the inverse of q11d's pivot."""
@@ -1711,6 +1759,7 @@ def q11e_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS is_current
     FROM events
     """,
+    families=(),
 )
 def q43_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCD type-2 interval construction over the per-user change log.
@@ -1746,6 +1795,7 @@ def q43_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem
     GROUP BY l_returnflag
     """,
+    families=(),
 )
 def q10e_approx_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """approx_percentile (Greenwald-Khanna sketch) — the mergeable quantile
@@ -1798,6 +1848,7 @@ def q10e_approx_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND l_discount BETWEEN 0.05 AND 0.07
       AND l_quantity < 24
     """,
+    families=("tpch",),
 )
 def q33d_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6: pure filter + global agg — the pushdown showcase.
@@ -1839,6 +1890,7 @@ def q33d_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE l_shipdate >= TIMESTAMP '1996-09-01'
       AND l_shipdate < TIMESTAMP '1996-10-01'
     """,
+    families=("tpch",),
 )
 def q33e_tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14: join + conditional aggregate (promo revenue share).
@@ -1889,6 +1941,7 @@ def q33e_tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
                   WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate)
     GROUP BY o_orderpriority
     """,
+    families=(),
 )
 def q45_tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape (order-priority checking): correlated EXISTS becomes a
@@ -1935,6 +1988,7 @@ def q45_tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) shipping
     GROUP BY supp_nation, cust_nation, l_year
     """,
+    families=(),
 )
 def q45b_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q7 shape (volume shipping): nation-pair OR-of-conjunctions
@@ -1995,6 +2049,7 @@ def q45b_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND l_shipdate < TIMESTAMP '1997-01-01'
     GROUP BY l_linestatus
     """,
+    families=(),
 )
 def q45c_tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q12 shape (shipping-mode priority): fact-fact join + CASE
@@ -2032,6 +2087,7 @@ def q45c_tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) c_orders
     GROUP BY c_count
     """,
+    families=(),
 )
 def q45d_tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q13 (customer distribution): LEFT OUTER join with an extra
@@ -2071,6 +2127,7 @@ def q45d_tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE s_suppkey = supplier_no
       AND total_revenue = (SELECT max(total_revenue) FROM revenue)
     """,
+    families=(),
 )
 def q45e_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q15 (top supplier): reused CTE + scalar MAX subquery.
@@ -2113,6 +2170,7 @@ def q45e_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
                         AND o_orderpriority = '1-URGENT')
     GROUP BY c_nationkey
     """,
+    families=(),
 )
 def q45f_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q22 shape (global sales opportunity): uncorrelated scalar AVG
@@ -2175,6 +2233,7 @@ _HIST_LO, _HIST_W, _HIST_BINS = 900.0, 5000.0, 21
     )
     GROUP BY bin
     """,
+    families=("events", "bench"),
 )
 def q53_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """{_HIST_BINS}-bin fixed-width histogram of lineitem prices.
@@ -2240,6 +2299,7 @@ _Q8_VOLUME = (
     WHERE l_shipdate <= TIMESTAMP '1998-09-02'
     GROUP BY l_returnflag, l_linestatus
     """,
+    families=("tpch", "bench"),
 )
 def q63_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1, complete: the canonical pricing summary — 8 aggregates in
@@ -2287,6 +2347,7 @@ _Q8_NATION = "NATION_3"
            CAST(SUM(volume) AS DOUBLE) AS total_volume
     FROM flat GROUP BY o_year
     """,
+    families=("tpch", "bench"),
 )
 def q63b_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8 shape (national market share): an 8-table join tree where
@@ -2360,6 +2421,7 @@ _Q9_COST = (
     )
     GROUP BY nation, o_year
     """,
+    families=("tpch", "bench"),
 )
 def q63c_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q9 shape (product-type profit by nation and year). Cost side
@@ -2416,6 +2478,7 @@ _Q19_PRED = (
     FROM lineitem, part
     WHERE p_partkey = l_partkey AND ({_Q19_PRED})
     """,
+    families=("tpch", "bench"),
 )
 def q63d_tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q19 shape (discounted revenue under an OR-of-conjunctions
@@ -2461,6 +2524,7 @@ _LATE_DAYS = 90
     ORDER BY numwait DESC, s_name
     LIMIT 100
     """,
+    families=("tpch", "bench"),
 )
 def q63e_tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q21 shape (suppliers who kept orders waiting): lateness
@@ -2549,6 +2613,7 @@ _CORR_R = (
     m AS (SELECT l_returnflag, {_CORR_MOMENTS} FROM c GROUP BY l_returnflag)
     SELECT l_returnflag, {_CORR_R} AS corr_qty_price FROM m
     """,
+    families=("tpch", "bench"),
 )
 def q69_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pearson correlation of quantity vs extended price per return flag,
@@ -2602,6 +2667,7 @@ def q69_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM customer
     GROUP BY c_mktsegment
     """,
+    families=(),
 )
 def q70_grouped_topk_array(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-segment top-5 customers by balance, materialized as a
@@ -2663,6 +2729,7 @@ def q70_grouped_topk_array(spark: SparkSession, sf_dir: str) -> DataFrame:
             AS BIGINT) AS n_null_safe,
         CAST((SELECT count(*) FROM l WHERE pk IS NULL) AS BIGINT) AS n_null_keys
     """,
+    families=("tpch", "nulljoin"),
 )
 def q71_null_safe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Counts under plain vs null-safe (`eqNullSafe`) join on a key with
@@ -2711,6 +2778,7 @@ def q71_null_safe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY l_returnflag
     ORDER BY cnt DESC LIMIT 2
     """,
+    families=(),
 )
 def q10f_approx_top_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-2 return flags by row count via the approx_top_k sketch,
@@ -2773,6 +2841,7 @@ _EQD_COARSE = 1_000_000  # cents per coarse range bucket (≈ $10k)
     FROM r, t
     GROUP BY 1
     """,
+    families=("events", "bench"),
 )
 def q100_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """{_EQD_BUCKETS}-bucket equi-depth histogram of order totals (exact
@@ -2847,6 +2916,7 @@ _COGROUP_BUCKETS = 256
                - coalesce(l.line_sum_cents, 0) AS diff_cents
     FROM orders o LEFT JOIN l ON l.l_orderkey = o.o_orderkey
     """,
+    families=("nulljoin", "bench"),
 )
 def q137_cogroup_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-order header-vs-lines reconciliation through
@@ -2951,6 +3021,7 @@ def q137_cogroup_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     WHERE rn <= 3
     """,
+    families=("bench",),
 )
 def q138_window_group_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 orders by price per priority — written as the plain
@@ -3002,7 +3073,7 @@ def _q140_oracle() -> str:
     return f"SELECT {cols}, CAST(count(*) AS BIGINT) AS n_rows FROM events"
 
 
-@register("q140_udtf_dynamic_schema", oracle=_q140_oracle())
+@register("q140_udtf_dynamic_schema", oracle=_q140_oracle(), families=("bench",))
 def q140_udtf_dynamic_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Value histogram of `events.value` through a TABLE-argument UDTF
     whose column set (b0..b{_UDTF_HIST_BUCKETS - 1}) is derived by
@@ -3094,6 +3165,7 @@ def q140_udtf_dynamic_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY event_type
     """,
+    families=("bench",),
 )
 def q145_variant_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type rollup of a field extracted from a VARIANT column:
@@ -3153,6 +3225,7 @@ def q145_variant_type(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(count(DISTINCT lower(src_mixed)) AS BIGINT) AS n_ci_distinct
     FROM cased GROUP BY lang
     """,
+    families=("bench",),
 )
 def q147_collation_ci_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct source labels per language, raw vs case-insensitive — the
@@ -3238,6 +3311,7 @@ def q147_collation_ci_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         ('coalesce_fills_nulls', a.n_coalesce, a.n_coalesce = a.n_null)
     ) t(fact, n, holds)
     """,
+    families=("bench",),
 )
 def q176_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Six ANSI NULL rules, each as (fact, measured count, holds) — the
@@ -3317,6 +3391,7 @@ def q176_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE p.p_size = pr.min_s
       AND (pr.prev_best IS NULL OR p.p_size < pr.prev_best)
     """,
+    families=("bench",),
 )
 def q186_skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The price×size Pareto front of the part table.
@@ -3366,6 +3441,7 @@ def q186_skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY event_type
     """,
+    families=("bench",),
 )
 def q195_median_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type median, quartiles (continuous), and discrete
@@ -3419,6 +3495,7 @@ def q195_median_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
                PARTITION BY user_id ORDER BY ts, event_id) AS next_reading
     FROM v
     """,
+    families=("bench",),
 )
 def q196_ignore_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Forward-fill + nearest non-null reading in both directions per
@@ -3481,6 +3558,7 @@ def q196_ignore_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
     -- ZERO rows on empty input (no grand-total row); pin that shape
     HAVING count(*) > 0
     """,
+    families=("bench",),
 )
 def q209_grouping_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE over (priority, status) with GROUPING flags and the packed

@@ -29,6 +29,7 @@ from spark_state_provider_spark.tables import load_table
     FROM events
     GROUP BY event_type
     """,
+    families=(),
 )
 def q32_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew-proof two-phase aggregation over the 5-value event_type key.
@@ -82,6 +83,7 @@ SAMPLE_PER_STRATUM = 20
     )
     WHERE rn <= {SAMPLE_PER_STRATUM}
     """,
+    families=(),
 )
 def q36_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """{SAMPLE_PER_STRATUM} docs per language, selected by md5(doc_id) order.
@@ -161,6 +163,7 @@ def _sweep_warehouse(spark) -> None:
     FROM orders JOIN lineitem ON o_orderkey = l_orderkey
     GROUP BY o_orderpriority
     """,
+    families=("tpch",),
 )
 def q68_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join two pre-bucketed tables (8 buckets on the order key) and
@@ -258,6 +261,7 @@ def _mg_candidates(batches):
     GROUP BY l_partkey, tot.n
     HAVING count(*) * {_HH_K} > tot.n
     """,
+    families=("tpch", "bench"),
 )
 def q75_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact heavy hitters (keys with > 1/{_HH_K} of all lineitem rows)
@@ -314,6 +318,7 @@ _EVENT_CATEGORIES = [
     WHERE category = 'conversion'
     GROUP BY event_type
     """,
+    families=("tpch", "nulljoin", "bench"),
 )
 def q76_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Aggregate over an event_type-partitioned copy of events, joined to
@@ -385,6 +390,7 @@ _JOIN_SALTS = 8
     FROM events e JOIN customer c ON e.user_id = c.c_custkey
     GROUP BY e.user_id
     """,
+    families=("nulljoin", "bench"),
 )
 def q79_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Events⋈customer on a 150-key join column, salted 8 ways.
@@ -472,6 +478,7 @@ def _bloom_join_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE o_orderpriority = '1-URGENT'
     GROUP BY o_orderpriority
     """,
+    families=("nulljoin", "bench"),
 )
 def q93_runtime_bloom_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Selective-dim shuffle join with runtime bloom-filter row pruning.
@@ -546,6 +553,7 @@ def q93_runtime_bloom_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT est AS est_rows, actual AS actual_rows, est = actual AS matches
     FROM h, j
     """,
+    families=("nulljoin", "bench"),
 )
 def q98_join_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Predicted vs executed size of the events-on-user_id self-join.
@@ -616,6 +624,7 @@ _Q102_KEY_SQL = (
     FROM f JOIN dim ON f.k = dim.dk
     GROUP BY grp
     """,
+    families=("nulljoin", "bench"),
 )
 def q102_aqe_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skewed fact-dim shuffle join executed under AQE skew splitting;
@@ -739,6 +748,7 @@ _NULLSKEW_MOD = 10  # ~90% of fact keys become NULL
                AS matched_value
     FROM f LEFT JOIN customer c ON f.k = c.c_custkey
     """,
+    families=("nulljoin", "bench"),
 )
 def q109_null_skew_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-outer enrichment where ~90% of fact keys are NULL, executed
@@ -830,6 +840,7 @@ def q109_null_skew_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM daily d JOIN tot t ON d.event_type = t.event_type
     GROUP BY d.event_type
     """,
+    families=("bench",),
 )
 def q151_bitmap_distinct_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct users per event_type at two grains — per-day (summed) and
@@ -922,7 +933,7 @@ def _cms_oracle() -> str:
     """
 
 
-@register("q183_count_min_sketch", oracle=_cms_oracle())
+@register("q183_count_min_sketch", oracle=_cms_oracle(), families=("bench",))
 def q183_count_min_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CMS point-frequency estimates for the {_CMS_TOP} hottest users,
     next to their exact counts and the one-sided-error verdict.
@@ -1024,7 +1035,7 @@ def _bloom_oracle() -> str:
     """
 
 
-@register("q185_bloom_filter_explicit", oracle=_bloom_oracle())
+@register("q185_bloom_filter_explicit", oracle=_bloom_oracle(), families=("bench",))
 def q185_bloom_filter_explicit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build a {_BLOOM_M}-bit Bloom filter over the even customer keys,
     probe it with ALL keys, and report per-membership-class hit counts —

@@ -65,6 +65,7 @@ _DUCK_COS = (
     )
     WHERE rn <= {TOP_K}
     """,
+    families=("embeddings", "bench"),
 )
 def q29_knn_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-{TOP_K} for each query vector (broadcast, no shuffle
@@ -170,7 +171,7 @@ def _ann_lsh_oracle() -> str:
     """
 
 
-@register("q29b_ann_lsh", oracle=_ann_lsh_oracle())
+@register("q29b_ann_lsh", oracle=_ann_lsh_oracle(), families=("embeddings", "bench"))
 def q29b_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN top-{TOP_K}: multi-table hyperplane LSH → bucket-equijoin →
     exact cosine re-rank over the unioned candidate set.
@@ -293,6 +294,7 @@ _DUCK_COS_AV = _DUCK_COS.replace("qv", "cv").replace("nv", "v")  # assignment st
     )
     WHERE rn <= {TOP_K}
     """,
+    families=("embeddings", "bench"),
 )
 def q29d_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-style ANN top-{TOP_K}: coarse-quantize to the nearest of n/{CENTROID_MOD}
@@ -396,6 +398,7 @@ def q29d_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
             (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v)))
           >= 0.35
     """,
+    families=("embeddings",),
 )
 def q29c_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (sim ≥ 0.35) on a bounded slice.
@@ -460,6 +463,7 @@ _DUCK_ICOS = (
     )
     WHERE rn <= {TOP_K}
     """,
+    families=("embeddings",),
 )
 def q29e_int8_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-{TOP_K} by cosine over int8-quantized vectors — the
@@ -644,6 +648,7 @@ def _corpus_count(spark: SparkSession, sf_dir: str) -> int:
         ) AS rn FROM d2t
     ) WHERE rn = 1
     """,
+    families=("embeddings", "bench"),
 )
 def q50_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two Lloyd iterations of k-means (k={K_CLUSTERS}, centroids seeded
@@ -805,6 +810,7 @@ _DUCK_PQ_D2 = (
         ) AS rn FROM rer
     ) WHERE rn <= {TOP_K}
     """,
+    families=("embeddings", "bench"),
 )
 def q29f_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ-ADC top-{TOP_K}: encode every vector as {_PQ_M} codebook ids
@@ -967,7 +973,11 @@ def _multiprobe_oracle() -> str:
     """
 
 
-@register("q91_multiprobe_lsh", oracle=_multiprobe_oracle())
+@register(
+    "q91_multiprobe_lsh",
+    oracle=_multiprobe_oracle(),
+    families=("embeddings", "bench"),
+)
 def q91_multiprobe_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN top-{TOP_K} with 1-bit multi-probe over the q29b index: each
     query probes its own bucket plus the {N_PLANES} buckets one bit-flip
@@ -1090,6 +1100,7 @@ def q91_multiprobe_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN n nb ON nb.label = b.label
     GROUP BY a.label, b.label, na.n, nb.n
     """,
+    families=("embeddings", "bench"),
 )
 def q99_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise squared centroid distance between every pair of embedding
@@ -1209,6 +1220,7 @@ def _register_q112() -> None:
                (d.vec_id IS NOT NULL) AS dropped
         FROM sel s LEFT JOIN drops d ON s.vec_id = d.vec_id
         """,
+        families=("embeddings", "bench"),
     )
     def q112_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         """Semantic dedup verdict per vector: cluster id and whether a
@@ -1362,7 +1374,11 @@ def _maxsim_oracle() -> str:
     """
 
 
-@register("q126_maxsim_late_interaction", oracle=_maxsim_oracle())
+@register(
+    "q126_maxsim_late_interaction",
+    oracle=_maxsim_oracle(),
+    families=("embeddings", "bench"),
+)
 def q126_maxsim_late_interaction(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1491,7 +1507,7 @@ FROM (
 """
 
 
-@register("q150_hamming_topk", oracle=_HAM_ORACLE)
+@register("q150_hamming_topk", oracle=_HAM_ORACLE, families=("embeddings", "bench"))
 def q150_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-{TOP_K} by Hamming distance over 64-bit sign signatures.
 
@@ -1566,6 +1582,7 @@ _HN_TOP_K = 5
     )
     WHERE rn <= {_HN_TOP_K}
     """,
+    families=("embeddings", "bench"),
 )
 def q193_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-{_HN_TOP_K} cross-label nearest neighbors (hard negatives) per
@@ -1635,7 +1652,11 @@ def _ann_recall_oracle() -> str:
     """
 
 
-@register("q200_ann_recall_eval", oracle=_ann_recall_oracle())
+@register(
+    "q200_ann_recall_eval",
+    oracle=_ann_recall_oracle(),
+    families=("embeddings", "bench"),
+)
 def q200_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """recall@{TOP_K} of the hyperplane-LSH index vs the exact cosine
     top-{TOP_K}, one row per query vector.
@@ -1710,6 +1731,7 @@ def _register_q214() -> None:
                q.label = p.predicted_label AS agree
         FROM pred p JOIN embeddings q ON q.vec_id = p.query_id
         """,
+        families=("embeddings", "bench"),
     )
     def q214_knn_label_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         """Majority-vote label prediction from the exact top-{TOP_K}
@@ -1854,6 +1876,7 @@ _register_q214()
         ) AS rn FROM rer
     ) WHERE rn <= {TOP_K}
     """,
+    families=("embeddings", "bench"),
 )
 def q219_ivfpq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ composed top-{TOP_K}: IVF routing (NPROBE={NPROBE} of
@@ -2061,6 +2084,7 @@ def q219_ivfpq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM r JOIN med USING (label)
     GROUP BY r.label, med.n_vecs, med.median_norm2
     """,
+    families=("embeddings", "bench"),
 )
 def q223_embedding_norm_qa(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label embedding-norm² distribution (exact median via order
@@ -2215,6 +2239,7 @@ def _register_q228() -> None:
                             AS DOUBLE), 0.0) AS ndcg
         FROM per_q p LEFT JOIN pool ON pool.query_id = p.query_id
         """,
+        families=("bench",),
     )
     def q228_retrieval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         """Per-query MRR and nDCG@{TOP_K} for the exact cosine top-{TOP_K}
@@ -2326,7 +2351,7 @@ _SEMCON_TAU = 0.35  # flag threshold; the synthetic embeddings' best
     )
     SELECT vec_id, bid AS matched_benchmark, sim FROM r WHERE rn = 1
     """,
-    fuzz=("embeddings",),
+    families=("embeddings", "bench"),
 )
 def q238_semantic_contamination(
     spark: SparkSession, sf_dir: str

@@ -31,7 +31,11 @@ def _out(sf_dir: str, name: str) -> str:
     )
 
 
-@register("q02b_csv_roundtrip", oracle="SELECT r_regionkey, r_name FROM region")
+@register(
+    "q02b_csv_roundtrip",
+    oracle="SELECT r_regionkey, r_name FROM region",
+    families=(),
+)
 def q02b_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV sink + schema-explicit CSV source round-trip."""
     out = _out(sf_dir, "csv")
@@ -46,6 +50,7 @@ def q02b_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q02c_json_roundtrip",
     oracle="SELECT n_nationkey, n_name, n_regionkey FROM nation",
+    families=(),
 )
 def q02c_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-lines sink + schema-explicit JSON source round-trip."""
@@ -65,6 +70,7 @@ def q02c_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders WHERE o_orderstatus = 'O'
     GROUP BY o_orderpriority
     """,
+    families=(),
 )
 def q02d_partitioned_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hive-style partitioned parquet sink (partition pruning on read-back).
@@ -84,6 +90,7 @@ def q02d_partitioned_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q02e_orc_roundtrip",
     oracle="SELECT s_suppkey, s_name, s_nationkey, s_acctbal FROM supplier",
+    families=(),
 )
 def q02e_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC sink + source round-trip (the third columnar format after
@@ -109,6 +116,7 @@ _SYNTH_PARTS = 8
     FROM generate_series(0, {_SYNTH_N - 1}) t(i)
     GROUP BY 1
     """,
+    families=(),
 )
 def q37_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom Python DataSource (PySpark 4 extensibility SPI): partitioned
@@ -145,6 +153,7 @@ N_RANGE_FILES = 8
     WHERE l_shipdate >= TIMESTAMP '1997-01-01'
       AND l_shipdate < TIMESTAMP '1998-01-01'
     """,
+    families=(),
 )
 def q48_range_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Range-clustered parquet layout: repartitionByRange(l_shipdate) +
@@ -212,6 +221,7 @@ def _z_sql(c1: str, c2: str) -> str:
     WHERE l_partkey BETWEEN {_Z_P_LO} AND {_Z_P_HI}
       AND l_suppkey BETWEEN {_Z_S_LO} AND {_Z_S_HI}
     """,
+    families=(),
 )
 def q56_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order-clustered parquet layout + a 2-D rectangle read-back.
@@ -268,6 +278,7 @@ def q56_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM unioned
     GROUP BY user_id
     """,
+    families=("tpch", "bench"),
 )
 def q65_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write an old-schema drop (even event_ids, no `channel` column) and a
@@ -319,6 +330,7 @@ def q65_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM generate_series(0, {_SYNTH_N - 1}) t(i)
     GROUP BY 1
     """,
+    families=("tpch",),
 )
 def q66_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming read from the custom Python source ({_SYNTH_N} rows in
@@ -417,6 +429,7 @@ _COMPACT_TARGET = 4  # compacted output files
                     1, 12))::BIGINT) AS content_fp
     FROM documents
     """,
+    families=("bench",),
 )
 def q89_small_file_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fragment → compact → certify: rewrite {_COMPACT_SHARDS} small parquet
@@ -505,6 +518,7 @@ def q89_small_file_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum(n_chars) AS BIGINT) AS n_chars
     FROM documents GROUP BY source
     """,
+    families=("bench",),
 )
 def q139_python_datasource_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write the per-source rollup through the custom Python sink, then
@@ -584,6 +598,7 @@ def q139_python_datasource_write(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(max(user_id) AS BIGINT) AS max_user
     FROM events
     """,
+    families=("bench",),
 )
 def q141_observation_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ingest-health metrics (row count, null count, floor-cent value sum,
@@ -652,6 +667,7 @@ _CORRUPT_LINES = [
            CAST(sum(n_nationkey) AS BIGINT) AS key_sum
     FROM nation
     """,
+    families=("bench",),
 )
 def q143_corrupt_record_handling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ingest a JSONL feed of the nation table with {len(_CORRUPT_LINES)}
@@ -720,6 +736,7 @@ def q143_corrupt_record_handling(spark: SparkSession, sf_dir: str) -> DataFrame:
            min(n_name) AS first_name
     FROM nation GROUP BY n_regionkey
     """,
+    families=("bench",),
 )
 def q146_xml_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Serialize nation to XML records, parse with ``from_xml`` (explicit
@@ -774,6 +791,7 @@ def q146_xml_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum(n_nationkey) AS BIGINT) AS key_sum
     FROM nation
     """,
+    families=("bench",),
 )
 def q149_stream_corrupt_quarantine(
     spark: SparkSession, sf_dir: str
@@ -863,6 +881,7 @@ def q149_stream_corrupt_quarantine(
     WHERE event_type IN ('view', 'click')
     GROUP BY 1, 2
     """,
+    families=("bench",),
 )
 def q162_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Aggregate across a two-generation partition layout: events before
@@ -935,6 +954,7 @@ def q162_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
            TRUE AS path_matches_rows
     FROM events GROUP BY 1
     """,
+    families=("bench",),
 )
 def q168_file_metadata_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-day ingest audit joined from the _metadata hidden struct: rows
@@ -1011,6 +1031,7 @@ def q168_file_metadata_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS null_n_chars
     FROM unioned GROUP BY generation, source
     """,
+    families=("bench",),
 )
 def q205_union_schema_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Null-fill audit of a BY-NAME union across two schema generations

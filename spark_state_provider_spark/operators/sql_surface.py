@@ -57,6 +57,7 @@ def _view(spark: SparkSession, sf_dir: str, name: str, view: str) -> None:
            CAST(coalesce(per_month.n, 0) AS BIGINT) AS n_orders
     FROM spine LEFT JOIN per_month ON spine.m = per_month.m
     """,
+    families=("bench",),
 )
 def q115_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recursively generated month spine × order counts over one
@@ -119,6 +120,7 @@ def q115_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) o
     WHERE c.c_mktsegment = 'BUILDING'
     """,
+    families=("bench",),
 )
 def q116_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-2 orders per BUILDING-segment customer via a correlated
@@ -164,6 +166,7 @@ def q116_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY o_orderpriority
     HAVING count(*) > 100
     """,
+    families=("bench",),
 )
 def q117_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Open-order revenue per priority, written in Spark 4 pipe syntax.
@@ -207,6 +210,7 @@ _Q118_MIN_QTY = 45
     WHERE l_quantity >= {_Q118_MIN_QTY}
     GROUP BY l_returnflag
     """,
+    families=("bench",),
 )
 def q118_session_variables(spark: SparkSession, sf_dir: str) -> DataFrame:
     """High-quantity line counts per return flag, threshold supplied
@@ -265,7 +269,7 @@ def _q148_oracle() -> str:
     )
 
 
-@register("q148_sql_scripting", oracle=_q148_oracle())
+@register("q148_sql_scripting", oracle=_q148_oracle(), families=("bench",))
 def q148_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
     """{_SCRIPT_ROUNDS}-round above-average pruning of customer balances
     via a SQL-scripting WHILE loop: each round recomputes the surviving
@@ -335,6 +339,7 @@ def q148_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY 1, 2
     """,
+    families=("bench",),
 )
 def q167_sql_scalar_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Banded money aggregation where both derived columns come from SQL
@@ -389,6 +394,7 @@ def q167_sql_scalar_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE value >= 10.0
     GROUP BY event_type
     """,
+    families=("bench",),
 )
 def q169_parameterized_identifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A report template instantiated entirely through parameter binding:
@@ -440,6 +446,7 @@ def q169_parameterized_identifier(spark: SparkSession, sf_dir: str) -> DataFrame
     WHERE value >= 10.0 AND value < 60.0
     GROUP BY event_type
     """,
+    families=("bench",),
 )
 def q173_sql_table_function(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Banded aggregate through a SQL table function
@@ -494,6 +501,7 @@ def q173_sql_table_function(spark: SparkSession, sf_dir: str) -> DataFrame:
     -- groups; this constant-literal projection must do the same
     HAVING count(*) > 0
     """,
+    families=("bench",),
 )
 def q177_ddl_column_defaults(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Insert events into a managed table whose ``quality`` column fills
@@ -568,6 +576,7 @@ def q177_ddl_column_defaults(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM supplier s JOIN nation n ON s.s_nationkey = n.n_nationkey
     GROUP BY n.n_name
     """,
+    families=("bench",),
 )
 def q194_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-nation ordered supplier roster via LISTAGG WITHIN GROUP.
@@ -612,6 +621,7 @@ def q194_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY ALL
     ORDER BY ALL
     """,
+    families=("bench",),
 )
 def q199_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The q63/TPC-H-Q1 aggregation shape written with GROUP BY ALL +
@@ -659,6 +669,7 @@ def q199_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY user_id
     """,
+    families=("bench",),
 )
 def q201_agg_filter_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user funnel counters via FILTER-clause aggregates (count, sum,
@@ -728,6 +739,7 @@ def q201_agg_filter_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum(good_cast) AS BIGINT) AS good_cast_sum
     FROM t GROUP BY event_type
     """,
+    families=("bench",),
 )
 def q208_try_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NULL accounting of try_divide (by zero), try_add (i64 overflow),

@@ -44,6 +44,7 @@ TTL_DAYS = 3
     )
     WHERE rn = 1
     """,
+    families=("events",),
 )
 def q20_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keep the first event per (user_id, event_type) — deterministic dedup.
@@ -64,6 +65,7 @@ def q20_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q20b_distinct",
     oracle="SELECT DISTINCT user_id, event_type FROM events",
+    families=("events",),
 )
 def q20b_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pure key-set distinct (hash-aggregate dedup)."""
@@ -88,6 +90,7 @@ def q20b_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY 1, 2
     """,
+    families=("events", "bench"),
 )
 def q21_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """15-minute tumbling-window counts per event type."""
@@ -118,6 +121,7 @@ def q21_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE ts >= time_bucket(INTERVAL '1 hour', ts - to_minutes(off_min)) + to_minutes(off_min)
     GROUP BY 1
     """,
+    families=("events",),
 )
 def q21b_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-hour windows sliding every 15 minutes (each event in 4 windows)."""
@@ -163,6 +167,7 @@ def q21b_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM numbered
     GROUP BY user_id, sess_id
     """,
+    families=("events", "bench"),
 )
 def q22_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user session aggregation with a 30-minute inactivity gap."""
@@ -203,6 +208,7 @@ def q22_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY user_id
     """,
+    families=("events", "bench"),
 )
 def q24_user_statistics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch equivalent of the reference's UserStatistics accumulation."""
@@ -233,6 +239,7 @@ def q24_user_statistics(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY user_id
     """,
+    families=("events",),
 )
 def q25_ttl_liveness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Which state keys survive a TTL sweep at the stream's high watermark."""
@@ -277,6 +284,7 @@ def q25_ttl_liveness(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     WHERE rn = 1 AND event_type <> 'error'
     """,
+    families=("events",),
 )
 def q44_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Latest-wins merge of the event change feed into a keyed state table.
@@ -319,6 +327,7 @@ def q44_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     WHERE rn = 1 AND event_type <> 'error'
     """,
+    families=("events",),
 )
 def q44b_state_as_of(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Versioned read: reconstruct keyed state as of a past point in time.
@@ -367,6 +376,7 @@ _INCR_CUTOFF = "2024-01-25 00:00:00"
     FROM events
     GROUP BY user_id
     """,
+    families=("events", "bench"),
 )
 def q67_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merge a historical per-user aggregate with a fresh delta aggregate
@@ -453,6 +463,7 @@ _DYN_GAP_LONG_MIN = 45  # content events keep the session alive longer
     FROM numbered
     GROUP BY user_id, sess_id
     """,
+    families=("events", "bench"),
 )
 def q161_dynamic_gap_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user sessions where clicks time out after

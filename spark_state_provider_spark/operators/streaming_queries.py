@@ -51,6 +51,7 @@ N_BATCHES = 2
     FROM events
     GROUP BY 1, 2
     """,
+    families=("streaming", "bench"),
 )
 def q21s_stream_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming windowed agg, RocksDB-backed state, 2 micro-batches."""
@@ -79,6 +80,7 @@ def q21s_stream_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q20s_stream_dedup",
     oracle="SELECT DISTINCT user_id, event_type FROM events",
+    families=("streaming",),
 )
 def q20s_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming dropDuplicates: keys seen in batch 1 suppress batch 2."""
@@ -108,6 +110,7 @@ def q20s_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     HAVING window_start + INTERVAL '1 hour'
            <= (SELECT max(ts) FROM events) - INTERVAL '1 hour'
     """,
+    families=("streaming",),
 )
 def q23_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked hourly counts: only watermark-closed windows are emitted."""
@@ -142,6 +145,7 @@ def q23_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY user_id
     """,
+    families=("streaming", "bench"),
 )
 def q24s_stream_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arbitrary stateful fold over RocksDB state, 2 micro-batches."""
@@ -175,6 +179,7 @@ if HAS_TWS_DEPS:
         FROM events
         GROUP BY user_id
         """,
+        families=(),
     )
     def q24t_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         """UserStatistics fold via transformWithStateInPandas (ValueState)."""
@@ -200,6 +205,7 @@ if HAS_TWS_DEPS:
         FROM events
         GROUP BY user_id
         """,
+        families=(),
     )
     def q25t_transform_native_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
         """Same fold with NATIVE store-level state TTL (ttlDurationMs) — the
@@ -279,6 +285,7 @@ _TTL_US = 3 * 24 * 3600 * 1_000_000
     FROM r JOIN keep ON keep.user_id = r.user_id AND keep.slice = r.slice
     GROUP BY r.user_id
     """,
+    families=("streaming",),
 )
 def q25s_stream_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """User-stats fold where state expires 3 days after last access."""
@@ -330,6 +337,7 @@ def q25s_stream_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM g
     WHERE session_end <= (SELECT max(ts) FROM events) - INTERVAL '1 hour'
     """,
+    families=("streaming",),
 )
 def q22s_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming session windows (30-min gap) with a 1-hour watermark."""
@@ -400,6 +408,7 @@ def build_click_purchase_join(
      AND p.ts >= c.ts
      AND p.ts <= c.ts + INTERVAL '6 hours'
     """,
+    families=("streaming",),
 )
 def q26_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two streams joined on key + event-time range (state on both sides)."""
@@ -422,6 +431,7 @@ def q26_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q20s2_stream_dedup_watermark",
     oracle="SELECT DISTINCT user_id, event_type FROM events",
+    families=("streaming",),
 )
 def q20s2_stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming dedup with watermark-bounded state (40-day delay)."""
@@ -473,6 +483,7 @@ def q20s2_stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE p.purchase_id IS NOT NULL
        OR c.c_ts + INTERVAL '6 hours' < wm.w
     """,
+    families=("streaming",),
 )
 def q26b_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-outer stream-stream join (watermarks both sides + time bound)."""
@@ -523,6 +534,7 @@ def q26b_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events JOIN customer ON user_id = c_custkey
     GROUP BY c_mktsegment, event_type
     """,
+    families=("streaming",),
 )
 def q26c_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming events enriched by the static customer dim (broadcast per
@@ -562,6 +574,7 @@ def q26c_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE ts >= time_bucket(INTERVAL '1 hour', ts - to_minutes(off_min)) + to_minutes(off_min)
     GROUP BY 1
     """,
+    families=("streaming",),
 )
 def q21s2_stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming sliding windows, RocksDB-backed state, 2 micro-batches."""
@@ -625,7 +638,11 @@ def _register_q92() -> None:
         _trigrams_persisted,
     )
 
-    @register("q92_stream_incremental_dedup", oracle=_INC_DEDUP_ORACLE)
+    @register(
+        "q92_stream_incremental_dedup",
+        oracle=_INC_DEDUP_ORACLE,
+        families=("bench",),
+    )
     def q92_stream_incremental_dedup(
         spark: SparkSession, sf_dir: str
     ) -> DataFrame:
@@ -760,6 +777,7 @@ def _register_q96() -> None:
         GROUP BY user_id, tot.n
         HAVING count(*) * {_SHH_K} > tot.n
         """,
+        families=("streaming", "bench"),
     )
     def q96_stream_heavy_hitters(
         spark: SparkSession, sf_dir: str
@@ -868,7 +886,11 @@ def _register_q97() -> None:
             }
         )
 
-    @register("q97_stream_rolling_anomaly", oracle=_ANOM_ORACLE)
+    @register(
+        "q97_stream_rolling_anomaly",
+        oracle=_ANOM_ORACLE,
+        families=("streaming", "bench"),
+    )
     def q97_stream_rolling_anomaly(
         spark: SparkSession, sf_dir: str
     ) -> DataFrame:
@@ -944,7 +966,7 @@ def _register_q103() -> None:
         _PIPE_ORACLE,
     )
 
-    @register("q103_stream_corpus_pipeline", oracle=_PIPE_ORACLE)
+    @register("q103_stream_corpus_pipeline", oracle=_PIPE_ORACLE, families=("bench",))
     def q103_stream_corpus_pipeline(
         spark: SparkSession, sf_dir: str
     ) -> DataFrame:
@@ -1087,6 +1109,7 @@ def _register_q108() -> None:
             FROM events
         ) WHERE rn <= {_LB_K}
         """,
+        families=("streaming", "bench"),
     )
     def q108_stream_leaderboard(
         spark: SparkSession, sf_dir: str
@@ -1200,6 +1223,7 @@ def _register_q114() -> None:
         FROM inc i LEFT JOIN corpus c ON i.w = c.w
         GROUP BY i.doc_id
         """,
+        families=("bench",),
     )
     def q114_stream_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         """Per incoming doc ({N_BATCHES} crawl micro-batches): the share
@@ -1300,6 +1324,7 @@ _register_q114()
                AS sum_cents
     FROM events GROUP BY event_type
     """,
+    families=("bench",),
 )
 def q155_stream_python_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Replay events as {N_BATCHES} micro-batches into the custom Python
@@ -1387,6 +1412,7 @@ _RATE_BATCHES = 3
     )
     GROUP BY v % 7
     """,
+    families=("bench",),
 )
 def q157_rate_source_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drain ≥{_RATE_BATCHES} epochs of rate-micro-batch
@@ -1491,6 +1517,7 @@ def q157_rate_source_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(count(*) AS BIGINT) AS n_changes
     FROM firstseen GROUP BY batch_id
     """,
+    families=("bench",),
 )
 def q158_state_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-batch state-delta counts of a streaming dedup, read back from
@@ -1564,6 +1591,7 @@ def q158_state_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
            TRUE AS sinks_agree
     FROM events GROUP BY event_type
     """,
+    families=("bench",),
 )
 def q160_stream_fanout_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-epoch per-type deltas fanned out to two parquet sinks from one
@@ -1675,6 +1703,7 @@ def q160_stream_fanout_consistency(spark: SparkSession, sf_dir: str) -> DataFram
     WHERE window_start + INTERVAL '1 hour' <= wmf.w
     GROUP BY window_start
     """,
+    families=("streaming", "bench"),
 )
 def q163_late_data_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly counts under a 1-hour watermark on an OUT-OF-ORDER replay:
@@ -1723,6 +1752,7 @@ def q163_late_data_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS sum_cents
     FROM events GROUP BY event_type
     """,
+    families=("bench",),
 )
 def q166_stream_restart_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Append-mode parquet sink drained twice from one checkpoint — the
@@ -1804,6 +1834,7 @@ def q166_stream_restart_exactly_once(spark: SparkSession, sf_dir: str) -> DataFr
     FROM scored WHERE rn = 1
     GROUP BY cid
     """,
+    families=("bench",),
 )
 def q170_stream_ivf_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incrementally build the IVF posting-list index from streamed
@@ -1915,6 +1946,7 @@ def q170_stream_ivf_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     HAVING window_start + INTERVAL '1 hour'
            <= (SELECT max(ts) FROM events) - INTERVAL '1 hour'
     """,
+    families=("bench",),
 )
 def q172_chained_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming dedup on (user, type, hour) feeding a watermarked hourly
@@ -1966,6 +1998,7 @@ def q172_chained_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(count(*) AS BIGINT) AS n_events
     FROM events GROUP BY event_type
     """,
+    families=("bench",),
 )
 def q175_state_export_kv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running per-type counts kept in RocksDB state, exported after the
@@ -2030,6 +2063,7 @@ def q175_state_export_kv(spark: SparkSession, sf_dir: str) -> DataFrame:
            TRUE AS modes_agree
     FROM events GROUP BY event_type
     """,
+    families=("streaming", "bench"),
 )
 def q179_stream_output_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-type running counts drained twice — complete-mode memory sink
@@ -2116,6 +2150,7 @@ _Q181_GAP_MIN = 30
     WHERE sess_id < max_sess
        OR last_event_ts + INTERVAL '{_Q181_GAP_MIN} minutes' <= wm.w
     """,
+    families=("streaming", "bench"),
 )
 def q181_session_timeout_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Timeout-closed {_Q181_GAP_MIN}-minute sessions per user, state in
@@ -2190,6 +2225,7 @@ def q181_session_timeout_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE p.p_ts < wm.w
       AND NOT EXISTS (SELECT 1 FROM m WHERE m.purchase_id = p.purchase_id)
     """,
+    families=("streaming", "bench"),
 )
 def q182_stream_stream_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full-outer click⟷purchase attribution stream: matches flow like
@@ -2281,7 +2317,7 @@ def _q184_oracle() -> str:
     """
 
 
-@register("q184_stream_merkle_maintenance", oracle=_q184_oracle())
+@register("q184_stream_merkle_maintenance", oracle=_q184_oracle(), families=("bench",))
 def q184_stream_merkle_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maintain the corpus Merkle tree incrementally over streamed
     document batches, then emit L2 nodes + root — which must equal the
@@ -2409,6 +2445,7 @@ _Q189_CAP = 15
     SELECT source, doc_id, n_chars, CAST(quota_pos AS BIGINT) AS quota_pos
     FROM r WHERE quota_pos <= {_Q189_CAP}
     """,
+    families=("bench",),
 )
 def q189_stream_domain_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-{_Q189_CAP}-per-source admission across {N_BATCHES} document
@@ -2445,7 +2482,11 @@ def q189_stream_domain_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _register_q203() -> None:
     from spark_state_provider_spark.operators.registry import get as _get
 
-    @register("q203_stream_ewma", oracle=_get("q197_ewma").oracle)
+    @register(
+        "q203_stream_ewma",
+        oracle=_get("q197_ewma").oracle,
+        families=("streaming", "bench"),
+    )
     def q203_stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
         """Per-user running EWMA across {N_BATCHES} micro-batches; final
         upserted state equals the batch fold (same oracle as q197).
@@ -2481,7 +2522,11 @@ _register_q203()
 def _register_q217() -> None:
     from spark_state_provider_spark.operators.registry import get as _get
 
-    @register("q217_stream_cusum", oracle=_get("q212_cusum_drift").oracle)
+    @register(
+        "q217_stream_cusum",
+        oracle=_get("q212_cusum_drift").oracle,
+        families=("streaming", "bench"),
+    )
     def q217_stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
         """Per-user running max-CUSUM across {N_BATCHES} micro-batches;
         final upserted state equals the batch closed form (same oracle
@@ -2525,7 +2570,7 @@ def _register_q220() -> None:
 
     oracle = _get("q218_curation_pipeline").oracle
 
-    @register("q220_stream_curation_funnel", oracle=oracle)
+    @register("q220_stream_curation_funnel", oracle=oracle, families=("bench",))
     def q220_stream_curation_funnel(
         spark: SparkSession, sf_dir: str
     ) -> DataFrame:
@@ -2791,6 +2836,7 @@ def _register_q230() -> None:
         GROUP BY doc_id, corpus_doc
         HAVING {_SUB_K} + max(run) - 1 >= {_SUB_MIN}
         """,
+        families=("multibyte", "bench"),
     )
     def q230_stream_substring_dedup(
         spark: SparkSession, sf_dir: str
@@ -2942,7 +2988,7 @@ def _register_q233() -> None:
         LEFT JOIN removed rm USING (doc_id)
         WHERE d.doc_id % {_INC_MOD} = 0
         """,
-        fuzz=("multibyte",),
+        families=("multibyte", "bench"),
     )
     def q233_stream_span_removal(
         spark: SparkSession, sf_dir: str
@@ -3088,7 +3134,7 @@ def _register_q236() -> None:
         LEFT JOIN rm USING (doc_id)
         WHERE d.doc_id % {_INC_MOD} = 0 AND d.doc_id % 97 <> 0
         """,
-        fuzz=("multibyte",),
+        families=("multibyte", "bench"),
     )
     def q236_stream_decontamination(
         spark: SparkSession, sf_dir: str
@@ -3167,7 +3213,7 @@ def _register_q241() -> None:
         # stateless per-batch gate ⇒ the stream's union over batches is
         # exactly q238's batch answer; reuse its oracle verbatim
         oracle=_REGISTRY["q238_semantic_contamination"].oracle,
-        fuzz=("embeddings", "streaming"),
+        families=("embeddings", "streaming", "bench"),
     )
     def q241_stream_semantic_decontamination(
         spark: SparkSession, sf_dir: str

@@ -58,6 +58,7 @@ def _count_sql(col: str, marker: str) -> str:
                AS chars_per_token
     FROM documents
     """,
+    families=("text", "multibyte"),
 )
 def q30_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitespace token counts + a BPE-ish (~4 chars/token) estimate."""
@@ -100,7 +101,7 @@ def _lang_id_sql() -> str:
     """
 
 
-@register("q30b_lang_id", oracle=_lang_id_sql())
+@register("q30b_lang_id", oracle=_lang_id_sql(), families=("text", "multibyte"))
 def q30b_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Marker-word language ID (deterministic argmax, alphabetic ties)."""
     d = load_table(spark, sf_dir, "documents").withColumn(
@@ -136,6 +137,7 @@ def q30b_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY n DESC, token
     LIMIT 20
     """,
+    families=("text", "multibyte", "bench"),
 )
 def q30c_token_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 corpus tokens (explode → count, map-side combined)."""
@@ -163,6 +165,7 @@ def q30c_token_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents
     GROUP BY md5(text)
     """,
+    families=("text", "multibyte"),
 )
 def q30d_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """md5 content fingerprint (the exact-dedup key at corpus scale)."""
@@ -198,7 +201,7 @@ def _quality_sql() -> str:
     """
 
 
-@register("q30e_quality", oracle=_quality_sql())
+@register("q30e_quality", oracle=_quality_sql(), families=("text", "multibyte"))
 def q30e_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heuristic document quality score from portable ratio features."""
     d = (
@@ -246,6 +249,7 @@ _TOKEN_RE = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]"
                AS BIGINT) AS n_distinct_tokens
     FROM documents
     """,
+    families=("text", "multibyte"),
 )
 def q30f_regex_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc token counts under a BPE-style pre-tokenizer regex —
@@ -327,6 +331,7 @@ _BM25_SCORE = " + ".join(_bm25_term_sql(f"tf{i}") for i in range(len(BM25_TERMS)
         SELECT *, row_number() OVER (ORDER BY score DESC, doc_id) AS rn FROM s
     ) WHERE rn <= {_BM25_TOP}
     """,
+    families=("text", "multibyte", "bench"),
 )
 def q49_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 top-{_BM25_TOP} for a fixed disjunctive (any-term) keyword
@@ -398,6 +403,7 @@ def q49_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT agg.token, agg.total_tf, pst.df, pst.postings
     FROM agg JOIN pst USING (token)
     """,
+    families=("text", "multibyte", "bench"),
 )
 def q51_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Posting lists per token (sorted doc_ids), document frequency, and
@@ -470,6 +476,7 @@ _FH_DIM = 16
     FROM vec v JOIN nrm n ON n.doc_id = v.doc_id
     WHERE n.l2 > 0
     """,
+    families=("bench",),
 )
 def q86_feature_hash_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Signed feature-hash embedding: token → (md5-nibble bucket of
@@ -543,6 +550,7 @@ def q86_feature_hash_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM tri t JOIN df USING (tg)
     GROUP BY t.doc_id
     """,
+    families=("text", "multibyte", "bench"),
 )
 def q87_rare_ngram_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document share of word trigrams that occur in NO other document.
@@ -619,6 +627,7 @@ def _register_q119() -> None:
             FROM scored
         ) WHERE rn <= {_BPE_TOP}
         """,
+        families=("text", "multibyte", "bench"),
     )
     def q119_bpe_merge_candidates(
         spark: SparkSession, sf_dir: str
@@ -693,6 +702,7 @@ _register_q119()
     FROM cleaned
     GROUP BY lang
     """,
+    families=("text", "multibyte", "bench"),
 )
 def q123_text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Normalize text (lower → strip non-[a-z0-9 ] → collapse runs of
@@ -775,6 +785,7 @@ def q123_text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
                / NULLIF(CAST(sum(c) * (sum(c) - 1) AS DOUBLE), 0) AS simpson
     FROM tf GROUP BY lang, source
     """,
+    families=("text", "multibyte", "bench"),
 )
 def q154_corpus_simpson_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Simpson collision probability per (lang, source) corpus slice —
@@ -844,6 +855,7 @@ def q154_corpus_simpson_diversity(spark: SparkSession, sf_dir: str) -> DataFrame
     FROM coc
     WINDOW w AS (PARTITION BY lang ORDER BY r)
     """,
+    families=("text", "multibyte", "bench"),
 )
 def q164_good_turing_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language N_r table with the Good-Turing adjusted count r*.
@@ -930,6 +942,7 @@ _COLLOC_TOP = 30
     ORDER BY lift DESC, b.w1, b.w2
     LIMIT {_COLLOC_TOP}
     """,
+    families=("text", "multibyte", "bench"),
 )
 def q171_collocation_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-{_COLLOC_TOP} adjacent-pair collocations by lift (support ≥
@@ -1059,6 +1072,7 @@ def _chartri_counts_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM tri d JOIN model m USING (tri) CROSS JOIN tot t
     GROUP BY d.doc_id, t.total
     """,
+    families=("text", "multibyte", "bench"),
 )
 def q188_char_trigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document average corpus-frequency of its character trigrams
@@ -1134,6 +1148,7 @@ def q188_char_trigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum(cost) AS DOUBLE) / count(*) AS fertility
     FROM costed GROUP BY source
     """,
+    families=("text", "multibyte", "bench"),
 )
 def q192_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source tokenizer fertility under a ≥0.1%-frequency vocabulary
@@ -1207,7 +1222,11 @@ def _langid_confusion_sql() -> str:
     """
 
 
-@register("q198_langid_confusion", oracle=_langid_confusion_sql())
+@register(
+    "q198_langid_confusion",
+    oracle=_langid_confusion_sql(),
+    families=("text", "multibyte", "bench"),
+)
 def q198_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """labeled-lang × predicted-lang confusion cells with per-label
     shares — the audit that prices `lang` before anyone trains on it.
@@ -1287,6 +1306,7 @@ _REP_N = 5  # span length in words
            CAST(count(*) AS DOUBLE) / sum(c) AS distinct_ratio
     FROM per_gram GROUP BY doc_id
     """,
+    families=("text", "multibyte", "bench"),
 )
 def q210_self_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document {_REP_N}-gram repetition profile: occurrence count,
@@ -1380,7 +1400,11 @@ def _q211_sql() -> str:
     """
 
 
-@register("q211_profile_lang_id", oracle=_q211_sql())
+@register(
+    "q211_profile_lang_id",
+    oracle=_q211_sql(),
+    families=("text", "multibyte", "bench"),
+)
 def q211_profile_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Char-trigram profile language ID: per-language top-{_PROFILE_TOP}
     profiles, integer coverage scores per document, deterministic argmax.
@@ -1483,6 +1507,7 @@ _PROX_A, _PROX_B, _PROX_WIN = "spark", "join", 5
               list_min(list_transform(pb, b -> abs(a - b)))))
           <= {_PROX_WIN}
     """,
+    families=("text", "multibyte", "bench"),
 )
 def q215_proximity_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Docs where '{_PROX_A}' and '{_PROX_B}' occur within
@@ -1611,7 +1636,11 @@ def _gopher_rules_sql() -> str:
     """
 
 
-@register("q222_gopher_rules", oracle=_gopher_rules_sql())
+@register(
+    "q222_gopher_rules",
+    oracle=_gopher_rules_sql(),
+    families=("text", "multibyte", "bench"),
+)
 def q222_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source pass rates for the five-gate Gopher rule battery
     (word count, mean word length, symbol ratio, stopword presence,
@@ -1782,6 +1811,7 @@ _DUCK_COS_225 = (
         FROM fused
     ) WHERE rn <= {_RRF_DEPTH}
     """,
+    families=("bench",),
 )
 def q225_hybrid_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid search: RRF-fuse the BM25 top-{_RRF_DEPTH} (q49's fixed
@@ -1926,6 +1956,7 @@ _MAXP_TOP = 20
         FROM best
     ) WHERE rn <= {_MAXP_TOP}
     """,
+    families=("bench",),
 )
 def q229_maxp_chunk_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MaxP top-{_MAXP_TOP}: rank documents by their best-scoring

@@ -57,6 +57,7 @@ _RESAMPLE_USERS = 50  # bound output size: users < this id
     FROM spine s
     LEFT JOIN hourly h ON s.user_id = h.user_id AND s.hr = h.hr
     """,
+    families=("events", "bench"),
 )
 def q55_resample_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly per-user resample with explicit empty buckets and
@@ -139,6 +140,7 @@ _FUNNEL_STEPS = ("view", "click", "purchase")
     LEFT JOIN s2 ON s1.user_id = s2.user_id
     LEFT JOIN s3 ON s2.user_id = s3.user_id
     """,
+    families=("events", "nulljoin", "bench"),
 )
 def q57_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user ordered funnel {" → ".join(_FUNNEL_STEPS)}: first completion
@@ -212,6 +214,7 @@ _RANGE_SECS = 3600
         RANGE BETWEEN {_RANGE_SECS - 1} PRECEDING AND CURRENT ROW
     )
     """,
+    families=("events", "bench"),
 )
 def q58_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trailing {_RANGE_SECS}s moving count/sum per user at every event.
@@ -283,6 +286,7 @@ _HOURS = 24
         ) AS rn FROM s
     ) WHERE rn <= {_SIM_TOP_K}
     """,
+    families=("events", "nulljoin", "bench"),
 )
 def q60_user_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-{_SIM_TOP_K} behaviorally-similar users per query user, by
@@ -358,6 +362,7 @@ def q60_user_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
              / CAST(sum(n) OVER (PARTITION BY prev_type) AS DOUBLE) AS p
     FROM c
     """,
+    families=("events", "nulljoin", "bench"),
 )
 def q61_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Event-type transition matrix: bigram counts and per-source
@@ -428,6 +433,7 @@ def q61_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS retention
     FROM m JOIN sizes s ON m.cohort_week = s.cohort_week
     """,
+    families=("events", "nulljoin", "bench"),
 )
 def q62_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weekly cohort retention matrix: for each signup-week cohort, the
@@ -497,7 +503,7 @@ def _rollup_oracle() -> str:
     return " UNION ALL ".join(parts)
 
 
-@register("q88_rollup_hierarchy", oracle=_rollup_oracle())
+@register("q88_rollup_hierarchy", oracle=_rollup_oracle(), families=("events", "bench"))
 def q88_rollup_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hour/day/month rollup pyramid built bottom-up from hourly partials.
 
@@ -594,7 +600,7 @@ _ANOM_ORACLE = f"""
     """
 
 
-@register("q94_rolling_anomaly", oracle=_ANOM_ORACLE)
+@register("q94_rolling_anomaly", oracle=_ANOM_ORACLE, families=("events", "bench"))
 def q94_rolling_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Events whose value is > 3 trailing-window std-devs from the
     trailing-{_ANOM_WINDOW}-event mean for that user (integer-exact test).
@@ -677,6 +683,7 @@ def q94_rolling_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM s
     WHERE n * sxx - sx * sx <> 0
     """,
+    families=("events", "bench"),
 )
 def q107_trend_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Least-squares value trend per user (cents/hour since first event),
@@ -735,6 +742,7 @@ def q107_trend_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY 1
     """,
+    families=("events", "bench"),
 )
 def q144_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily distinct users from UNIONED hourly sketches, certified
@@ -808,6 +816,7 @@ def q144_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
            max(CASE WHEN rn_d = 1 THEN value END) AS close
     FROM r GROUP BY event_type, bucket
     """,
+    families=("events", "bench"),
 )
 def q156_ohlc_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """15-minute OHLC bars per event_type.
@@ -857,6 +866,7 @@ def q156_ohlc_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY user_id
     """,
+    families=("events", "bench"),
 )
 def q197_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Final α=1/2 EWMA of `value` per user over the (ts, event_id) total
@@ -922,6 +932,7 @@ def q197_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM w WHERE dur_us IS NOT NULL
     GROUP BY user_id
     """,
+    families=("events", "bench"),
 )
 def q207_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user time-weighted average of `value` (holding-duration
@@ -990,6 +1001,7 @@ _CUSUM_K_CENTS = 6000  # drift target: 60.00 (above the ~49.6 global mean)
            max(pref - low) >= 100000 AS drift_alarm
     FROM p GROUP BY user_id
     """,
+    families=("events", "bench"),
 )
 def q212_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user maximum upper-CUSUM of `value` against a

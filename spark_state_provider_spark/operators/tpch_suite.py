@@ -56,6 +56,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             AND n2.n_regionkey = r2.r_regionkey AND r2.r_name = 'EUROPE')
     ORDER BY s_acctbal DESC, n_name, s_name, p_partkey LIMIT 100
     """,
+    families=("tpch", "bench"),
 )
 def q73_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q2 (minimum-cost supplier): correlated min subquery,
@@ -123,6 +124,7 @@ def q73_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM val
     WHERE value * 600 > (SELECT sum(value) FROM val)
     """,
+    families=("tpch", "bench"),
 )
 def q73b_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q11 (important stock): per-part value with a HAVING-style
@@ -169,6 +171,7 @@ def q73b_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
                             WHERE s_acctbal < 0)
     GROUP BY p_brand, p_type, p_size
     """,
+    families=("tpch", "nulljoin", "bench"),
 )
 def q73c_tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q16 (parts/supplier relationship): distinct pair derivation,
@@ -222,6 +225,7 @@ def q73c_tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
         WHERE qty > 50)
       AND s_nationkey = n_nationkey AND n_name = 'NATION_5'
     """,
+    families=("tpch", "bench"),
 )
 def q73d_tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q20 (potential part promotion): nested IN subqueries — parts
@@ -289,6 +293,7 @@ def q73d_tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
                         AND o_orderdate >= TIMESTAMP '2000-01-01')
     GROUP BY cntrycode
     """,
+    families=("tpch", "bench"),
 )
 def q73e_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q22 (global sales opportunity): scalar-average threshold +

@@ -2,24 +2,20 @@
 
 Runs a registered Spark query and its DuckDB oracle on the same sf dir and
 compares row count, column-name set, and the order-insensitive multiset of
-values (columns sorted by name — the driver's hashing contract). Floats
-compare EXACTLY (bit-for-bit), matching the driver's value-hash: a 1e-9
-tolerance here once hid a last-ulp oracle literal bug (q106) that the
+values (columns sorted by name — the driver's hashing contract). Values
+normalize and compare with ``scripts/driver_replica.py``'s ``norm``/``eq``.
+Floats compare EXACTLY (bit-for-bit), matching the driver's value-hash: a
+1e-9 tolerance here once hid a last-ulp oracle literal bug (q106) that the
 driver then caught — the local gate must be at least as strict as the
 real one.
 """
 
 from __future__ import annotations
 
-import datetime
-import math
-from decimal import Decimal
-
 import duckdb
 
+from scripts.driver_replica import eq, norm
 from spark_state_provider_spark.tables import TABLE_NAMES, table_path
-
-FLOAT_ABS_TOL = 0.0  # exact — the driver hashes values, no slack
 
 
 def duckdb_connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
@@ -31,32 +27,8 @@ def duckdb_connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
     return con
 
 
-def _norm(v):
-    if isinstance(v, Decimal):
-        return float(v)
-    if isinstance(v, datetime.datetime):
-        return v.replace(tzinfo=None).isoformat(sep=" ", timespec="microseconds")
-    if isinstance(v, datetime.date):
-        return v.isoformat()
-    return v
-
-
 def _sort_key(row):
     return tuple((x is None, str(x)) for x in row)
-
-
-def _values_equal(a, b) -> bool:
-    if a is None or b is None:
-        return a is None and b is None
-    if isinstance(a, float) or isinstance(b, float):
-        try:
-            fa, fb = float(a), float(b)
-        except (TypeError, ValueError):
-            return a == b
-        if math.isnan(fa) and math.isnan(fb):
-            return True
-        return fa == fb or abs(fa - fb) <= FLOAT_ABS_TOL
-    return a == b
 
 
 def compare_all(spark, sf_dir: str, names, max_workers: int = 12) -> list[str]:
@@ -102,7 +74,7 @@ def compare_query(spark, sf_dir: str, name: str) -> None:
     sdf = spec.fn(spark, sf_dir)
     spark_cols = sorted(sdf.columns)
     spark_rows = [
-        tuple(_norm(row[c]) for c in spark_cols) for row in sdf.collect()
+        tuple(norm(row[c]) for c in spark_cols) for row in sdf.collect()
     ]
 
     con = duckdb_connect(sf_dir)
@@ -111,7 +83,7 @@ def compare_query(spark, sf_dir: str, name: str) -> None:
     duck_rows_raw = cur.fetchall()
     order = sorted(range(len(duck_cols_raw)), key=lambda i: duck_cols_raw[i])
     duck_cols = [duck_cols_raw[i] for i in order]
-    duck_rows = [tuple(_norm(r[i]) for i in order) for r in duck_rows_raw]
+    duck_rows = [tuple(norm(r[i]) for i in order) for r in duck_rows_raw]
     con.close()
 
     assert spark_cols == duck_cols, (
@@ -125,7 +97,7 @@ def compare_query(spark, sf_dir: str, name: str) -> None:
     duck_rows.sort(key=_sort_key)
     mismatches = []
     for i, (sr, dr) in enumerate(zip(spark_rows, duck_rows)):
-        if not all(_values_equal(a, b) for a, b in zip(sr, dr)):
+        if not all(eq(a, b) for a, b in zip(sr, dr)):
             mismatches.append((i, sr, dr))
             if len(mismatches) >= 5:
                 break

@@ -1,4 +1,4 @@
-"""Standing proof gates for NEW queries (round-7 verdict #8).
+"""Standing proof gates for query membership (round-7 verdict #8).
 
 The 22 defects round 7 found all came from attacking already-green
 queries with the nine proof families (empty corpus, singleton corpus,
@@ -7,64 +7,41 @@ human remembering to extend a name list in some test file, so:
 
 * the empty-corpus and singleton-corpus sweeps already iterate
   ``registry.all_queries()`` — every registration joins automatically;
-* fuzz-family membership is declared at the registration site
-  (``register(..., fuzz=("text",))``) and the family tests extend their
-  historical name lists with ``registry.fuzz_family(...)``;
-* THIS gate makes the declaration mandatory: any query that is not in
-  the pre-round-8 ledger (no row in CORRECTNESS_r01–r07) must declare
-  ``fuzz`` — ``()`` is allowed, but only as an explicit statement that
-  no family applies, not as a default.
+* membership is declared at the registration site
+  (``register(..., families=("text", "multibyte"))``), and ``register``
+  refuses a registration without it or with an unknown key;
+* every family key has a reader: a family nobody reads would let a
+  declaring query join no test, silently.
 """
 
 from __future__ import annotations
 
-import glob
-import json
-import os
-import re
+import pathlib
 
-from spark_state_provider_spark import operators
+import pytest
+
 from spark_state_provider_spark.operators import registry
 
-operators.load_all()
-
-_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-_PREFIX_RE = re.compile(r"^(y_|z\d+_)")
+_HERE = pathlib.Path(__file__).resolve()
 
 
-def _ledger_names() -> set[str]:
-    """Canonical names with any row in a committed CORRECTNESS file —
-    the frozen pre-gate population (their family coverage lives in the
-    historical test name lists)."""
-    names: set[str] = set()
-    for path in glob.glob(os.path.join(_REPO, "CORRECTNESS_r*.json")):
-        with open(path) as f:
-            names.update(_PREFIX_RE.sub("", n) for n in json.load(f))
-    return names
+def test_every_family_key_is_read():
+    readers = [_HERE.parent.parent / "bench.py"] + [
+        p for p in _HERE.parent.glob("*.py") if p != _HERE
+    ]
+    text = "".join(p.read_text(encoding="utf-8") for p in readers)
+    unread = sorted(k for k in registry.FAMILIES if f'family("{k}")' not in text)
+    assert not unread, f"family keys no test or bench reads: {unread}"
 
 
 def test_new_queries_declare_fuzz_families():
-    legacy = _ledger_names()
-    undeclared = [
-        name
-        for name, spec in sorted(registry._REGISTRY.items())
-        if name not in legacy and spec.fuzz is None
-    ]
-    assert not undeclared, (
-        "new queries must declare fuzz-family membership at their"
-        f" @register site (fuzz=(...), or fuzz=() with a docstring"
-        f" reason): {undeclared}"
-    )
+    with pytest.raises(TypeError):
+        registry.register("q_gate_probe", oracle="SELECT 1 AS x")
 
 
 def test_declared_families_are_known():
-    known = {
-        "text", "events", "tpch", "embeddings", "streaming",
-        "nulljoin", "dates", "multibyte",
-    }
-    bad = {
-        name: spec.fuzz
-        for name, spec in registry._REGISTRY.items()
-        if spec.fuzz and not set(spec.fuzz) <= known
-    }
-    assert not bad, f"unknown fuzz family keys: {bad} (known: {known})"
+    with pytest.raises(ValueError, match="dates"):
+        registry.register(
+            "q_gate_probe", oracle="SELECT 1 AS x", families=("text", "dates")
+        )(lambda spark, sf_dir: None)
+    assert "q_gate_probe" not in registry._REGISTRY

@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 from spark_state_provider_spark import operators
 from spark_state_provider_spark.operators import registry
 from spark_state_provider_spark.plans.explain import plan_string
-from tests.oracle import compare_query
 
 operators.load_all()
 
@@ -22,10 +21,6 @@ def _df(spark, sf_dir, name):
 
 
 # -- q88 rollup hierarchy ----------------------------------------------------
-
-
-def test_q88_matches_oracle(spark, sf_dir):
-    compare_query(spark, sf_dir, "q88_rollup_hierarchy")
 
 
 def test_q88_single_raw_scan(spark, sf_dir):
@@ -52,10 +47,6 @@ def test_q88_grains_conserve_totals(spark, sf_dir):
 
 
 # -- q89 small-file compaction ----------------------------------------------
-
-
-def test_q89_matches_oracle(spark, sf_dir):
-    compare_query(spark, sf_dir, "q89_small_file_compaction")
 
 
 def test_q89_layout_and_content(spark, sf_dir):
@@ -98,10 +89,6 @@ def test_q89_layout_and_content(spark, sf_dir):
 # -- q90 composed corpus pipeline -------------------------------------------
 
 
-def test_q90_matches_oracle(spark, sf_dir):
-    compare_query(spark, sf_dir, "q90_corpus_pipeline")
-
-
 def test_q90_stage_monotonicity(spark, sf_dir):
     """Each stage only removes documents: pipeline output ≤ quality-gated
     count ≤ raw count; pack counts are exactly ceil(tokens/budget)."""
@@ -137,10 +124,6 @@ def test_q90_stage_monotonicity(spark, sf_dir):
 # -- q91 multi-probe LSH -----------------------------------------------------
 
 
-def test_q91_matches_oracle(spark, sf_dir):
-    compare_query(spark, sf_dir, "q91_multiprobe_lsh")
-
-
 def test_q91_recall_dominates_single_probe(spark, sf_dir):
     """Multi-probe candidates are a superset of q29b's, so recall vs the
     brute-force truth can only be ≥ single-probe recall."""
@@ -156,10 +139,6 @@ def test_q91_recall_dominates_single_probe(spark, sf_dir):
 
 
 # -- q92 streaming incremental dedup -----------------------------------------
-
-
-def test_q92_matches_oracle(spark, sf_dir):
-    compare_query(spark, sf_dir, "q92_stream_incremental_dedup")
 
 
 def test_q92_equals_batch_form(spark, sf_dir):
@@ -182,18 +161,10 @@ def test_q92_equals_batch_form(spark, sf_dir):
 # -- q93 runtime bloom join / q94 anomaly / q95 audit / q96 stream HH --------
 
 
-def test_q93_matches_oracle(spark, sf_dir):
-    compare_query(spark, sf_dir, "q93_runtime_bloom_join")
-
-
 def test_q93_restores_session_confs(spark, sf_dir):
     before = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     _df(spark, sf_dir, "q93_runtime_bloom_join")
     assert spark.conf.get("spark.sql.autoBroadcastJoinThreshold") == before
-
-
-def test_q94_matches_oracle(spark, sf_dir):
-    compare_query(spark, sf_dir, "q94_rolling_anomaly")
 
 
 def test_q94_flags_true_outliers(spark, sf_dir):
@@ -236,10 +207,6 @@ def test_q94_flags_true_outliers(spark, sf_dir):
     assert flagged == recomputed
 
 
-def test_q95_matches_oracle(spark, sf_dir):
-    compare_query(spark, sf_dir, "q95_data_quality_audit")
-
-
 def test_q95_only_narrow_constraint_fails(spark, sf_dir):
     rows = {r.constraint: r for r in _df(spark, sf_dir, "q95_data_quality_audit").collect()}
     assert len(rows) == 7
@@ -247,10 +214,6 @@ def test_q95_only_narrow_constraint_fails(spark, sf_dir):
     assert failing == {"orders.o_orderpriority.accepted"}
     assert rows["orders.o_orderpriority.accepted"].violations > 0
     assert all(r.violations == 0 for c, r in rows.items() if c not in failing)
-
-
-def test_q96_matches_oracle(spark, sf_dir):
-    compare_query(spark, sf_dir, "q96_stream_heavy_hitters")
 
 
 def test_q96_equals_batch_counts(spark, sf_dir):
@@ -277,10 +240,6 @@ def test_q96_equals_batch_counts(spark, sf_dir):
 # -- q97 stream anomaly / q98 join estimate / q99 drift / q100 equi-depth ----
 
 
-def test_q97_matches_oracle(spark, sf_dir):
-    compare_query(spark, sf_dir, "q97_stream_rolling_anomaly")
-
-
 def test_q97_equals_batch_form(spark, sf_dir):
     """Stateful-streaming flags equal q94's batch window computation."""
     batch = {
@@ -294,17 +253,9 @@ def test_q97_equals_batch_form(spark, sf_dir):
     assert stream == batch and len(stream) > 0
 
 
-def test_q98_matches_oracle(spark, sf_dir):
-    compare_query(spark, sf_dir, "q98_join_size_estimate")
-
-
 def test_q98_identity_holds(spark, sf_dir):
     row = _df(spark, sf_dir, "q98_join_size_estimate").collect()[0]
     assert row.matches and row.est_rows == row.actual_rows > 0
-
-
-def test_q99_matches_oracle(spark, sf_dir):
-    compare_query(spark, sf_dir, "q99_embedding_drift")
 
 
 def test_q99_full_matrix_nonnegative(spark, sf_dir):
@@ -335,22 +286,7 @@ def test_q100_depths_are_balanced(spark, sf_dir):
         assert prev.max_cents <= nxt.min_cents
 
 
-def test_q100_matches_oracle(spark, sf_dir):
-    compare_query(spark, sf_dir, "q100_equidepth_histogram")
-
-
-# -- q22s oracle upgrade / q101 negative sampling ----------------------------
-
-
-def test_q22s_matches_oracle(spark, sf_dir):
-    """Streaming session windows now carry a hard oracle: time-ordered
-    replay makes the emitted set = batch sessionization filtered by the
-    final-watermark eviction predicate (same argument as q23)."""
-    compare_query(spark, sf_dir, "q22s_stream_session_window")
-
-
-def test_q101_matches_oracle(spark, sf_dir):
-    compare_query(spark, sf_dir, "q101_negative_sampling")
+# -- q101 negative sampling --------------------------------------------------
 
 
 def test_q101_k_negatives_no_self_pairs(spark, sf_dir):
@@ -368,19 +304,7 @@ def test_q101_k_negatives_no_self_pairs(spark, sf_dir):
     assert all(ks == set(range(_NEG_K)) for ks in per_doc.values())
 
 
-def test_q26b_matches_oracle(spark, sf_dir):
-    """Left-outer stream-stream join now carries a hard oracle: the
-    null-side emission cutoff is min(max click ts, max purchase ts) − 1h
-    (the global watermark is the min over both filtered inputs), measured
-    exactly against the streamed output."""
-    compare_query(spark, sf_dir, "q26b_stream_stream_left_join")
-
-
 # -- q102 AQE skew join / q103 streaming corpus pipeline ---------------------
-
-
-def test_q102_matches_oracle(spark, sf_dir):
-    compare_query(spark, sf_dir, "q102_aqe_skew_join")
 
 
 def test_q102_skew_split_fired(spark, sf_dir):
@@ -406,10 +330,6 @@ def test_q102_restores_session_confs(spark, sf_dir):
     assert after == before
 
 
-def test_q103_matches_oracle(spark, sf_dir):
-    compare_query(spark, sf_dir, "q103_stream_corpus_pipeline")
-
-
 def test_q103_equals_batch_pipeline(spark, sf_dir):
     batch = {
         (r.source, r.split, r.n_docs, r.n_tokens, r.n_packs)
@@ -422,18 +342,7 @@ def test_q103_equals_batch_pipeline(spark, sf_dir):
     assert stream == batch and len(stream) > 0
 
 
-def test_q25s_matches_oracle(spark, sf_dir):
-    """Streaming TTL fold now carries a hard oracle: the replay schedule
-    is an equal-count quartile split, so cross-batch expiry epochs are
-    SQL-expressible (ntile(4) + gap>=TTL breaks + last-epoch fold)."""
-    compare_query(spark, sf_dir, "q25s_stream_ttl")
-
-
 # -- q104 cascade delete -----------------------------------------------------
-
-
-def test_q104_matches_oracle(spark, sf_dir):
-    compare_query(spark, sf_dir, "q104_cascade_delete")
 
 
 def test_q104_all_artifacts_clean_and_consistent(spark, sf_dir):
@@ -446,10 +355,6 @@ def test_q104_all_artifacts_clean_and_consistent(spark, sf_dir):
 
 
 # -- q105 corpus snapshot diff -----------------------------------------------
-
-
-def test_q105_matches_oracle(spark, sf_dir):
-    compare_query(spark, sf_dir, "q105_corpus_diff")
 
 
 def test_q105_all_classes_and_conservation(spark, sf_dir):
@@ -473,10 +378,6 @@ def test_q105_all_classes_and_conservation(spark, sf_dir):
 # -- q106 media similarity ---------------------------------------------------
 
 
-def test_q106_matches_oracle(spark, sf_dir):
-    compare_query(spark, sf_dir, "q106_media_similarity")
-
-
 def test_q106_topk_shape_and_no_self(spark, sf_dir):
     from spark_state_provider_spark.operators.multimodal import (
         _MEDIA_TOP_K,
@@ -493,10 +394,6 @@ def test_q106_topk_shape_and_no_self(spark, sf_dir):
 
 
 # -- q107 trend slope --------------------------------------------------------
-
-
-def test_q107_matches_oracle(spark, sf_dir):
-    compare_query(spark, sf_dir, "q107_trend_slope")
 
 
 def test_q107_slope_matches_numpy(spark, sf_dir):
@@ -528,10 +425,6 @@ def test_q107_slope_matches_numpy(spark, sf_dir):
 # -- q108 streaming leaderboard ----------------------------------------------
 
 
-def test_q108_matches_oracle(spark, sf_dir):
-    compare_query(spark, sf_dir, "q108_stream_leaderboard")
-
-
 def test_q108_state_is_bounded(spark, sf_dir):
     """The final persisted state holds at most k rows per group — the
     whole point of the monotone top-k merge."""
@@ -550,10 +443,6 @@ def test_q108_state_is_bounded(spark, sf_dir):
 # -- q109 null-skew outer join -----------------------------------------------
 
 
-def test_q109_matches_oracle(spark, sf_dir):
-    compare_query(spark, sf_dir, "q109_null_skew_outer_join")
-
-
 def test_q109_null_rows_bypass_the_join(spark, sf_dir):
     """The plan must show the split: the join's fact branch filters
     IsNotNull(k) and the null slice arrives via Union — no NULL-keyed row
@@ -570,10 +459,6 @@ def test_q109_null_rows_bypass_the_join(spark, sf_dir):
 
 
 # -- q110 BFS distances ------------------------------------------------------
-
-
-def test_q110_matches_oracle(spark, sf_dir):
-    compare_query(spark, sf_dir, "q110_bfs_distances")
 
 
 def test_q110_bfs_invariants(spark, sf_dir):

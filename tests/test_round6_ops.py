@@ -9,10 +9,6 @@ from tests.oracle import compare_query
 operators.load_all()
 
 
-def test_q218_matches_oracle(spark, sf_dir):
-    compare_query(spark, sf_dir, "q218_curation_pipeline")
-
-
 def test_q218_funnel_is_monotone_and_bites(spark, sf_dir):
     rows = (
         registry.get("q218_curation_pipeline")
@@ -35,10 +31,6 @@ def test_q218_funnel_is_monotone_and_bites(spark, sf_dir):
     assert docs[-1] > 0
     # token accounting is consistent with doc accounting at the ends
     assert toks[0] > toks[-1] > 0
-
-
-def test_q219_matches_oracle(spark, sf_dir):
-    compare_query(spark, sf_dir, "q219_ivfpq_ann")
 
 
 def test_q219_recall_against_brute_force(spark, sf_dir):

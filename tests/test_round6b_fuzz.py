@@ -74,29 +74,12 @@ def _fuzz_docs(seed: int = 42, n: int = 150):
     return pd.concat([docs, nulls], ignore_index=True)
 
 
-# Every batch query whose hot path reads `documents.text`: the fuzz corpus
-# exercises split/md5/replace-length/regex semantics across BOTH engines
-# for the whole text family at once.
-_TEXT_FAMILY = [
-    "q28_dedup_exact", "q28b_minhash_lsh", "q28c_simhash",
-    "q28c2_simhash_portable", "q28d_ngram_jaccard", "q28e_dedup_clusters",
-    "q30_text_stats", "q30b_lang_id", "q30c_token_freq", "q30d_fingerprint",
-    "q30e_quality", "q30f_regex_tokens", "q49_bm25", "q51_inverted_index",
-    "q81_boilerplate_strip", "q84_vocab_coverage", "q87_rare_ngram_ratio",
-    "q119_bpe_merge_candidates", "q122_bigram_rarity", "q123_text_normalize",
-    "q136_containment_dedup", "q154_corpus_simpson_diversity",
-    "q164_good_turing_counts", "q171_collocation_lift",
-    "q187_quality_classifier", "q188_char_trigram_lm",
-    "q192_tokenizer_fertility", "q198_langid_confusion",
-    "q206_lsh_dedup_recall", "q210_self_repetition", "q211_profile_lang_id",
-    "q213_golden_record", "q215_proximity_search", "q218_curation_pipeline",
-    "q221_dsir_importance", "q222_gopher_rules", "q224_minhash_calibration",
-] + registry.fuzz_family("text")
-
-
+# The `text` family: every batch query whose hot path reads
+# `documents.text`. The fuzz corpus exercises split/md5/replace-length/regex
+# semantics across BOTH engines for the whole family at once.
 def test_fuzz_corpus_hash_matches_oracles(spark, tmp_path):
     sf = _fixture_dir(tmp_path, _fuzz_docs())
-    failures = compare_all(spark, sf, _TEXT_FAMILY)
+    failures = compare_all(spark, sf, registry.family("text"))
     assert not failures, "\n".join(failures)
 
 
@@ -150,24 +133,12 @@ def _events_fixture_dir(tmp_path, events: pd.DataFrame) -> str:
     return str(d)
 
 
-# Batch queries whose hot path reads events: every window / session /
-# as-of / resample / sketch op that must TIE-BREAK deterministically.
-_EVENTS_FAMILY = [
-    "q55_resample_ffill", "q57_funnel", "q58_range_frame",
-    "q60_user_similarity", "q61_event_transitions", "q62_cohort_retention",
-    "q88_rollup_hierarchy", "q94_rolling_anomaly", "q107_trend_slope",
-    "q144_sketch_rollup", "q156_ohlc_downsample", "q197_ewma", "q207_twap",
-    "q212_cusum_drift", "q20_dedup_exact", "q20b_distinct",
-    "q21_tumbling_window", "q21b_sliding_window", "q22_session_window",
-    "q24_user_statistics", "q25_ttl_liveness", "q44_merge_upsert",
-    "q44b_state_as_of", "q67_incremental_agg", "q161_dynamic_gap_sessions",
-    "q204_asof_nearest", "q53_histogram", "q100_equidepth_histogram",
-] + registry.fuzz_family("events")
-
-
+# The `events` family: batch queries whose hot path reads events, every
+# window / session / as-of / resample / sketch op that must TIE-BREAK
+# deterministically.
 def test_fuzz_events_tie_storm_matches_oracles(spark, tmp_path):
     sf = _events_fixture_dir(tmp_path, _fuzz_events())
-    failures = compare_all(spark, sf, _EVENTS_FAMILY)
+    failures = compare_all(spark, sf, registry.family("events"))
     assert not failures, "\n".join(failures)
 
 
@@ -240,22 +211,9 @@ def _fuzz_tpch_dir(tmp_path, seed: int = 42) -> str:
     return str(d)
 
 
-_TPCH_FAMILY = [
-    "q01_pruned_scan", "q04_filter", "q05_broadcast_join",
-    "q06_shuffle_join", "q09_hash_agg", "q11_rollup", "q18_math",
-    "q33_tpch_q3", "q33b_tpch_q10", "q33c_tpch_q18", "q33d_tpch_q6",
-    "q33e_tpch_q14", "q34_tpch_q5", "q63_tpch_q1", "q63b_tpch_q8",
-    "q63c_tpch_q9", "q63d_tpch_q19", "q63e_tpch_q21", "q64_table_profile",
-    "q65_schema_evolution", "q66_python_stream_source", "q68_bucketed_join",
-    "q69_correlation", "q71_null_safe_join", "q73_tpch_q2",
-    "q73b_tpch_q11", "q73c_tpch_q16", "q73d_tpch_q20", "q73e_tpch_q22",
-    "q75_heavy_hitters", "q76_dynamic_partition_pruning",
-] + registry.fuzz_family("tpch")
-
-
 def test_fuzz_tpch_decimal_boundaries_match_oracles(spark, tmp_path):
     sf = _fuzz_tpch_dir(tmp_path)
-    failures = compare_all(spark, sf, _TPCH_FAMILY)
+    failures = compare_all(spark, sf, registry.family("tpch"))
     assert not failures, "\n".join(failures)
 
 
@@ -296,19 +254,9 @@ def _fuzz_embeddings_dir(tmp_path, seed: int = 42) -> str:
     return str(d)
 
 
-_EMBEDDING_FAMILY = [
-    "q29_knn_brute", "q29b_ann_lsh", "q29c_embedding_neardup",
-    "q29d_ivf_ann", "q29e_int8_quantized", "q29f_pq_ann", "q50_kmeans",
-    "q91_multiprobe_lsh", "q99_embedding_drift", "q112_semdedup",
-    "q126_maxsim_late_interaction", "q150_hamming_topk",
-    "q193_hard_negatives", "q200_ann_recall_eval", "q214_knn_label_eval",
-    "q219_ivfpq_ann", "q223_embedding_norm_qa",
-] + registry.fuzz_family("embeddings")
-
-
 def test_fuzz_embeddings_magnitudes_match_oracles(spark, tmp_path):
     sf = _fuzz_embeddings_dir(tmp_path)
-    failures = compare_all(spark, sf, _EMBEDDING_FAMILY)
+    failures = compare_all(spark, sf, registry.family("embeddings"))
     assert not failures, "\n".join(failures)
 
 
@@ -316,23 +264,9 @@ def test_fuzz_embeddings_magnitudes_match_oracles(spark, tmp_path):
 # (dedup sets, window/session state, stream-stream join buffers, EWMA/
 # CUSUM scalars) must tie-break identically to the batch oracle even
 # when 20 rows share one timestamp across a micro-batch boundary.
-_STREAMING_FAMILY = [
-    "q20s_stream_dedup", "q20s2_stream_dedup_watermark",
-    "q21s_stream_window", "q21s2_stream_sliding_window",
-    "q22s_stream_session_window", "q24s_stream_user_stats",
-    "q25s_stream_ttl", "q23_watermark", "q26_stream_stream_join",
-    "q26b_stream_stream_left_join", "q26c_stream_static_join",
-    "q96_stream_heavy_hitters", "q97_stream_rolling_anomaly",
-    "q108_stream_leaderboard", "q163_late_data_accounting",
-    "q179_stream_output_modes", "q181_session_timeout_state",
-    "q182_stream_stream_full_outer", "q203_stream_ewma",
-    "q217_stream_cusum",
-] + registry.fuzz_family("streaming")
-
-
 def test_fuzz_streaming_twins_on_tie_storm(spark, tmp_path):
     sf = _events_fixture_dir(tmp_path, _fuzz_events())
-    failures = compare_all(spark, sf, _STREAMING_FAMILY)
+    failures = compare_all(spark, sf, registry.family("streaming"))
     assert not failures, "\n".join(failures)
 
 
@@ -392,9 +326,11 @@ def _fuzz_dates_dir(tmp_path, seed: int = 42) -> str:
     return str(d)
 
 
+# The calendar fixture re-draws lineitem/orders dates, so it attacks the
+# `tpch` family.
 def test_fuzz_calendar_boundaries_match_oracles(spark, tmp_path):
     sf = _fuzz_dates_dir(tmp_path)
-    failures = compare_all(spark, sf, _TPCH_FAMILY)
+    failures = compare_all(spark, sf, registry.family("tpch"))
     assert not failures, "\n".join(failures)
 
 
@@ -450,27 +386,10 @@ def _fuzz_nulljoin_dir(tmp_path, seed: int = 42) -> str:
 # Every batch query whose hot path joins, groups, or windows on
 # orders.o_custkey / lineitem.l_suppkey / customer.c_nationkey /
 # events.user_id — the keys the fixture NULLs and skews.
-_NULLJOIN_FAMILY = [
-    "q05_broadcast_join", "q06_shuffle_join", "q06b_outer_join",
-    "q07_semi_join", "q07b_anti_join", "q08_range_join", "q08b_asof_join",
-    "q09_hash_agg", "q12_window_rank", "q14_topk",
-    "q33_tpch_q3", "q33b_tpch_q10", "q34_tpch_q5",
-    "q54_fuzzy_join", "q57_funnel", "q60_user_similarity",
-    "q61_event_transitions", "q62_cohort_retention",
-    "q71_null_safe_join", "q76_dynamic_partition_pruning",
-    "q79_salted_join", "q93_runtime_bloom_join", "q98_join_size_estimate",
-    "q102_aqe_skew_join", "q109_null_skew_outer_join",
-    "q137_cogroup_reconcile",
-    # NOT-IN / anti-join shaped probes over the poked keys (q95's
-    # FK-orphan leg diverged on first run — fixed, pinned here)
-    "q95_data_quality_audit", "q73c_tpch_q16",
-] + registry.fuzz_family("nulljoin")
-
-
 @pytest.mark.parametrize("seed", [7, 42, 1337])
 def test_fuzz_null_key_join_storm_matches_oracles(spark, tmp_path, seed):
     sf = _fuzz_nulljoin_dir(tmp_path, seed=seed)
-    failures = compare_all(spark, sf, _NULLJOIN_FAMILY)
+    failures = compare_all(spark, sf, registry.family("nulljoin"))
     assert not failures, "\n".join(failures)
 
 
@@ -545,27 +464,12 @@ def _fuzz_multibyte_docs(seed: int = 42, n: int = 120):
     return pd.concat([docs, nulls], ignore_index=True)
 
 
-# text family + the substring/span family; registry-declared members
-# (q231+, the round-8 gate) join automatically.
-_MULTIBYTE_FAMILY = sorted(
-    set(
-        _TEXT_FAMILY
-        + [
-            "q111_span_dedup",
-            "q226_substring_lcs_dedup",
-            "q230_stream_substring_dedup",
-            "q77_doc_chunking",
-            "q123_text_normalize",
-        ]
-        + registry.fuzz_family("multibyte")
-    )
-)
-
-
+# The `multibyte` family: the text family plus the substring/span and
+# chunking queries that count positions in code points.
 @pytest.mark.parametrize("seed", [7, 42, 1337])
 def test_fuzz_multibyte_matches_oracles(spark, tmp_path, seed):
     sf = _fixture_dir(tmp_path, _fuzz_multibyte_docs(seed))
-    failures = compare_all(spark, sf, _MULTIBYTE_FAMILY)
+    failures = compare_all(spark, sf, registry.family("multibyte"))
     assert not failures, (
         f"{len(failures)} multibyte divergences:\n" + "\n".join(failures)
     )

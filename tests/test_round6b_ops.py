@@ -20,10 +20,6 @@ _TABLES = (
 ).split()
 
 
-def test_q221_matches_oracle(spark, sf_dir):
-    compare_query(spark, sf_dir, "q221_dsir_importance")
-
-
 def test_q221_selection_is_target_enriched(spark, sf_dir):
     """The whole point of DSIR: the selected top-k must be ENRICHED in the
     target slice (lang='en') relative to the corpus base rate — otherwise
@@ -47,10 +43,6 @@ def test_q221_selection_is_target_enriched(spark, sf_dir):
     assert ws == sorted(ws, reverse=True)
 
 
-def test_q222_matches_oracle(spark, sf_dir):
-    compare_query(spark, sf_dir, "q222_gopher_rules")
-
-
 def test_q222_battery_accounting(spark, sf_dir):
     rows = registry.get("q222_gopher_rules").fn(spark, sf_dir).collect()
     assert rows
@@ -72,10 +64,6 @@ def test_q222_battery_accounting(spark, sf_dir):
     total_docs = sum(r.n_docs for r in rows)
     total_pass = sum(r.n_pass_all for r in rows)
     assert 0 < total_pass < total_docs
-
-
-def test_q223_matches_oracle(spark, sf_dir):
-    compare_query(spark, sf_dir, "q223_embedding_norm_qa")
 
 
 def test_q223_outlier_census_on_crafted_vectors(spark, tmp_path):
@@ -108,10 +96,6 @@ def test_q223_outlier_census_on_crafted_vectors(spark, tmp_path):
     assert r.n_low_outliers == 1
     assert r.n_high_outliers == 1
     assert r.min_norm2 < 1.0 < r.max_norm2
-
-
-def test_q224_matches_oracle(spark, sf_dir):
-    compare_query(spark, sf_dir, "q224_minhash_calibration")
 
 
 def test_q224_calibration_is_monotone_and_bounded(spark, sf_dir):

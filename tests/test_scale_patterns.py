@@ -11,13 +11,8 @@ from spark_state_provider_spark.functions.skew import salted_join, with_salt
 from spark_state_provider_spark.plans.explain import plan_string
 from spark_state_provider_spark.tables import load_table
 
-from tests.oracle import compare_query
 
 operators.load_all()
-
-
-def test_salted_agg_matches_oracle(spark, sf_dir):
-    compare_query(spark, sf_dir, "q32_salted_agg")
 
 
 def test_salt_is_deterministic_and_bounded(spark, sf_dir):

@@ -18,24 +18,6 @@ from spark_state_provider_spark.streaming.sources import stream_events
 from spark_state_provider_spark.streaming.state_timeout import state_timeout
 from spark_state_provider_spark.tables import load_table
 
-from tests.oracle import compare_query
-
-
-def test_stream_dedup_matches_batch(spark, sf_dir):
-    compare_query(spark, sf_dir, "q20s_stream_dedup")
-
-
-def test_stream_window_matches_batch(spark, sf_dir):
-    compare_query(spark, sf_dir, "q21s_stream_window")
-
-
-def test_stream_user_stats_matches_batch(spark, sf_dir):
-    compare_query(spark, sf_dir, "q24s_stream_user_stats")
-
-
-def test_stream_stream_join_matches_batch(spark, sf_dir):
-    compare_query(spark, sf_dir, "q26_stream_stream_join")
-
 
 def test_watermark_emits_only_closed_windows(spark, sf_dir):
     out = registry.get("q23_watermark").fn(spark, sf_dir)
