@@ -15,13 +15,14 @@ Usage: python scripts/dtype_audit.py [--sf DIR] [name ...]
 from __future__ import annotations
 
 import datetime
+import os
 import sys
 import time
 
 import duckdb
 from pyspark.sql import SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from scripts.driver_replica import TABLES  # noqa: E402
 

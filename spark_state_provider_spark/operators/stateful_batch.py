@@ -195,19 +195,23 @@ def q22_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+# the streaming twins whose final state is this fold share it
+USER_STATS_ORACLE = """
+SELECT user_id,
+       count(*) AS total_visits,
+       min(event_id) AS first_event_id,
+       max(event_id) AS last_event_id,
+       count(DISTINCT event_type) AS n_event_types,
+       min(ts) AS first_ts,
+       max(ts) AS last_ts
+FROM events
+GROUP BY user_id
+"""
+
+
 @register(
     "q24_user_statistics",
-    oracle="""
-    SELECT user_id,
-           count(*) AS total_visits,
-           min(event_id) AS first_event_id,
-           max(event_id) AS last_event_id,
-           count(DISTINCT event_type) AS n_event_types,
-           min(ts) AS first_ts,
-           max(ts) AS last_ts
-    FROM events
-    GROUP BY user_id
-    """,
+    oracle=USER_STATS_ORACLE,
     families=("events", "bench"),
 )
 def q24_user_statistics(spark: SparkSession, sf_dir: str) -> DataFrame:

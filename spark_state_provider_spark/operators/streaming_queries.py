@@ -21,15 +21,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_state_provider_spark.operators.registry import register
+from spark_state_provider_spark.operators.stateful_batch import USER_STATS_ORACLE
 from spark_state_provider_spark.scratch import corpus_tag
 from spark_state_provider_spark.streaming.harness import (
     batch_subdir,
     drain,
     run_to_memory,
-    run_upsert_table,
+    run_to_state,
 )
 from spark_state_provider_spark.streaming.sources import stream_events
-from spark_state_provider_spark.streaming.stateful import user_statistics_stream
+from spark_state_provider_spark.streaming.stateful import (
+    user_statistics_from_state,
+    user_statistics_stream,
+)
 
 N_BATCHES = 2
 
@@ -126,32 +130,22 @@ def q23_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Q24 streaming — the reference's flagship: mapGroupsWithState user-stats
-# fold (RedistateTest.scala:29-31) as applyInPandasWithState. Update-mode
-# output upserted per key ⇒ the final row per user equals the batch fold ⇒
-# same oracle as q24_user_statistics.
+# fold (RedistateTest.scala:29-31) as applyInPandasWithState. The result is
+# read from the committed state store: each user's final state is the batch
+# fold ⇒ same oracle as q24_user_statistics.
 # ---------------------------------------------------------------------------
 
 
 @register(
     "q24s_stream_user_stats",
-    oracle="""
-    SELECT user_id,
-           count(*) AS total_visits,
-           min(event_id) AS first_event_id,
-           max(event_id) AS last_event_id,
-           count(DISTINCT event_type) AS n_event_types,
-           min(ts) AS first_ts,
-           max(ts) AS last_ts
-    FROM events
-    GROUP BY user_id
-    """,
+    oracle=USER_STATS_ORACLE,
     families=("streaming", "bench"),
 )
 def q24s_stream_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arbitrary stateful fold over RocksDB state, 2 micro-batches."""
     ev = stream_events(spark, sf_dir, N_BATCHES)
     out = user_statistics_stream(ev)
-    return run_upsert_table(out, ["user_id"])
+    return run_to_state(out, user_statistics_from_state)
 
 
 from spark_state_provider_spark.streaming.processor import HAS_TWS_DEPS
@@ -160,6 +154,16 @@ if HAS_TWS_DEPS:
     # transformWithStateInPandas needs protobuf for its state-server
     # protocol; register these only where the dependency exists (the
     # applyInPandasWithState path above covers the semantics regardless).
+
+    def _final_rows(out: DataFrame, name: str) -> DataFrame:
+        """Each user's emitted row with the largest total_visits: nothing
+        evicts in these runs (q25t's TTL is 1 h), so that row is final."""
+        rows = run_to_memory(out, name, "update")
+        cols = [c for c in rows.columns if c != "user_id"]
+        return rows.groupBy("user_id").agg(
+            F.max_by(F.struct(*cols), "total_visits").alias("r")
+        ).select("user_id", "r.*")
+
     # ---------------------------------------------------------------------------
     # Q24t — same fold through the Spark 4 transformWithStateInPandas API
     # (StatefulProcessor + ValueState). Same oracle as the batch twin.
@@ -168,17 +172,7 @@ if HAS_TWS_DEPS:
 
     @register(
         "q24t_transform_with_state",
-        oracle="""
-        SELECT user_id,
-               count(*) AS total_visits,
-               min(event_id) AS first_event_id,
-               max(event_id) AS last_event_id,
-               count(DISTINCT event_type) AS n_event_types,
-               min(ts) AS first_ts,
-               max(ts) AS last_ts
-        FROM events
-        GROUP BY user_id
-        """,
+        oracle=USER_STATS_ORACLE,
         families=(),
     )
     def q24t_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -189,22 +183,12 @@ if HAS_TWS_DEPS:
 
         ev = stream_events(spark, sf_dir, N_BATCHES)
         out = user_statistics_transform(ev)
-        return run_upsert_table(out, ["user_id"])
+        return _final_rows(out, "mem_q24t")
 
 
     @register(
         "q25t_transform_native_ttl",
-        oracle="""
-        SELECT user_id,
-               count(*) AS total_visits,
-               min(event_id) AS first_event_id,
-               max(event_id) AS last_event_id,
-               count(DISTINCT event_type) AS n_event_types,
-               min(ts) AS first_ts,
-               max(ts) AS last_ts
-        FROM events
-        GROUP BY user_id
-        """,
+        oracle=USER_STATS_ORACLE,
         families=(),
     )
     def q25t_transform_native_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -220,7 +204,7 @@ if HAS_TWS_DEPS:
 
         ev = stream_events(spark, sf_dir, N_BATCHES)
         out = user_statistics_transform(ev, ttl_ms=3600 * 1000)
-        return run_upsert_table(out, ["user_id"])
+        return _final_rows(out, "mem_q25t")
 
 
 # ---------------------------------------------------------------------------
@@ -231,7 +215,7 @@ if HAS_TWS_DEPS:
 # as ntile(4) (the testdata row counts divide evenly) — so the oracle can
 # SIMULATE the batch schedule: per (user, slice) horizons, a break wherever
 # the gap between consecutive present slices reaches the TTL, and the
-# emitted upsert row = the fold of the LAST epoch's events. What was a
+# committed state = the fold of the LAST epoch's events. What was a
 # rows-only check is now a hard hash check of real cross-batch TTL expiry.
 # ---------------------------------------------------------------------------
 
@@ -291,7 +275,7 @@ def q25s_stream_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """User-stats fold where state expires 3 days after last access."""
     ev = stream_events(spark, sf_dir, 4)
     out = user_statistics_stream(ev, ttl_secs=3 * 24 * 3600)
-    return run_upsert_table(out, ["user_id"])
+    return run_to_state(out, user_statistics_from_state)
 
 
 # ---------------------------------------------------------------------------
@@ -838,30 +822,16 @@ def _register_q97() -> None:
     def handler(key, pdfs, state):
         import pandas as pd
 
+        from spark_state_provider_spark.streaming.stateful import _whole_batch
+
         prev = list(state.get[0]) if state.exists else []
         out_ids, out_cents, out_n = [], [], []
-        # applyInPandasWithState delivers a group's micro-batch rows as
-        # multiple Arrow chunks in arbitrary post-shuffle order — sorting
-        # each chunk independently would let window state leak across the
-        # chunk boundary out of (secs, event_id) order. Materialize the
-        # whole group (bounded: one user's slice of one micro-batch) and
-        # sort ONCE before folding state. The common case is one chunk
-        # per group — skip the concat copy there.
-        chunks = [c for c in pdfs if len(c)]
-        if not chunks:  # NoTimeout ⇒ unreachable; kept for robustness
-            state.update((prev,))
-            yield pd.DataFrame(
-                {
-                    c: pd.Series([], dtype="int64")
-                    for c in ("event_id", "user_id", "cents", "n")
-                }
-            )
-            return
-        pdf = (
-            chunks[0]
-            if len(chunks) == 1
-            else pd.concat(chunks, ignore_index=True)
-        )
+        # sort the whole group ONCE: sorting each Arrow chunk on its own
+        # would let window state leak across a chunk boundary out of
+        # (secs, event_id) order
+        pdf = _whole_batch(pdfs)
+        if pdf is None:  # NoTimeout ⇒ unreachable; kept for robustness
+            pdf = pd.DataFrame({"secs": [], "event_id": [], "cents": []})
         pdf = pdf.sort_values(["secs", "event_id"])
         for eid, cents in zip(pdf["event_id"], pdf["cents"]):
             win = prev + [int(cents)]
@@ -898,13 +868,6 @@ def _register_q97() -> None:
         {N_BATCHES} micro-batches of RocksDB window state."""
         from pyspark.sql.streaming.state import GroupStateTimeout
 
-        [out_dir] = _fresh_run_dirs("q97", sf_dir, "out")
-
-        def sink(batch_df: DataFrame, batch_id: int) -> None:
-            batch_df.write.mode("overwrite").parquet(
-                batch_subdir(out_dir, batch_id)
-            )
-
         ev = stream_events(spark, sf_dir, N_BATCHES).select(
             "event_id",
             "user_id",
@@ -920,18 +883,7 @@ def _register_q97() -> None:
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
-        drain(
-            flagged.writeStream.queryName("q97")
-            .foreachBatch(sink)
-            .outputMode("update")
-        )
-        return _pinned(
-            spark.read.schema(
-                "event_id bigint, user_id bigint, cents bigint, n bigint"
-            )
-            .option("recursiveFileLookup", "true")
-            .parquet(out_dir)
-        )
+        return run_to_memory(flagged, "mem_q97", "update")
 
 
 _register_q97()
@@ -2044,13 +1996,13 @@ def q175_state_export_kv(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # q179 — output-mode equivalence: the SAME aggregation drained in COMPLETE
-# mode (sink holds the full result every batch) and in UPDATE mode (sink
-# receives changed keys only; latest row per key wins) must converge to
-# identical final values. This is the sink-contract certification for
-# migrating between serving topologies (complete → small dashboards;
-# update → keyed upsert stores): the mode changes WHAT crosses the sink
-# per batch, never the final state. The verdict rows carry both sides'
-# values plus the equality flag, all under the batch oracle.
+# mode (sink holds the full result every batch) and in UPDATE mode (changed
+# keys only; the answer is read back from the state store). It certifies
+# that update-mode committed state equals the complete-mode sink — the
+# contract for migrating between serving topologies (complete → small
+# dashboards; update → keyed stores): the mode changes WHAT crosses the
+# sink per batch, never the final state. The verdict rows carry both
+# sides' values plus the equality flag, all under the batch oracle.
 # ---------------------------------------------------------------------------
 
 
@@ -2067,7 +2019,7 @@ def q175_state_export_kv(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q179_stream_output_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-type running counts drained twice — complete-mode memory sink
-    vs update-mode latest-row-per-key upsert — then joined and compared.
+    vs update-mode committed state — then joined and compared.
 
     Two passes over the replay by design (that is the thing being
     certified); each pass is the ordinary one-shuffle streaming
@@ -2082,7 +2034,14 @@ def q179_stream_output_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev_u = stream_events(spark, sf_dir, N_BATCHES)
     agg_u = ev_u.groupBy("event_type").agg(F.count("*").alias("n"))
-    update = run_upsert_table(agg_u, ["event_type"], state_parts=4)
+    update = run_to_state(
+        agg_u,
+        lambda st: st.select(
+            F.col("key.event_type").alias("event_type"),
+            F.col("value.count").alias("n"),
+        ),
+        state_parts=4,
+    )
 
     c = complete.select("event_type", F.col("n").alias("n_complete"))
     u = update.select(
@@ -2488,8 +2447,8 @@ def _register_q203() -> None:
         families=("streaming", "bench"),
     )
     def q203_stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Per-user running EWMA across {N_BATCHES} micro-batches; final
-        upserted state equals the batch fold (same oracle as q197).
+        """Per-user running EWMA across {N_BATCHES} micro-batches; the
+        committed state equals the batch fold (same oracle as q197).
 
         Per-batch cost: the batch's rows + one (double, long) state row
         per touched key — at 100 TB the state is |users|·16 bytes no
@@ -2501,7 +2460,14 @@ def _register_q203() -> None:
         # content; bench pre-builds the shared slice dir)
         ev = stream_events(spark, sf_dir, N_BATCHES)
         out = ewma_stream(ev.select("user_id", "ts", "event_id", "value"))
-        return run_upsert_table(out, ["user_id"])
+        return run_to_state(
+            out,
+            lambda st: st.select(
+                F.col("key.user_id").alias("user_id"),
+                F.col("value.groupState.n").alias("n_events"),
+                "value.groupState.ewma",
+            ),
+        )
 
 
 _register_q203()
@@ -2529,7 +2495,7 @@ def _register_q217() -> None:
     )
     def q217_stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
         """Per-user running max-CUSUM across {N_BATCHES} micro-batches;
-        final upserted state equals the batch closed form (same oracle
+        the committed state equals the batch closed form (same oracle
         as q212). State per key: four integers, however long the
         history."""
         from spark_state_provider_spark.operators.timeseries import (
@@ -2541,12 +2507,22 @@ def _register_q217() -> None:
 
         # reuses the q24s/q203 pre-materialized time-ordered slices
         ev = stream_events(spark, sf_dir, N_BATCHES)
+        alarm_cents = 100000
         out = cusum_stream(
             ev.select("user_id", "ts", "event_id", "value"),
             _CUSUM_K_CENTS,
-            100000,
+            alarm_cents,
         )
-        return run_upsert_table(out, ["user_id"])
+        peak = F.col("value.groupState.peak")
+        return run_to_state(
+            out,
+            lambda st: st.select(
+                F.col("key.user_id").alias("user_id"),
+                F.col("value.groupState.n").alias("n_events"),
+                peak.alias("max_cusum_cents"),
+                (peak >= alarm_cents).alias("drift_alarm"),
+            ),
+        )
 
 
 _register_q217()

@@ -35,7 +35,7 @@ _BASE_CACHE: str | None = None
 
 def scratch_base() -> str:
     """Root directory for all ssps scratch (replay slices, streaming
-    checkpoints, sink staging, upsert tables).
+    checkpoints, sink staging, state read back after a run).
 
     Everything written here is EPHEMERAL by construction (pid-scoped,
     swept on exit) — durability is never required, so the fastest

@@ -6,15 +6,14 @@ deterministic verification mode). It owns the run's settings (the state
 partitions and the RocksDB state store, set only while the query starts),
 the checkpoint, the timeout and the failure contract: a failed stream
 re-raises its own exception, an unfinished one raises ``TimeoutError``; a
-truncated result never comes back silently. Two sinks are built on it:
+truncated result never comes back silently. Two result readers are
+built on it:
 
 * :func:`run_to_memory` — the memory sink, the reference's own test sink
   (RedistateTest.scala:33-38);
-* :func:`run_upsert_table` — a merge-on-read keyed sink for update-mode
-  stateful operators: each micro-batch writes its rows, tagged with the
-  batch id, to its own subdirectory, and the latest row per key is
-  resolved once, at read time. Per-batch cost follows the batch, not the
-  keys already written.
+* :func:`run_to_state` — no sink copy at all for folds whose answer is
+  their state: the stream drains into ``noop`` and the result is read
+  from the committed state store (the reference's ``latestIterator``).
 """
 
 from __future__ import annotations
@@ -23,18 +22,17 @@ import os
 import shutil
 import tempfile
 import threading
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
-from pyspark.sql.types import LongType, StructField, StructType
-from pyspark.sql.window import Window
 
 from spark_state_provider_spark.scratch import scratch_dir
 from spark_state_provider_spark.session import (
     ROCKSDB_PROVIDER,
     STATE_STORE_PROVIDER_CONF,
 )
+from spark_state_provider_spark.streaming.state_reader import read_state
 
 # How long any AvailableNow run may take before it counts as hung.
 DRAIN_SECS = 180
@@ -158,42 +156,28 @@ def run_to_memory(
     return spark.table(name)
 
 
-def run_upsert_table(
-    sdf: DataFrame, key_cols: list[str], state_parts: int | None = None
+def run_to_state(
+    sdf: DataFrame,
+    project: Callable[[DataFrame], DataFrame],
+    state_parts: int | None = None,
 ) -> DataFrame:
-    """Drain an update-mode stream and return, per key, the rows of the
-    LAST micro-batch that emitted that key (lazy DataFrame).
+    """Drain an update-mode stateful stream into the ``noop`` sink and
+    return ``project`` applied to its committed state (lazy DataFrame).
 
-    Merge-on-read: each micro-batch writes its rows plus ``batch_id`` to
-    :func:`batch_subdir` under one root; the returned frame reads every
-    batch and keeps each key's newest ``batch_id``. Update-mode stateful
-    operators emit one row per CHANGED key per batch, so that is the
-    latest row per key.
+    ``project`` maps the :func:`read_state` rows (``key`` and ``value``
+    structs) to the answer's columns. The result is the LIVE state: a key
+    whose state the handler removed is absent, whatever it emitted before.
+    When no micro-batch committed (an empty source) the result is empty,
+    with ``sdf``'s schema.
     """
     spark = sdf.sparkSession
-    # the root nests under the pid-scoped scratch dir: the result reads it
-    # lazily (cannot delete here), but the parent is removed at process
-    # exit and stale copies from dead pids are swept
-    root = tempfile.mkdtemp(prefix="run_", dir=scratch_dir("upsert", wipe=False))
-
-    def append(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.withColumn("batch_id", F.lit(batch_id).cast("long")).write.mode(
-            "overwrite"
-        ).parquet(batch_subdir(root, batch_id))
-
+    # the checkpoint nests under the pid-scoped scratch dir: the result
+    # reads it lazily (cannot delete here), but the parent is removed at
+    # process exit and stale copies from dead pids are swept
+    ckpt = tempfile.mkdtemp(prefix="ckpt_", dir=scratch_dir("state", wipe=False))
     drain(
-        sdf.writeStream.foreachBatch(append).outputMode("update"),
-        state_parts=state_parts,
+        sdf.writeStream.format("noop").outputMode("update"), ckpt, state_parts
     )
-    if not os.listdir(root):  # zero micro-batches: empty result, same schema
-        return spark.createDataFrame([], schema=sdf.schema)
-    schema = StructType([*sdf.schema.fields, StructField("batch_id", LongType())])
-    newest = F.max("batch_id").over(Window.partitionBy(*key_cols))
-    return (
-        spark.read.schema(schema)
-        .option("recursiveFileLookup", "true")
-        .parquet(root)
-        .withColumn("_newest", newest)
-        .where(F.col("batch_id") == F.col("_newest"))
-        .drop("batch_id", "_newest")
-    )
+    if not os.listdir(os.path.join(ckpt, "commits")):
+        return spark.createDataFrame([], sdf.schema)
+    return project(read_state(spark, ckpt))

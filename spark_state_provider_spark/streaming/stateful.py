@@ -77,6 +77,22 @@ def _emit(user_id, st) -> pd.DataFrame:
     )
 
 
+def user_statistics_from_state(state: DataFrame) -> DataFrame:
+    """The Spark twin of :func:`_emit`: UserStatistics rows projected from
+    the fold's committed state (``harness.run_to_state``), one per live
+    user, in :func:`user_statistics_stream`'s columns."""
+    st = "value.groupState."
+    return state.select(
+        F.col("key.user_id").alias("user_id"),
+        F.col(st + "total").alias("total_visits"),
+        F.col(st + "first_id").alias("first_event_id"),
+        F.col(st + "last_id").alias("last_event_id"),
+        F.size(st + "types").cast("long").alias("n_event_types"),
+        F.timestamp_micros(F.col(st + "first_ts_us")).alias("first_ts"),
+        F.timestamp_micros(F.col(st + "last_ts_us")).alias("last_ts"),
+    )
+
+
 def _whole_batch(pdfs: Iterator[pd.DataFrame]) -> pd.DataFrame | None:
     """A group's micro-batch as one frame, or None when it has no rows:
     Arrow cuts a group into chunks at arbitrary ~10k-row boundaries in

@@ -6,10 +6,11 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from spark_state_provider_spark.sources.connectors import stream_rate
-from spark_state_provider_spark.streaming.harness import run_upsert_table
+from spark_state_provider_spark.streaming.harness import run_to_state
 from spark_state_provider_spark.streaming.sources import stream_events
 from spark_state_provider_spark.streaming.state_timeout import state_timeout
 from spark_state_provider_spark.streaming.stateful import (
+    user_statistics_from_state,
     user_statistics_stream_for_query,
 )
 from spark_state_provider_spark.tables import load_table
@@ -54,7 +55,7 @@ def test_conf_driven_ttl_resolves_through_state_timeout(spark, sf_dir, tmp_path)
     )
     # now that the conf is set, build the real fold for that query name
     out = user_statistics_stream_for_query(ev, "ep3_query")
-    rows = run_upsert_table(out, ["user_id"]).collect()
+    rows = run_to_state(out, user_statistics_from_state).collect()
     batch = {
         r["user_id"]: r["n"]
         for r in load_table(spark, sf_dir, "events")
@@ -73,7 +74,7 @@ def test_conf_driven_ttl_resolves_through_state_timeout(spark, sf_dir, tmp_path)
     out2 = user_statistics_stream_for_query(
         stream_events(spark, sf_dir, 2), "ep3_query"
     )
-    rows2 = run_upsert_table(out2, ["user_id"]).collect()
+    rows2 = run_to_state(out2, user_statistics_from_state).collect()
     assert {r["user_id"]: r["total_visits"] for r in rows2} == batch
 
 

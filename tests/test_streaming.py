@@ -277,6 +277,58 @@ def test_drain_surfaces_stream_failure(spark, sf_dir):
     assert spark.streams.active == []
 
 
+def test_run_to_state_returns_live_state_and_keeps_checkpoint(spark, tmp_path):
+    """The result is the committed state after the last batch: running
+    totals of the live keys, none for a key whose handler removed its
+    state, and a lazy frame that still reads after the next run."""
+    import os
+
+    import pandas as pd
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    src = tmp_path / "src"
+    src.mkdir()
+    batches = [{"a": 1, "b": 2, "c": 3}, {"a": 10, "b": -1}]
+    for i, rows in enumerate(batches):
+        path = src / f"b{i}.parquet"
+        pd.DataFrame({"k": list(rows), "v": list(rows.values())}).to_parquet(path)
+        os.utime(path, (1000 + i, 1000 + i))  # replay order = batch order
+
+    def fold(key, pdfs, state):
+        v = pd.concat(pdfs)["v"]
+        if (v < 0).any():
+            state.remove()
+        else:
+            state.update(((state.get[0] if state.exists else 0) + int(v.sum()),))
+        yield pd.DataFrame({"k": [key[0]], "total": [int(v.sum())]})
+
+    def run():
+        sdf = (
+            spark.readStream.schema("k string, v long")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(src))
+            .groupBy("k")
+            .applyInPandasWithState(
+                fold,
+                outputStructType="k string, total long",
+                stateStructType="total long",
+                outputMode="update",
+                timeoutConf=GroupStateTimeout.NoTimeout,
+            )
+        )
+        return harness.run_to_state(
+            sdf,
+            lambda st: st.select(
+                F.col("key.k").alias("k"), F.col("value.groupState.total")
+            ),
+            state_parts=2,
+        )
+
+    first = run()
+    run()
+    assert sorted(map(tuple, first.collect())) == [("a", 11), ("c", 3)]
+
+
 def test_drain_is_the_only_streaming_run_path():
     """Every AvailableNow run goes through ``harness.drain``: no other module
     of the package waits on a streaming query itself, and none but the

@@ -15,7 +15,7 @@ pytestmark = pytest.mark.skipif(
 )
 
 from spark_state_provider_spark import operators
-from spark_state_provider_spark.streaming.harness import run_upsert_table
+from spark_state_provider_spark.streaming.harness import run_to_memory
 from spark_state_provider_spark.streaming.processor import user_statistics_transform
 from spark_state_provider_spark.streaming.sources import stream_events
 from spark_state_provider_spark.tables import load_table
@@ -39,7 +39,7 @@ def test_timer_eviction_fires_between_batches(spark, sf_dir):
     events in both batches restart their fold, and tombstone rows appear."""
     ev = stream_events(spark, sf_dir, 2)
     out = user_statistics_transform(ev, evict_after_ms=0)
-    rows = run_upsert_table(out, ["user_id", "total_visits"]).collect()
+    rows = run_to_memory(out, "mem_tws_evict", "update").collect()
 
     tombstones = [r for r in rows if r["total_visits"] == -1]
     assert tombstones, "expected timer-eviction tombstones"
