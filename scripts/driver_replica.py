@@ -18,7 +18,8 @@ from decimal import Decimal
 import duckdb
 from pyspark.sql import SparkSession
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 TABLES = (
@@ -47,18 +48,24 @@ def eq(a, b):
     return a == b
 
 
-def main() -> int:
-    # Deliberately plain session — the driver won't use our tuned builder.
-    # Env overrides turn this into the adversarial-geometry determinism
-    # sweep (e.g. SSPS_REPLICA_MASTER=local[3] SSPS_REPLICA_SHUFFLE=7
-    # SSPS_REPLICA_AQE=false): results must be identical under ANY
-    # parallelism/partitioning, or an operator is order-dependent.
+def plain_session(app_name: str = "driver-replica") -> SparkSession:
+    """Deliberately plain session — the driver won't use our tuned builder.
+
+    Besides the UI switch it sets only the Python workers' path (the
+    checkout), so a handler that pickles a package function runs from any
+    working directory. Env overrides turn this into the adversarial-geometry
+    determinism sweep (e.g. SSPS_REPLICA_MASTER=local[3]
+    SSPS_REPLICA_SHUFFLE=7 SSPS_REPLICA_AQE=false): results must be
+    identical under ANY parallelism/partitioning, or an operator is
+    order-dependent.
+    """
     builder = (
         SparkSession.builder.master(
             os.environ.get("SSPS_REPLICA_MASTER", "local[8]")
         )
-        .appName("driver-replica")
+        .appName(app_name)
         .config("spark.ui.enabled", "false")
+        .config("spark.executorEnv.PYTHONPATH", ROOT)
     )
     if os.environ.get("SSPS_REPLICA_SHUFFLE"):
         builder = builder.config(
@@ -68,7 +75,11 @@ def main() -> int:
         builder = builder.config(
             "spark.sql.adaptive.enabled", os.environ["SSPS_REPLICA_AQE"]
         )
-    spark = builder.getOrCreate()
+    return builder.getOrCreate()
+
+
+def main() -> int:
+    spark = plain_session()
     import __spark_entry__ as e
 
     t0 = time.time()

@@ -20,11 +20,10 @@ import sys
 import time
 
 import duckdb
-from pyspark.sql import SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from scripts.driver_replica import TABLES  # noqa: E402
+from scripts.driver_replica import TABLES, plain_session  # noqa: E402
 
 
 def main() -> int:
@@ -41,13 +40,7 @@ def main() -> int:
     operators.load_all()
     names = args or [n for n in registry.all_queries() if n in registry.all_oracles()]
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("dtype-audit")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.shuffle.partitions", "8")
-        .getOrCreate()
-    )
+    spark = plain_session("dtype-audit")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

@@ -16,17 +16,18 @@ t2 gate.
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_state_provider_spark.operators.registry import register
 from spark_state_provider_spark.operators.stateful_batch import USER_STATS_ORACLE
-from spark_state_provider_spark.scratch import corpus_tag
+from spark_state_provider_spark.scratch import corpus_tag, scratch_dir
 from spark_state_provider_spark.streaming.harness import (
-    batch_subdir,
     drain,
     run_to_memory,
+    run_to_parquet,
     run_to_state,
 )
 from spark_state_provider_spark.streaming.sources import stream_events
@@ -585,33 +586,6 @@ def q21s2_stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _fresh_run_dirs(tag: str, sf_dir: str, *names: str) -> list[str]:
-    """Deterministic per-(pid, sf) scratch dirs for a streaming run,
-    WIPED at invocation start: the returned DataFrame reads the output
-    lazily (so the dir cannot be deleted on exit), but reusing one
-    deterministic path per process bounds the /tmp footprint to a single
-    copy per query instead of one mkdtemp per invocation (bench runs each
-    query three times; the q66 ADVICE lesson, applied here). Exit-time
-    cleanup of this process's dirs + a one-time sweep of dead-pid dirs
-    live in :mod:`spark_state_provider_spark.scratch`."""
-    from spark_state_provider_spark.scratch import scratch_dir
-
-    base = corpus_tag(sf_dir)
-    return [scratch_dir(f"{tag}_{n}_{base}") for n in names]
-
-
-def _pinned(df: DataFrame) -> DataFrame:
-    """Detach a streaming-run result from the scratch files it reads.
-
-    ``_fresh_run_dirs`` wipes the deterministic per-pid dir at the START of
-    the next invocation, so a caller still holding the PREVIOUS invocation's
-    lazy result would read vanished files. The results here are verdict- /
-    rollup-sized (hundreds of rows), so an eager ``localCheckpoint``
-    materializes them into block storage and the scratch dir can be wiped
-    safely under them."""
-    return df.localCheckpoint(eager=True)
-
-
 def _register_q92() -> None:
     from spark_state_provider_spark.operators.dedup import (
         _INC_DEDUP_ORACLE,
@@ -668,9 +642,7 @@ def _register_q92() -> None:
             _Q92_INDEX_CACHE, spark, (sf_dir,), build_index
         )
 
-        [out_dir] = _fresh_run_dirs("q92", sf_dir, "out")
-
-        def probe(batch_df: DataFrame, batch_id: int) -> None:
+        def probe(batch_df: DataFrame, emit) -> None:
             btri = _trigrams_of(batch_df.select("doc_id", "text"))
             bsets = btri.groupBy("doc_id").agg(
                 F.sort_array(F.collect_set("tri")).alias("set_a"),
@@ -712,20 +684,13 @@ def _register_q92() -> None:
                 .where(F.col("jaccard") >= JACCARD_THRESHOLD)
                 .select("id_new", "id_corpus", "jaccard")
             )
-            verified.write.mode("overwrite").parquet(
-                batch_subdir(out_dir, batch_id)
-            )
+            emit(verified)
 
-        docs = stream_docs(
-            spark, sf_dir, N_BATCHES, mod=_INC_MOD
-        )
-        drain(docs.writeStream.queryName("q92").foreachBatch(probe))
-        return _pinned(
-            spark.read.schema(
-                "id_new bigint, id_corpus bigint, jaccard double"
-            )
-            .option("recursiveFileLookup", "true")
-            .parquet(out_dir)
+        return run_to_parquet(
+            stream_docs(spark, sf_dir, N_BATCHES, mod=_INC_MOD),
+            "q92",
+            "id_new bigint, id_corpus bigint, jaccard double",
+            probe,
         )
 
 
@@ -768,34 +733,22 @@ def _register_q96() -> None:
     ) -> DataFrame:
         """Users holding > 1/{_SHH_K} of all event traffic, maintained
         across {N_BATCHES} micro-batches of partial counts."""
-        [partials_dir] = _fresh_run_dirs("q96", sf_dir, "partials")
-
-        def fold(batch_df: DataFrame, batch_id: int) -> None:
-            (
-                batch_df.groupBy("user_id")
-                .agg(F.count("*").alias("n"))
-                .write.mode("overwrite")
-                .parquet(batch_subdir(partials_dir, batch_id))
-            )
-
-        ev = stream_events(spark, sf_dir, N_BATCHES)
-        drain(ev.writeStream.queryName("q96").foreachBatch(fold))
-        partials = (
-            spark.read.schema("user_id bigint, n bigint")
-            .option("recursiveFileLookup", "true")
-            .parquet(partials_dir)
+        partials = run_to_parquet(
+            stream_events(spark, sf_dir, N_BATCHES),
+            "q96",
+            "user_id bigint, n bigint",
+            lambda batch_df, emit: emit(
+                batch_df.groupBy("user_id").agg(F.count("*").alias("n"))
+            ),
         )
         counts = partials.groupBy("user_id").agg(
             F.sum("n").alias("n_events")
         )
         total = partials.agg(F.sum("n").alias("total"))
-        return _pinned(
-            counts.join(
-                F.broadcast(total),
-                F.col("n_events") * _SHH_K > F.col("total"),
-            )
-            .select("user_id", "n_events")
-        )
+        return counts.join(
+            F.broadcast(total),
+            F.col("n_events") * _SHH_K > F.col("total"),
+        ).select("user_id", "n_events")
 
 
 _register_q96()
@@ -937,7 +890,9 @@ def _register_q103() -> None:
         )
         bench_tri.count()  # the static benchmark index, built once
 
-        seen_dir, part_dir = _fresh_run_dirs("q103", sf_dir, "seen", "parts")
+        seen_dir = tempfile.mkdtemp(
+            prefix="q103_seen_", dir=scratch_dir("memck", wipe=False)
+        )
 
         first_char = F.substring(
             F.md5(F.col("doc_id").cast("string")), 1, 1
@@ -948,7 +903,7 @@ def _register_q103() -> None:
             .otherwise("test")
         )
 
-        def step(batch_df: DataFrame, batch_id: int) -> None:
+        def step(batch_df: DataFrame, emit) -> None:
             q = batch_df.where(
                 (F.length("text") >= _PIPE_MIN_CHARS)
                 & (F.size(F.split("text", " ")) >= _PIPE_MIN_TOKS)
@@ -990,14 +945,11 @@ def _register_q103() -> None:
                 .distinct()
             )
             clean = s.join(F.broadcast(contam), "doc_id", "left_anti")
-            (
-                clean.groupBy("source", "split")
-                .agg(
+            emit(
+                clean.groupBy("source", "split").agg(
                     F.count("*").alias("n_docs"),
                     F.sum("est_tokens").alias("n_tokens"),
                 )
-                .write.mode("overwrite")
-                .parquet(batch_subdir(part_dir, batch_id))
             )
             # extend the seen-set only after every consumer of this
             # batch's snapshot has run
@@ -1006,24 +958,19 @@ def _register_q103() -> None:
             s.select("h").write.mode("append").parquet(seen_dir)
             s.unpersist()
 
-        docs = stream_docs(spark, sf_dir, N_BATCHES)
-        drain(docs.writeStream.queryName("q103").foreachBatch(step))
-        bench_tri.unpersist()
-        partials = (
-            spark.read.schema(
-                "source string, split string, n_docs bigint, n_tokens bigint"
-            )
-            .option("recursiveFileLookup", "true")
-            .parquet(part_dir)
+        partials = run_to_parquet(
+            stream_docs(spark, sf_dir, N_BATCHES),
+            "q103",
+            "source string, split string, n_docs bigint, n_tokens bigint",
+            step,
         )
-        return _pinned(
-            partials.groupBy("source", "split").agg(
-                F.sum("n_docs").alias("n_docs"),
-                F.sum("n_tokens").alias("n_tokens"),
-                F.ceil(F.sum("n_tokens") / float(PACK_BUDGET))
-                .cast("long")
-                .alias("n_packs"),
-            )
+        bench_tri.unpersist()
+        return partials.groupBy("source", "split").agg(
+            F.sum("n_docs").alias("n_docs"),
+            F.sum("n_tokens").alias("n_tokens"),
+            F.ceil(F.sum("n_tokens") / float(PACK_BUDGET))
+            .cast("long")
+            .alias("n_packs"),
         )
 
 
@@ -1072,7 +1019,9 @@ def _register_q108() -> None:
 
         from pyspark.sql.window import Window
 
-        [state_root] = _fresh_run_dirs("q108", sf_dir, "state")
+        state_root = tempfile.mkdtemp(
+            prefix="q108_", dir=scratch_dir("memck", wipe=False)
+        )
         latest: dict[str, str | None] = {"path": None}
 
         def topk(df: DataFrame) -> DataFrame:
@@ -1107,14 +1056,12 @@ def _register_q108() -> None:
         w = Window.partitionBy("event_type").orderBy(
             F.col("value").desc(), "event_id"
         )
-        return _pinned(
-            final.select(
-                "event_type",
-                "event_id",
-                "user_id",
-                F.col("value").cast("double").alias("value"),
-            ).withColumn("rn", F.row_number().over(w).cast("long"))
-        )
+        return final.select(
+            "event_type",
+            "event_id",
+            "user_id",
+            F.col("value").cast("double").alias("value"),
+        ).withColumn("rn", F.row_number().over(w).cast("long"))
 
 
 _register_q108()
@@ -1215,9 +1162,7 @@ def _register_q114() -> None:
             _Q114_INDEX_CACHE, spark, (sf_dir,), build_index
         ).withColumn("hit", F.lit(1))
 
-        [out_dir] = _fresh_run_dirs("q114", sf_dir, "out")
-
-        def probe(batch_df: DataFrame, batch_id: int) -> None:
+        def probe(batch_df: DataFrame, emit) -> None:
             wins = _spans_of(batch_df.select("doc_id", "text"))
             rolled = (
                 wins.join(idx, "w", "left_outer")
@@ -1234,21 +1179,14 @@ def _register_q114() -> None:
                     / F.col("n_windows").cast("double"),
                 )
             )
-            rolled.write.mode("overwrite").parquet(
-                batch_subdir(out_dir, batch_id)
-            )
+            emit(rolled)
 
-        docs = stream_docs(
-            spark, sf_dir, N_BATCHES, mod=_INC_MOD
-        )
-        drain(docs.writeStream.queryName("q114").foreachBatch(probe))
-        return _pinned(
-            spark.read.schema(
-                "doc_id bigint, n_windows bigint, hit_windows bigint, "
-                "hit_frac double"
-            )
-            .option("recursiveFileLookup", "true")
-            .parquet(out_dir)
+        return run_to_parquet(
+            stream_docs(spark, sf_dir, N_BATCHES, mod=_INC_MOD),
+            "q114",
+            "doc_id bigint, n_windows bigint, hit_windows bigint, "
+            "hit_frac double",
+            probe,
         )
 
 
@@ -2595,9 +2533,11 @@ def _register_q220() -> None:
         )
         labels = _clusters_persisted(spark, sf_dir)
 
-        seen_dir, part_dir = _fresh_run_dirs("q220", sf_dir, "seen", "parts")
+        seen_dir = tempfile.mkdtemp(
+            prefix="q220_seen_", dir=scratch_dir("memck", wipe=False)
+        )
 
-        def step(batch_df: DataFrame, batch_id: int) -> None:
+        def step(batch_df: DataFrame, emit) -> None:
             flags = _curation_flags(
                 batch_df.select("doc_id", "text", "lang"),
                 model,
@@ -2645,9 +2585,7 @@ def _register_q220() -> None:
             staged = staged.withColumn("s4", s4).withColumn(
                 "s5", s5
             ).persist(StorageLevel.MEMORY_AND_DISK)
-            _funnel_stack(_funnel_counts(staged)).write.mode(
-                "overwrite"
-            ).parquet(batch_subdir(part_dir, batch_id))
+            emit(_funnel_stack(_funnel_counts(staged)))
             # clusters taken THIS batch extend the seen-set (append-mode:
             # a retried batch re-appends the same ids — harmless to the
             # distinct + anti semantics above)
@@ -2656,22 +2594,16 @@ def _register_q220() -> None:
             ).select("cluster_id").write.mode("append").parquet(seen_dir)
             staged.unpersist()
 
-        docs = stream_docs(spark, sf_dir, N_BATCHES)
-        drain(docs.writeStream.queryName("q220").foreachBatch(step))
-        model.unpersist()
-        partials = (
-            spark.read.schema(
-                "stage int, stage_name string,"
-                " n_docs bigint, n_tokens bigint"
-            )
-            .option("recursiveFileLookup", "true")
-            .parquet(part_dir)
+        partials = run_to_parquet(
+            stream_docs(spark, sf_dir, N_BATCHES),
+            "q220",
+            "stage int, stage_name string, n_docs bigint, n_tokens bigint",
+            step,
         )
-        return _pinned(
-            partials.groupBy("stage", "stage_name").agg(
-                F.sum("n_docs").cast("bigint").alias("n_docs"),
-                F.sum("n_tokens").cast("bigint").alias("n_tokens"),
-            )
+        model.unpersist()
+        return partials.groupBy("stage", "stage_name").agg(
+            F.sum("n_docs").cast("bigint").alias("n_docs"),
+            F.sum("n_tokens").cast("bigint").alias("n_tokens"),
         )
 
 
@@ -2836,9 +2768,7 @@ def _register_q230() -> None:
 
         idx = _corpus_anchor_index(spark, sf_dir)
 
-        [out_dir] = _fresh_run_dirs("q230", sf_dir, "out")
-
-        def probe(batch_df: DataFrame, batch_id: int) -> None:
+        def probe(batch_df: DataFrame, emit) -> None:
             from pyspark.sql.window import Window
 
             b = _substr_anchors(batch_df.select("doc_id", "text"))
@@ -2871,20 +2801,13 @@ def _register_q230() -> None:
                 )
                 .where(F.col("lcs_len") >= _SUB_MIN)
             )
-            out.write.mode("overwrite").parquet(
-                batch_subdir(out_dir, batch_id)
-            )
+            emit(out)
 
-        docs = stream_docs(
-            spark, sf_dir, N_BATCHES, mod=_INC_MOD
-        )
-        drain(docs.writeStream.queryName("q230").foreachBatch(probe))
-        return _pinned(
-            spark.read.schema(
-                "doc_id bigint, corpus_doc bigint, lcs_len bigint"
-            )
-            .option("recursiveFileLookup", "true")
-            .parquet(out_dir)
+        return run_to_parquet(
+            stream_docs(spark, sf_dir, N_BATCHES, mod=_INC_MOD),
+            "q230",
+            "doc_id bigint, corpus_doc bigint, lcs_len bigint",
+            probe,
         )
 
 
@@ -2987,9 +2910,7 @@ def _register_q233() -> None:
 
         idx = _corpus_anchor_index(spark, sf_dir)
 
-        [out_dir] = _fresh_run_dirs("q233", sf_dir, "out")
-
-        def rewrite(batch_df: DataFrame, batch_id: int) -> None:
+        def rewrite(batch_df: DataFrame, emit) -> None:
             from pyspark.sql.window import Window
 
             b = _substr_anchors(batch_df.select("doc_id", "text"))
@@ -3022,22 +2943,18 @@ def _register_q233() -> None:
                     - F.lit(1)
                 ).alias("e"),
             )
-            out = _rewrite_with_intervals(
-                batch_df.select("doc_id", "text"),
-                _merged_removal_intervals(spans),
-            )
-            out.write.mode("overwrite").parquet(
-                batch_subdir(out_dir, batch_id)
+            emit(
+                _rewrite_with_intervals(
+                    batch_df.select("doc_id", "text"),
+                    _merged_removal_intervals(spans),
+                )
             )
 
-        docs = stream_docs(spark, sf_dir, N_BATCHES, mod=_INC_MOD)
-        drain(docs.writeStream.queryName("q233").foreachBatch(rewrite))
-        return _pinned(
-            spark.read.schema(
-                "doc_id bigint, cleaned_text string, removed_chars bigint"
-            )
-            .option("recursiveFileLookup", "true")
-            .parquet(out_dir)
+        return run_to_parquet(
+            stream_docs(spark, sf_dir, N_BATCHES, mod=_INC_MOD),
+            "q233",
+            "doc_id bigint, cleaned_text string, removed_chars bigint",
+            rewrite,
         )
 
 
@@ -3142,24 +3059,17 @@ def _register_q236() -> None:
             )
         )
 
-        [out_dir] = _fresh_run_dirs("q236", sf_dir, "out")
-
-        def decontam(batch_df: DataFrame, batch_id: int) -> None:
+        def decontam(batch_df: DataFrame, emit) -> None:
             corpus = batch_df.where(F.col("doc_id") % 97 != 0).select(
                 "doc_id", "text"
             )
-            decontaminate(corpus, bt).write.mode("overwrite").parquet(
-                batch_subdir(out_dir, batch_id)
-            )
+            emit(decontaminate(corpus, bt))
 
-        docs = stream_docs(spark, sf_dir, N_BATCHES, mod=_INC_MOD)
-        drain(docs.writeStream.queryName("q236").foreachBatch(decontam))
-        return _pinned(
-            spark.read.schema(
-                "doc_id bigint, cleaned_text string, removed_tokens bigint"
-            )
-            .option("recursiveFileLookup", "true")
-            .parquet(out_dir)
+        return run_to_parquet(
+            stream_docs(spark, sf_dir, N_BATCHES, mod=_INC_MOD),
+            "q236",
+            "doc_id bigint, cleaned_text string, removed_tokens bigint",
+            decontam,
         )
 
 
@@ -3229,9 +3139,7 @@ def _register_q241() -> None:
         )
         bench.count()  # materialize once; every micro-batch broadcasts it
 
-        [out_dir] = _fresh_run_dirs("q241", sf_dir, "out")
-
-        def gate(batch_df: DataFrame, batch_id: int) -> None:
+        def gate(batch_df: DataFrame, emit) -> None:
             # repartition: with maxFilesPerTrigger=1 the micro-batch is ONE
             # parquet file = ONE partition, so without this every
             # (vector × benchmark) dot fold of the batch runs on a single
@@ -3275,22 +3183,17 @@ def _register_q241() -> None:
                     F.col("m.sim").alias("sim"),
                 )
             )
-            best.write.mode("overwrite").parquet(
-                batch_subdir(out_dir, batch_id)
-            )
+            emit(best)
 
         try:
-            sdf = stream_embeddings(spark, sf_dir, N_BATCHES)
-            drain(sdf.writeStream.queryName("q241").foreachBatch(gate))
+            return run_to_parquet(
+                stream_embeddings(spark, sf_dir, N_BATCHES),
+                "q241",
+                "vec_id bigint, matched_benchmark bigint, sim double",
+                gate,
+            )
         finally:
             bench.unpersist()
-        return _pinned(
-            spark.read.schema(
-                "vec_id bigint, matched_benchmark bigint, sim double"
-            )
-            .option("recursiveFileLookup", "true")
-            .parquet(out_dir)
-        )
 
 
 _register_q241()

@@ -6,14 +6,17 @@ deterministic verification mode). It owns the run's settings (the state
 partitions and the RocksDB state store, set only while the query starts),
 the checkpoint, the timeout and the failure contract: a failed stream
 re-raises its own exception, an unfinished one raises ``TimeoutError``; a
-truncated result never comes back silently. Two result readers are
+truncated result never comes back silently. Three result readers are
 built on it:
 
 * :func:`run_to_memory` — the memory sink, the reference's own test sink
   (RedistateTest.scala:33-38);
 * :func:`run_to_state` — no sink copy at all for folds whose answer is
   their state: the stream drains into ``noop`` and the result is read
-  from the committed state store (the reference's ``latestIterator``).
+  from the committed state store (the reference's ``latestIterator``);
+* :func:`run_to_parquet` — the idempotent ``foreachBatch`` sink: each
+  micro-batch's output overwrites its own parquet directory, and the
+  result reads every batch's output back.
 """
 
 from __future__ import annotations
@@ -129,7 +132,7 @@ def drain(
     return q
 
 
-def batch_subdir(root: str, batch_id: int) -> str:
+def _batch_subdir(root: str, batch_id: int) -> str:
     """Per-micro-batch output directory (no '=' — not a partition column).
 
     foreachBatch can RE-RUN a batch after a task failure; appending from
@@ -145,10 +148,7 @@ def run_to_memory(
 ) -> DataFrame:
     """Drain ``sdf`` into the memory sink ``name``; return that table."""
     spark = sdf.sparkSession
-    try:
-        spark.catalog.dropTempView(name)
-    except Exception:
-        pass
+    spark.catalog.dropTempView(name)
     drain(
         sdf.writeStream.format("memory").queryName(name).outputMode(output_mode),
         state_parts=state_parts,
@@ -181,3 +181,41 @@ def run_to_state(
     if not os.listdir(os.path.join(ckpt, "commits")):
         return spark.createDataFrame([], sdf.schema)
     return project(read_state(spark, ckpt))
+
+
+def run_to_parquet(
+    sdf: DataFrame,
+    name: str,
+    schema: str,
+    step: Callable[[DataFrame, Callable[[DataFrame], None]], None],
+) -> DataFrame:
+    """Drain ``sdf`` through ``foreachBatch`` as the query ``name`` and
+    return every batch's output, read back with ``schema`` (lazy).
+
+    ``step(batch_df, emit)`` does one micro-batch's work and calls
+    ``emit(df)`` once with that batch's output, which is written with
+    ``mode("overwrite")`` to the batch's own directory, so a re-run batch
+    replaces its output instead of adding to it. Work after ``emit`` (a
+    seen-set the next batch reads, an unpersist) runs after the write.
+    With no micro-batch (an empty source) the result is empty, with
+    ``schema``'s columns.
+    """
+    # a fresh dir per call under the pid-scoped scratch parent (as
+    # run_to_state's checkpoint): the lazy result keeps reading it, and
+    # the parent is removed at process exit
+    out = tempfile.mkdtemp(prefix="out_", dir=scratch_dir("parquet", wipe=False))
+
+    def each(batch_df: DataFrame, batch_id: int) -> None:
+        step(
+            batch_df,
+            lambda df: df.write.mode("overwrite").parquet(
+                _batch_subdir(out, batch_id)
+            ),
+        )
+
+    drain(sdf.writeStream.queryName(name).foreachBatch(each))
+    return (
+        sdf.sparkSession.read.schema(schema)
+        .option("recursiveFileLookup", "true")
+        .parquet(out)
+    )

@@ -329,10 +329,53 @@ def test_run_to_state_returns_live_state_and_keeps_checkpoint(spark, tmp_path):
     assert sorted(map(tuple, first.collect())) == [("a", 11), ("c", 3)]
 
 
+def test_run_to_parquet_unions_batches_and_orders_post_emit_work(
+    spark, sf_dir, tmp_path
+):
+    """The result is every batch's emitted frame, read back once each; work
+    after ``emit`` finishes before the next batch starts; a source with no
+    batch gives an empty frame with the schema's columns."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    side = str(tmp_path / "side")
+    os.mkdir(side)
+    written, on_entry = [], []
+
+    def step(batch_df, emit):
+        on_entry.append(set(pq.read_table(side).to_pydict().get("event_id", [])))
+        emit(batch_df.groupBy("user_id").count())
+        ids = batch_df.select("event_id")
+        ids.write.mode("append").parquet(side)
+        written.append({r[0] for r in ids.collect()})
+
+    schema = "user_id bigint, count bigint"
+    got = harness.run_to_parquet(stream_events(spark, sf_dir, 2), "rtp_two", schema, step)
+    want = load_table(spark, sf_dir, "events").groupBy("user_id").count()
+    summed = got.groupBy("user_id").agg(F.sum("count").alias("count"))
+    assert sorted(map(tuple, summed.collect())) == sorted(map(tuple, want.collect()))
+    assert len(written) == 2 and written[0] and written[1]
+    assert on_entry == [set(), written[0]]
+
+    empty_src = str(tmp_path / "empty")
+    os.mkdir(empty_src)
+    empty = harness.run_to_parquet(
+        spark.readStream.schema("user_id bigint").parquet(empty_src),
+        "rtp_empty",
+        schema,
+        lambda batch_df, emit: emit(batch_df.groupBy("user_id").count()),
+    )
+    assert empty.columns == ["user_id", "count"]
+    assert empty.collect() == []
+
+
 def test_drain_is_the_only_streaming_run_path():
     """Every AvailableNow run goes through ``harness.drain``: no other module
-    of the package waits on a streaming query itself, and none but the
-    session builder sets a run's state store or state partitions."""
+    of the package waits on a streaming query itself, none but the session
+    builder sets a run's state store or state partitions, and none but the
+    source module reads a directory tree back (a per-batch parquet sink is
+    ``harness.run_to_parquet``)."""
     import pathlib
 
     own = pathlib.Path(harness.__file__)
@@ -351,3 +394,10 @@ def test_drain_is_the_only_streaming_run_path():
         and ("STATE_STORE_PROVIDER_CONF" in text or "SSPS_STREAM_STATE_PARTS" in text)
     ]
     assert settings == []
+    sinks = [
+        name
+        for name, text in sources.items()
+        if name != "streaming/sources.py"
+        and ("batch_subdir" in text or "recursiveFileLookup" in text)
+    ]
+    assert sinks == []
